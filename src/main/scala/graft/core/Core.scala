@@ -121,48 +121,19 @@ object Runner {
   * the data. Instead: range-partition by the sort keys, sort within
   * partitions, count rows per partition (one cheap job over the cached
   * sorted data), prefix-sum the counts on the driver (numPartitions values,
-  * not rows), and add each partition's offset in a final mapPartitions.
-  * Every step is fully parallel except the O(numPartitions) prefix sum.
+  * not rows), and add each partition's offset in a final mapPartitions —
+  * `OrderedExec`'s prefix-combine over row counts. Every step is fully
+  * parallel except the O(numPartitions) prefix sum.
   */
 object Ordinals {
 
   def zipWithOrdinal[A](ds: Dataset[A], sortCols: Seq[Column],
                         numPartitions: Int = 0)
-                       (implicit enc: Encoder[Elem[A]]): Dataset[Elem[A]] = {
-    val spark = ds.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = ds
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist()
-    try {
-      val counts = sorted.rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          // Long loop, not Iterator.size: .size returns Int and wraps
-          // negative past 2^31 rows per partition — inside the design
-          // envelope at 100 TB — corrupting every downstream ordinal
-          var n = 0L
-          while (it.hasNext) { it.next(); n += 1 }
-          Iterator((i, n))
-        }
-        .collect()
-        .sortBy(_._1)
-        .map(_._2)
-      val offsets = counts.scanLeft(0L)(_ + _) // offsets(i) = rows before partition i
-      val bOffsets = spark.sparkContext.broadcast(offsets)
-      val rdd = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
-        var s = bOffsets.value(i)
-        it.map { a => val e = Elem(s, a); s += 1; e }
-      }
-      // Eagerly materialize the ordinal-stamped result (localCheckpoint)
-      // inside the try, then free the sorted intermediate in the finally
-      // — bounded cache lifecycle even when a job inside throws (the
-      // persisted full copy must never outlive a failed call).
-      Materialize.checkpoint(spark.createDataset(rdd)(enc))
-    } finally sorted.unpersist()
-  }
+                       (implicit enc: Encoder[Elem[A]]): Dataset[Elem[A]] =
+    // Long count (never Iterator.size, an Int that wraps past 2^31 rows per
+    // partition); the running count includes the row itself
+    OrderedExec.scanFold[A, Long, Elem[A]](ds, sortCols, numPartitions,
+      ds.sparkSession.createDataset(_)(enc))(0L, (n, _) => n + 1, _ + _)((a, n) => Elem(n - 1, a))
 
   /** Ordinal from an expression when the table already has a unique,
     * order-defining key (e.g. lineitem's l_orderkey*10+l_linenumber):

@@ -25,7 +25,7 @@ object Materialize {
 
   def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
     val spark = ds.sparkSession
-    if (spark.conf.getOption(ReliableKey).contains("true")) {
+    if (spark.conf.getOption(ReliableKey).exists(_.equalsIgnoreCase("true"))) {
       // misconfiguration must not silently downgrade to the non-reliable
       // path — that is the exact failure mode the flag exists to prevent
       require(spark.sparkContext.getCheckpointDir.isDefined,

@@ -28,12 +28,8 @@ final case class FoldSink[A, B, R](
 
   def apply(in: SStream[A]): R = combine match {
     case Some(c) =>
-      val parts = OrderedExec.sorted(in.ds).rdd
-        .mapPartitionsWithIndex { (i, it) =>
-          Iterator((i, it.foldLeft(zero)((b, e) => step(b, e.value))))
-        }
-        .collect().toList.sortBy(_._1).map(_._2)
-      finish(parts.foldLeft(zero)(c))
+      finish(OrderedExec.partials(in.ds)(_.foldLeft(zero)((b, e) => step(b, e.value)))
+        .foldLeft(zero)(c))
     case None =>
       finish(in.toLocalIterator.foldLeft(zero)(step))
   }
@@ -107,16 +103,11 @@ object Sinks {
     */
   def foldrCombine[A, B](zero: B)(step: (A, B) => B)(c: (B, B) => B): Sink[A, B] =
     new Sink[A, B] {
-      def apply(in: SStream[A]): B = {
-        val parts = OrderedExec.sorted(in.ds).rdd
-          .mapPartitionsWithIndex { (i, it) =>
-            // right fold needs the partition's tail first: materialize the
-            // (bounded, range-partitioned) partition and foldRight it
-            Iterator((i, it.toIndexedSeq.foldRight(zero)((e, b) => step(e.value, b))))
-          }
-          .collect().toList.sortBy(_._1).map(_._2)
-        parts.foldRight(zero)(c)
-      }
+      def apply(in: SStream[A]): B =
+        // right fold needs the partition's tail first: materialize the
+        // (bounded, range-partitioned) partition and foldRight it
+        OrderedExec.partials(in.ds)(_.toIndexedSeq.foldRight(zero)((e, b) => step(e.value, b)))
+          .foldRight(zero)(c)
     }
 
   /** fold (reference `Combinators.hs:490-492`): monoidal concat. */

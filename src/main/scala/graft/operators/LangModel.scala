@@ -44,17 +44,6 @@ import org.apache.spark.sql.functions._
   */
 object LangModel {
 
-  // TEMP instrumentation (perf round): stage timings to stderr when
-  // GRAFT_TIMING=1. Removed before round close.
-  private def timed[T](label: String)(f: => T): T =
-    if (!sys.env.get("GRAFT_TIMING").contains("1")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"TIMING $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Char-n-gram width and hashed dimensions; dim [[CountDim]] is the
     * always-present gram-count stat (it guarantees every doc owns at
     * least one sparse row), bias is dimension [[NDims]]−1.

@@ -77,7 +77,7 @@ object StreamExec {
     // rename would silently flip providers); TransformWithStateInPySpark
     // is the Python twin — this library never plans it, but matching the
     // class hierarchy keeps the check rename-proof for the node we use
-    out.sparkSession.conf.get(ForceRocksKey, "false") == "true" ||
+    out.sparkSession.conf.get(ForceRocksKey, "false").equalsIgnoreCase("true") ||
       out.queryExecution.logical.collectFirst {
         case p: org.apache.spark.sql.catalyst.plans.logical.TransformWithState => p
       }.isDefined

@@ -12,12 +12,21 @@ import org.apache.spark.sql.functions._
   */
 class MaterializeSpec extends SparkSpec {
 
-  private def withReliable[T](body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set(Materialize.ReliableKey, "true")
-    try body
-    finally {
+  /** Runs `body` with the flag set to `flag`, then asserts that reliable
+    * checkpoints were written to the checkpoint dir.
+    */
+  private def withReliable[T](flag: String)(body: => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(Materialize.ReliableKey, flag)
+    try {
+      val out = body
+      val written = java.nio.file.Files.walk(dir)
+      try assert(written.anyMatch(_.getFileName.toString.startsWith("rdd-")),
+        s"${Materialize.ReliableKey}=$flag fell back to localCheckpoint")
+      finally written.close()
+      out
+    } finally {
       spark.conf.unset(Materialize.ReliableKey)
     }
   }
@@ -32,7 +41,7 @@ class MaterializeSpec extends SparkSpec {
       (3L, "zeta eta theta iota"), (4L, "unrelated words entirely here")).toDF("doc_id", "text")
     val localPairs = Dedup.jaccardPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    withReliable {
+    for (flag <- Seq("true", "TRUE")) withReliable(flag) {
       val relScan = (Sources.fromSeq(spark, xs)
         |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + a)(_ + _)).into(Sinks.sinkList)
       assert(relScan == localScan)
