@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core._
 
 /** Manual end-to-end smoke drive of the distributed ordered-exec paths
@@ -9,12 +8,7 @@ import graft.core._
   */
 object DevSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // README flagship: sourceList [1..10] .| scan (+) 0 .| sinkList
     val src = Sources.fromSeq(spark, (1 to 10).map(_.toLong))
@@ -23,7 +17,8 @@ object DevSmoke {
     println(s"SCAN RESULT: $got")
     assert(got == List(1L, 3, 6, 10, 15, 21, 28, 36, 45, 55), s"scan mismatch: $got")
 
-    // distributed fold (combine path) over 100k elements, 8 partitions
+    // distributed fold (combine path) over 100k elements, one partition
+    // per SPARK_GRAFT_CPUS core
     val big = Sources.fromSeq(spark, (1L to 100000L))
     val sum = big.into(Sinks.foldlCombine(0L)((b: Long, a: Long) => b + a)(_ + _))
     println(s"FOLD RESULT: $sum")
@@ -80,7 +75,7 @@ object DevSmoke {
     assert(nDead > 0, "expected some dead letters")
 
     // multi-file text/binary sources: global line order across files
-    val tmp = java.nio.file.Files.createTempDirectory("graft_src")
+    val tmp = Scratch.fresh("src_")
     java.nio.file.Files.writeString(tmp.resolve("a.txt"), "l1\nl2\n")
     java.nio.file.Files.writeString(tmp.resolve("b.txt"), "l3\nl4\nl5\n")
     val lines = Sources.textLines(spark, tmp.toString).into(Sinks.sinkList)

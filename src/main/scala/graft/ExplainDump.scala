@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: the formatted physical plans of the headline queries
   * (the "is this the plan you'd want at 100 TB" audit trail).
@@ -9,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val headline = Seq("q_filter", "q_scan", "q_take", "q_zip_source",
       "q_dedup_minhash", "q_embed_lsh", "q_embed_topk", "q_embed_neardup",
       "q_event_window", "q_dedup_exact", "q_zip_with", "q_asof_join",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe: time a query at 1× and N× the given SF by unioning the
@@ -16,13 +15,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val n = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     spark.range(100000).selectExpr("sum(id)").collect() // warm
 
     // same prep + operator as q_event_session (SparkEntry.ivalCol +
@@ -285,7 +278,7 @@ object ScaleProbe {
       def staged(d: org.apache.spark.sql.DataFrame)
           : (String, org.apache.spark.sql.DataFrame) = {
         val sig = graft.operators.Similarity.withNorm(d)
-        val p = java.nio.file.Files.createTempDirectory(s"graft_probe_${label}_").toString
+        val p = graft.core.Scratch.fresh(s"probe_${label}_").toString
         stagedPaths += p
         indexRows(sig).write.mode("overwrite").partitionBy("cell").parquet(p)
         (p, sig)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.operators._
+import graft.Fixtures._
 
 /** Driver contract (SURVEY.md §7): one harness query per implemented
   * operator of SURVEY.md §2, each with an equivalent DuckDB oracle over
@@ -337,13 +338,8 @@ object SparkEntry {
         .select(col("vec_id").as("sid"), col("emb").as("s_emb"),
           col("nrm").as("s_nrm")))
     val origCb = graft.core.Materialize.checkpoint(Similarity.pqCodebook(initial))
-    val pqBase = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_ann_ingest_").toString
-    val ivfBase = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_ann_maint_").toString
-    deleteOnExit(pqBase); deleteOnExit(ivfBase)
+    val pqBase = Scratch.fresh("ann_ingest_").toString
+    val ivfBase = Scratch.fresh("ann_maint_").toString
     // v1 = the write-once serving build over the initial corpus; the
     // serve below PINS this version's path for the whole run
     Bucketing.writeVersion(s, pqBase,
@@ -418,10 +414,7 @@ object SparkEntry {
     val nInit = qualityInitCut(docs.agg(max("doc_id")).head().getLong(0) + 1L)
     val initial = graft.core.Materialize.checkpoint(
       docs.filter(col("doc_id") < nInit))
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_qmaint_").toString
-    deleteOnExit(base)
+    val base = Scratch.fresh("qmaint_").toString
     // v1 = the initial-slice model; the serve below pins THIS version
     QualityModel.maintainModel(s, base, initial, "doc_id", "text",
       QualityDriftThresholdPpm)
@@ -465,13 +458,8 @@ object SparkEntry {
     cdx.withColumn("cdx_bucket",
       pmod(hash(col("canonical")), lit(CdxBuckets)))
 
-  private[graft] def cdxIngestStream(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_cdx_ingest_").toString
-    deleteOnExit(base)
-    cdxIngestStreamAt(s, dir, base)
-  }
+  private[graft] def cdxIngestStream(s: SparkSession, dir: String): DataFrame =
+    cdxIngestStreamAt(s, dir, Scratch.fresh("cdx_ingest_").toString)
 
   /** [[cdxIngestStream]] against a caller-owned layout base — the form
     * StreamingSpec inspects (live-version stability, append ≡ rebuild).
@@ -569,49 +557,6 @@ object SparkEntry {
     packCorpus(s.read.parquet(servePath).select(col("doc_id"), col("text")))
   }
 
-  /** q_corpus_build_warc's archive re-staged as TIME-ORDERED shards
-    * (shard i = the i-th quarter of doc_ids in ascending order — crawl
-    * segments arrive in crawl order), the precondition for
-    * first-arrival dedup ≡ batch keep-min above. Page bytes are
-    * byte-identical to [[stagedWarcShards]]'s; only the split axis
-    * differs, which extraction (and therefore the shared oracle) never
-    * sees.
-    */
-  private val rangeWarcShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedRangeWarcShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(rangeWarcShardDirs, "graft_warcranged_", dir) { tmp =>
-      val rows = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      val per = math.max(1, (rows.size + Warc.NumShards - 1) / Warc.NumShards)
-      val t0 = System.currentTimeMillis()
-      rows.grouped(per).zipWithIndex.foreach { case (docs, i) =>
-        val f = tmp.resolve(f"shard-$i%02d.warc.gz")
-        java.nio.file.Files.write(f, Warc.renderShard(i, docs))
-        // the file SOURCE orders arrivals by modification time — make
-        // the crawl order explicit instead of trusting that sequential
-        // writes never land in the same clock tick (first-arrival
-        // dedup ≡ batch keep-min depends on this order)
-        java.nio.file.Files.setLastModifiedTime(f,
-          java.nio.file.attribute.FileTime.fromMillis(t0 + i * 2000L))
-      }
-    }
-
-  /** Recursive temp-layout cleanup on JVM exit (the ingest bases are
-    * per-CALL fresh — a rerun must re-ingest, not serve a cached run).
-    */
-  private def deleteOnExit(dir: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally walk.close()
-      } catch { case _: Throwable => () }))
-
   /** Shared driver-side staging of the events stream as ordered
     * Elem(seq, ival) quanta — the input of both streaming-executed
     * queries (fixture-scale by design; see StreamExec scaladoc).
@@ -646,51 +591,6 @@ object SparkEntry {
     (ev, ord)
   }
 
-  /** (dir, kind) pairs staged in THIS JVM — staging runs once per
-    * process, so repeated query invocations (bench, forceHash) reuse the
-    * file, while a fresh JVM re-stages and can never serve a stale
-    * fixture from a previous run's regenerated testdata.
-    */
-  private val stagedKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Stage `content` as a driver-side fixture file, once per JVM per
-    * (data dir, kind). The path is keyed by the sanitized full dir
-    * string PLUS its hashCode (sanitizing alone maps 'a/b' and 'a_b' to
-    * the same name), and the write is temp-file + atomic move so a
-    * concurrent run on the same dir never reads a torn file. The format
-    * SOURCES under test (text/CSV/JSONL scans) read these; the staging
-    * itself is fixture plumbing, charged once.
-    */
-  private def stageOnce(dir: String, kind: String)(content: => String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-    val path = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_${kind}_$key.txt")
-    if (stagedKeys.add(s"$kind|$dir") || !Files.exists(path)) {
-      val tmp = Files.createTempFile(path.getParent, s"graft_${kind}_$key", ".tmp")
-      Files.write(tmp, content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-    path
-  }
-
-  /** The documents table as a one-doc-per-line text file for
-    * q_text_lines. Newline-in-text would split one doc into two lines
-    * and an empty LAST doc's line would be eaten by the trailing-newline
-    * convention — sanitize newlines (mirrored in the oracle) and
-    * terminate an empty final line explicitly.
-    */
-  private def stagedTextLines(s: SparkSession, dir: String): java.nio.file.Path =
-    stageOnce(dir, "textlines") {
-      val texts = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect().map(_.getString(1).replace('\n', ' '))
-      texts.mkString("\n") +
-        (if (texts.nonEmpty && texts.last.isEmpty) "\n" else "")
-    }
-
   /** Raw character references appended VERBATIM (unencoded) to every
     * q_html_entities line: named Latin-1/punctuation forms, the
     * no-rescan pin (`&amp;#38;` must stay literal `&#38;`), a C1-remap
@@ -704,379 +604,6 @@ object SparkEntry {
   private[graft] val NcrBatteryDecoded =
     " é—…€½© &#38; –�� end"
 
-  /** The documents table as one-doc-per-line NCR-ENCODED text: every
-    * non-ASCII char of (sanitized doc text + the doc's [[Charsets]]
-    * SLOT text) becomes a numeric character reference — decimal or hex
-    * alternating by code-point parity — plus the raw
-    * [[NcrBatteryRaw]]; the q_html_entities fixture. Real multilingual
-    * pages serve exactly this shape (non-ASCII text NCR-encoded inside
-    * ASCII bytes); the oracle predicts the DECODED line from
-    * `documents` + the slot constants, so one mis-decoded reference
-    * breaks the hash.
-    */
-  private def stagedNcrLines(s: SparkSession, dir: String): java.nio.file.Path =
-    stageOnce(dir, "ncrlines") {
-      ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-        .map { r =>
-          val id = r.getLong(0)
-          val slotText = Charsets.Slots(Charsets.slotOf(id))._3
-          val payload = r.getString(1).replace('\n', ' ') + " " + slotText
-          s"$id\t" + graft.functions.HtmlEntities.ncrEncode(payload) + NcrBatteryRaw
-        }.mkString("\n")
-    }
-
-  /** The documents table wrapped as one-doc-per-line RAW HTML — the
-    * fixture for the markup-extraction queries. Each line is rendered
-    * by [[Html.wrapLine]] (the SAME template the oracle rebuilds in
-    * SQL), so the operator's regexp strip chain and DuckDB's face
-    * byte-identical input; doc_id travels INSIDE the markup
-    * (`data-doc="N"`) and is recovered by the extraction query itself,
-    * the way a crawl pipeline recovers ids from page metadata.
-    */
-  private def stagedHtml(s: SparkSession, dir: String): java.nio.file.Path =
-    stageOnce(dir, "html") {
-      ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-        .map(r => Html.wrapLine(r.getLong(0), r.getString(1)))
-        .mkString("\n")
-    }
-
-  /** The raw-HTML corpus as 4 shard FILES (one page per line, the
-    * [[stagedHtml]] rendering split by doc_id % 4) — the arrival
-    * directory for the crawl-ingest streaming query: new pages land as
-    * text shards, the stream discovers one file per micro-batch. Same
-    * per-JVM temp-dir discipline as [[stagedTextShards]].
-    */
-  private val htmlShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedHtmlShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(htmlShardDirs, "graft_htmlshards_", dir) { tmp =>
-      val rows = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      (0 until 4).foreach { i =>
-        val lines = rows.iterator
-          .filter(_.getLong(0) % 4 == i)
-          .map(r => Html.wrapLine(r.getLong(0), r.getString(1)))
-          .mkString("\n")
-        java.nio.file.Files.write(tmp.resolve(f"pages-$i%02d.txt"),
-          lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    }
-
-  /** Shared staging for the archive-shard fixtures (WARC/WET/WAT): the
-    * documents table split doc_id % NumShards into 4 shard files, each
-    * rendered by `render`. ONE definition of the split/order so the
-    * sibling formats can never diverge (the CDX oracle's per-shard
-    * position math depends on exactly this split).
-    */
-  private def stagedShards(
-      cache: java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path],
-      prefix: String, ext: String, s: SparkSession, dir: String)(
-      render: (Int, Seq[(Long, String)]) => Array[Byte]): java.nio.file.Path =
-    stagedArrivalDir(cache, prefix, dir) { tmp =>
-      val rows = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      (0 until Warc.NumShards).foreach { i =>
-        val docs = rows.iterator
-          .filter(_.getLong(0) % Warc.NumShards == i)
-          .map(r => (r.getLong(0), r.getString(1))).toSeq
-        java.nio.file.Files.write(tmp.resolve(f"shard-$i%02d.$ext%s"),
-          render(i, docs))
-      }
-    }
-
-  /** The crawl corpus as 4 `.warc.gz` shard FILES (Common Crawl
-    * layout: one gzip member per WARC record — warcinfo + per-doc
-    * request/response — page HTML rendered by the SAME
-    * [[Html.wrapLine]] template the extraction oracle rebuilds in SQL;
-    * split by doc_id % 4). The fixture for the warc front-door queries
-    * and the arrival directory for their streaming twin. Same per-JVM
-    * temp-dir discipline as [[stagedHtmlShards]].
-    */
-  private val warcShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedWarcShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(warcShardDirs, "graft_warcshards_", "warc.gz", s, dir)(
-      Warc.renderShard)
-
-  /** The CHARSET crawl archive: 4 `.warc.gz` shards whose responses
-    * rotate eight legacy encodings × four declaration channels
-    * (header / meta-only / BOM-with-lying-header / undeclared-mojibake)
-    * — the WHATWG-sniff fixture (q_charset_decode, q_charset_audit).
-    * Same discipline as [[stagedWarcShards]].
-    */
-  private val charsetShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedCharsetShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(charsetShardDirs, "graft_charsetshards_", "warc.gz", s, dir)(
-      Charsets.renderShard)
-
-  /** The REVISIT-bearing crawl archive: [[stagedWarcShards]]'s exact
-    * record stream plus one `revisit` member after each re-fetched
-    * doc's response (q_warc_revisit / q_corpus_build_revisit fixture).
-    */
-  private val revisitShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedRevisitShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(revisitShardDirs, "graft_warcrevisit_", "warc.gz", s, dir)(
-      Warc.renderRevisitShard)
-
-  /** Per-site sitemap XML files (`sitemap-site<n>.xml`, one per site
-    * index present in the corpus) — the REP discovery-channel fixture
-    * (q_sitemap_seeds). Rendered once from the documents table's
-    * fixture URLs.
-    */
-  private val sitemapDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedSitemaps(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(sitemapDirs, "graft_sitemaps_", dir) { tmp =>
-      val ids = ColOps.table(s, dir, "documents")
-        .select(col("doc_id")).orderBy(col("doc_id")).collect().map(_.getLong(0))
-      ids.groupBy(id => ((id % 150) % 23).toInt).foreach { case (n, siteIds) =>
-        java.nio.file.Files.write(tmp.resolve(s"sitemap-site$n.xml"),
-          Urls.renderSitemap(siteIds.toSeq.map(Urls.urlOf))
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    }
-
-  /** The PDF crawl archive: 4 shards of application/pdf responses
-    * (q_pdf_extract fixture). Same discipline as [[stagedWarcShards]].
-    */
-  private val pdfShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedPdfShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(pdfShardDirs, "graft_pdfshards_", "warc.gz", s, dir)(
-      Warc.renderPdfShard)
-
-  /** The CID/Type0 (CJK) PDF archive: 4 shards whose page text is the
-    * [[Charsets]] slot texts carried as 2-byte-CID hex strings behind
-    * a /ToUnicode CMap (q_pdf_cjk fixture). Same discipline as
-    * [[stagedPdfShards]].
-    */
-  private val pdfCjkShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedPdfCjkShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(pdfCjkShardDirs, "graft_pdfcjkshards_", "warc.gz", s, dir)(
-      Warc.renderPdfCjkShard)
-
-  /** The NESTED sitemap layout (q_sitemap_index fixture): per site a
-    * `sitemapindex` XML naming two GZIPPED leaf sitemaps
-    * (`leaf-site<n>-p<0|1>.xml.gz`, split by doc parity), plus one
-    * ORPHAN leaf no index references (site 0's part-0 content again) —
-    * the by-reference fetch join must exclude it or site 0's counts
-    * double.
-    */
-  private val sitemapIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedSitemapIndex(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(sitemapIndexDirs, "graft_sitemapidx_", dir) { tmp =>
-      def gz(text: String): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val g = new java.util.zip.GZIPOutputStream(bos)
-        g.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        g.close()
-        bos.toByteArray
-      }
-      val ids = ColOps.table(s, dir, "documents")
-        .select(col("doc_id")).orderBy(col("doc_id")).collect().map(_.getLong(0))
-      var orphanSource: String = null
-      ids.groupBy(id => ((id % 150) % 23).toInt).foreach { case (n, siteIds) =>
-        val parts = siteIds.groupBy(id => (id % 2).toInt)
-        parts.toSeq.sortBy(_._1).foreach { case (p, pIds) =>
-          val xml = Urls.renderSitemap(pIds.toSeq.sorted.map(Urls.urlOf))
-          java.nio.file.Files.write(tmp.resolve(s"leaf-site$n-p$p.xml.gz"), gz(xml))
-          if (n == 0 && p == 0) orphanSource = xml
-        }
-        java.nio.file.Files.write(tmp.resolve(s"index-site$n.xml"),
-          Urls.renderSitemapIndex(parts.keySet.toSeq.sorted.map(p =>
-            s"https://site$n.example/leaf-site$n-p$p.xml.gz"))
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      if (orphanSource != null)
-        java.nio.file.Files.write(
-          tmp.resolve("leaf-site0-orphan.xml.gz"), gz(orphanSource))
-    }
-
-  /** The TRUNCATED crawl archive: every Warc.TruncEvery-th doc's
-    * response payload is cut at half its wire length and marked
-    * `WARC-Truncated: length` (the Common Crawl size-limit behavior) —
-    * the q_warc_truncated / q_warc_extract_trunc fixture.
-    */
-  private val truncWarcShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedTruncatedShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(truncWarcShardDirs, "graft_warctrunc_", "warc.gz", s, dir)(
-      Warc.renderTruncatedShard)
-
-  /** Per-site robots.txt FILES (`robots-site<n>.txt`) — the text layer
-    * above the in-plan REP rule fixtures: same groups, wire realism
-    * (case/CRLF/comments/empty-Disallow/unknown fields), plus the
-    * `Sitemap:` directives naming [[stagedSitemapIndex]]'s gzipped
-    * leaves.
-    */
-  private val robotsTxtDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedRobotsTxt(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(robotsTxtDirs, "graft_robotstxt_", dir) { tmp =>
-      (0 until Robots.NumSites).foreach { n =>
-        java.nio.file.Files.write(tmp.resolve(s"robots-site$n.txt"),
-          Robots.renderRobotsTxt(n)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    }
-
-  private def robotsTxtFiles(s: SparkSession, dir: String): DataFrame =
-    s.read.option("wholetext", "true")
-      .text(stagedRobotsTxt(s, dir).toString)
-      .select(input_file_name().as("path"), col("value").as("content"))
-
-  /** The REDIRECT crawl archive: 4 shards whose doc_id ≡ 1 (mod 3)
-    * responses are 3xx captures with Location headers (q_warc_redirects
-    * fixture). Same discipline as [[stagedWarcShards]].
-    */
-  private val redirectWarcShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedRedirectShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(redirectWarcShardDirs, "graft_warcredir_", "warc.gz", s, dir)(
-      Warc.renderRedirectShard)
-
-  /** The DAMAGED crawl archive: same 4 shards, but every
-    * Warc.DamageEvery-th doc's response record carries a corrupted
-    * magic — the recovery-mode fixture (q_warc_recover). Same
-    * discipline as [[stagedWarcShards]].
-    */
-  private val damagedWarcShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedDamagedWarcShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(damagedWarcShardDirs, "graft_warcdamaged_", "warc.gz", s, dir)(
-      Warc.renderDamagedShard)
-
-  /** The corpus as 4 `.wet.gz` shard FILES (Common Crawl's
-    * extracted-text sibling: warcinfo + one `conversion` record per
-    * doc, payload = plain text). Same discipline as [[stagedWarcShards]].
-    */
-  private val wetShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedWetShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(wetShardDirs, "graft_wetshards_", "wet.gz", s, dir)(
-      Warc.renderWetShard)
-
-  /** The corpus as 4 `.wat.gz` shard FILES (Common Crawl's metadata
-    * sibling: warcinfo + one `metadata` record per doc, payload = a
-    * JSON envelope). Same discipline as [[stagedWarcShards]].
-    */
-  private val watShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedWatShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedShards(watShardDirs, "graft_watshards_", "wat.gz", s, dir)(
-      Warc.renderWatShard)
-
-  /** documents metadata as CSV with header (doc_id,lang,n_chars) — the
-    * fixture for the CSV-source query. Values are numeric or 2-letter
-    * codes: no quoting needed.
-    */
-  private def stagedCsv(s: SparkSession, dir: String): java.nio.file.Path =
-    stageOnce(dir, "csv") {
-      val rows = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id")).collect()
-        .map(r => s"${r.getLong(0)},${r.getString(1)},${r.get(2)}")
-      "doc_id,lang,n_chars\n" + rows.mkString("\n")
-    }
-
-  /** documents written as lang-partitioned parquet — the SINK under test
-    * for q_partitioned_write (the read-back proves partition pruning).
-    * Written once per JVM per dir, distributed write (no driver collect).
-    * Unlike the single-FILE fixtures above (temp-file + atomic move), a
-    * parquet DIRECTORY cannot be swapped atomically under concurrent
-    * readers, so this one is per-JVM-unique (createTempDirectory) and
-    * never shared across processes; the mapping is recorded only after
-    * the write job succeeds, so a failed write is retried into a fresh
-    * directory instead of serving a partial one.
-    */
-  private val partwriteDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedPartitionedParquet(s: SparkSession, dir: String): java.nio.file.Path =
-    partwriteDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_partwrite_")
-      ColOps.table(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.partitionBy("lang").mode("overwrite").parquet(tmp.toString)
-      tmp
-    })
-
-  /** documents metadata as an ORC directory — the fixture for the
-    * ORC-source query (same per-JVM-unique, register-after-success
-    * discipline as [[stagedPartitionedParquet]]: an ORC directory can't
-    * be atomically swapped under concurrent readers).
-    */
-  private val orcDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedOrc(s: SparkSession, dir: String): java.nio.file.Path =
-    orcDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_orc_")
-      ColOps.table(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .write.mode("overwrite").orc(tmp.toString)
-      tmp
-    })
-
-  /** documents staged as a shard DIRECTORY for the file-SOURCE streaming
-    * query: 4 text files, each line `doc_id<TAB>text` with newlines
-    * sanitized (the q_text_lines convention — mirrored in the oracle),
-    * doc_id % 4 picking the shard. This is a real ingestion directory:
-    * the streaming reader discovers the files itself (one per
-    * micro-batch via maxFilesPerTrigger), so NO driver-fed rows enter
-    * the query. Per-JVM-unique dir, registered only after a successful
-    * write (same discipline as [[stagedPartitionedParquet]]).
-    */
-  private val textShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-
-  /** Per-JVM arrival-directory staging shared by every streaming
-    * file-source fixture (text/html/media shards): one temp dir per
-    * (cache, data dir), registered in the cache only AFTER `write`
-    * completed — a failed write leaves no cache entry, so the next
-    * caller re-stages instead of streaming a torn directory. Keeps the
-    * register-after-success invariant in ONE place instead of each
-    * fixture re-implementing it.
-    */
-  private def stagedArrivalDir(
-      cache: java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path],
-      prefix: String, dir: String)(
-      write: java.nio.file.Path => Unit): java.nio.file.Path =
-    cache.computeIfAbsent(dir, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), prefix)
-      write(tmp)
-      tmp
-    })
-
-  /** The mixed-format media corpus ([[Multimodal.mixedAssets]]) staged
-    * as 4 parquet shard FILES of (asset_id, media) — the arrival
-    * directory for the multimodal file-SOURCE streaming query (new
-    * assets land as parquet batches; the stream discovers each file as
-    * its own micro-batch via maxFilesPerTrigger). Distributed write;
-    * shard count stays 4 at ANY sf, so the streaming floor doesn't
-    * scale with rows.
-    */
-  private val mediaShardDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private def stagedMediaShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(mediaShardDirs, "graft_mediashards_", dir) { tmp =>
-      Multimodal.mixedAssets(s, dir)
-        .repartition(4, pmod(col("asset_id"), lit(4)))
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
   /** The fitted quality model, once per JVM per corpus (the
     * persisted-index discipline: five quality queries CONSUME the
     * model; one training produces it — a rerun in a fresh JVM
@@ -1129,126 +656,6 @@ object SparkEntry {
   private def langModelFor(s: SparkSession, dir: String): LangModel.Fitted =
     langModels.computeIfAbsent(dir,
       _ => LangModel.fit(charsetLabeledCorpus(s, dir), "doc_id", "text", "lang"))
-
-  /** Parse one [[stagedTextShards]] line (`doc_id<TAB>text`) — the ONE
-    * definition both streaming consumers (q_file_stream,
-    * q_quality_stream) use, so the staging convention cannot be parsed
-    * two different ways (review finding).
-    */
-  private def parseStagedTextLine(lines: DataFrame): DataFrame =
-    lines.select(
-      expr("CAST(substring(value, 1, instr(value, '\t') - 1) AS BIGINT)")
-        .as("doc_id"),
-      expr("substring(value, instr(value, '\t') + 1)").as("text"))
-
-  private def stagedTextShards(s: SparkSession, dir: String): java.nio.file.Path =
-    stagedArrivalDir(textShardDirs, "graft_textshards_", dir) { tmp =>
-      val rows = ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .orderBy(col("doc_id")).collect()
-      (0 until 4).foreach { i =>
-        val lines = rows.iterator
-          .filter(_.getLong(0) % 4 == i)
-          .map(r => s"${r.getLong(0)}\t${r.getString(1).replace('\n', ' ')}")
-          .mkString("\n")
-        java.nio.file.Files.write(tmp.resolve(f"shard-$i%02d.txt"),
-          lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    }
-
-  /** events rewritten as 64 deliberately tiny parquet files, then
-    * size-targeted compacted ([[Layout.compactParquet]]) — the fixture
-    * for q_compact. The query reads the COMPACTED directory; content
-    * identity with the raw table is exactly what the oracle checks.
-    * LayoutSpec separately asserts the file count collapsed.
-    */
-  private val compactDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private[graft] def stagedCompacted(s: SparkSession, dir: String): java.nio.file.Path =
-    compactDirs.computeIfAbsent(dir, { d =>
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_compact_")
-      val small = base.resolve("small").toString
-      ColOps.table(s, d, "events")
-        .select(col("event_id"), ivalCol.as("cents"))
-        .repartition(64)
-        .write.mode("overwrite").parquet(small)
-      // quarter of the input bytes per file → ~4 compacted files
-      Layout.compactParquet(s, small, base.resolve("compacted").toString,
-        targetBytes = math.max(1L, Layout.dataBytes(s, small) / 4))
-      base
-    })
-
-  /** documents range-laid-out by n_chars ([[Layout.rangeLayout]]): 8
-    * parquet files with disjoint n_chars ranges — the fixture for
-    * q_range_layout (content identity under a range predicate; the
-    * disjointness itself is LayoutSpec's assertion).
-    */
-  private val rangeDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private[graft] def stagedRangeLayout(s: SparkSession, dir: String): java.nio.file.Path =
-    rangeDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_rangelayout_")
-      Layout.rangeLayout(
-        ColOps.table(s, d, "documents")
-          .select(col("doc_id"), col("lang"), col("n_chars")),
-        tmp.toString, 8, "n_chars", "doc_id")
-      tmp
-    })
-
-  /** Staged Hive-partitioned rewrite of the documents table on `lang` —
-    * built once per sf dir for q_hive_layout (per-partition manifest
-    * with content-identity oracle; directory-pruning is LayoutSpec's
-    * assertion).
-    */
-  private val hiveDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private[graft] def stagedHiveLayout(s: SparkSession, dir: String): java.nio.file.Path =
-    hiveDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_hivelayout_")
-      Layout.partitionedLayout(
-        ColOps.table(s, d, "documents")
-          .select(col("doc_id"), col("n_chars"), col("lang")),
-        tmp.toString, "lang")
-      tmp
-    })
-
-  /** Staged Z-order rewrite of the events table clustered on
-    * (user_id, day) — built once per sf dir, shared by q_zorder_layout
-    * (content identity + in-plan morton recomputation; per-file
-    * z-range disjointness and locality are LayoutSpec's assertions).
-    */
-  private val zorderDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private[graft] def stagedZorderLayout(s: SparkSession, dir: String): java.nio.file.Path =
-    zorderDirs.computeIfAbsent(dir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_zorder_")
-      Layout.zorderLayout(
-        ColOps.table(s, d, "events")
-          .select(col("event_id"), col("user_id"),
-            expr(s"(ts div 1000) div ${86400L * 1000000L}L").as("day")),
-        tmp.toString, 8, "user_id", "day")
-      tmp
-    })
-
-  /** documents metadata as JSONL — the fixture for the JSONL-source
-    * query (lang codes are [a-z]{2}: no JSON escaping needed).
-    */
-  private def stagedJsonl(s: SparkSession, dir: String): java.nio.file.Path =
-    stageOnce(dir, "jsonl") {
-      ColOps.table(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-        .orderBy(col("doc_id")).collect()
-        .map(r => s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.get(2)}}""")
-        .mkString("\n")
-    }
 
   /** The corpus-build pipeline BELOW extraction (shared by the
     * pre-extracted-page and raw-archive flagships): quality gate →
@@ -3046,13 +2453,8 @@ object SparkEntry {
     // serve runs the tokenizer tail over the pinned version. Shares
     // the batch oracle VERBATIM (appends ≡ rebuild; StreamingSpec pins
     // the version never moving and the layout equaling the batch canon)
-    "q_corpus_build_stream" -> ((s, dir) => {
-      val b = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_corpus_ingest_").toString
-      deleteOnExit(b)
-      corpusBuildStreamAt(s, dir, b)
-    }),
+    "q_corpus_build_stream" -> ((s, dir) =>
+      corpusBuildStreamAt(s, dir, Scratch.fresh("corpus_ingest_").toString)),
 
     // PDF TEXT TIER — the non-HTML document fraction of a real crawl:
     // application/pdf responses mime-route to the hand-rolled PDF
@@ -3444,10 +2846,7 @@ object SparkEntry {
       // newlines; the oracle shadows documents the same way (review
       // finding — the raw/sanitized split was latent)
       val m = qualityModelFor(s, dir, sanitized = true)
-      val outDir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_qserve_").toString
-      deleteOnExit(outDir)
+      val outDir = Scratch.fresh("qserve_").toString
       val shards = stagedTextShards(s, dir)
       graft.streaming.StreamExec.runSourceForeachBatch(s) {
         s.readStream.option("maxFilesPerTrigger", "1").text(shards.toString)

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * layout for fact/dimension tables that join daily.
   *
   * The bucketed tables are staged once per JVM per data dir (external
-  * parquet tables under java.io.tmpdir, registered in the session
-  * catalog); staging is fixture plumbing, the measured operator is the
-  * join over the staged layout.
+  * parquet tables under [[graft.core.Scratch.root]], registered in the
+  * session catalog); staging is fixture plumbing, the measured operator
+  * is the join over the staged layout.
   */
 object Bucketing {
 
@@ -34,51 +34,27 @@ object Bucketing {
   private val stageLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Catalog-safe table name for (dir, base), unique PER JVM: the
-    * catalog is per-JVM anyway, and baking the pid into the backing
-    * path means two concurrent processes (driver Verify + a manual
-    * bench) can never race an overwrite of the same table directory —
-    * the torn-read class of bug the text-fixture staging already
-    * guards against with atomic moves.
+  /** File- and catalog-safe name for (dir, base): the layout's directory
+    * under the per-JVM [[graft.core.Scratch.root]] (so two concurrent
+    * processes never race an overwrite of the same layout). `base` comes
+    * first so it survives the truncated `Location` of a plan's scan.
     */
-  private def tableName(dir: String, base: String): String =
-    s"graft_bkt_${base}_" + dir.replaceAll("[^A-Za-z0-9_]", "_") +
-      "_" + Integer.toHexString(dir.hashCode) +
-      "_p" + ProcessHandle.current().pid()
+  private def layoutName(dir: String, base: String): String =
+    s"${base}_" + dir.replaceAll("[^A-Za-z0-9_]", "_") +
+      "_" + Integer.toHexString(dir.hashCode)
 
   /** Write `df` as a bucketed+sorted external parquet table (once per
     * JVM per dir) and return the catalog-backed DataFrame carrying the
     * bucket metadata (a path read would lose it — bucket info lives in
     * the catalog entry).
     */
-  /** Paths this JVM staged, deleted on exit: per-pid paths fix the
-    * cross-process overwrite race but nothing else can ever name them,
-    * so without cleanup every Verify/Bench JVM would orphan a full
-    * bucketed copy in tmpdir (observed: 5+ copies per table after a
-    * bench session).
-    */
-  private val stagedPaths = java.util.Collections.synchronizedList(
-    new java.util.ArrayList[java.nio.file.Path]())
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedPaths.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        } catch { case _: Throwable => () } // best effort on exit
-      }))
-
   def stagedBucketed(spark: SparkSession, dir: String, base: String,
                      df: => DataFrame, key: String, nBuckets: Int): DataFrame = {
-    val tbl = tableName(dir, base)
-    stageLocks.computeIfAbsent(tbl, _ => new Object).synchronized {
-      if (staged.add(tbl) || !spark.catalog.tableExists(tbl)) {
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"), tbl)
-        cleanupHook
-        stagedPaths.add(path)
+    val name = layoutName(dir, base)
+    val tbl = s"graft_bkt_$name"
+    stageLocks.computeIfAbsent(name, _ => new Object).synchronized {
+      if (staged.add(name) || !spark.catalog.tableExists(tbl)) {
+        val path = graft.core.Scratch.root.resolve(name)
         df.write.mode("overwrite").format("parquet")
           .bucketBy(nBuckets, key).sortBy(key)
           .option("path", path.toString).saveAsTable(tbl)
@@ -89,21 +65,21 @@ object Bucketing {
 
   /** [[stagedBucketed]]'s sibling for DIRECTORY elimination: write `df`
     * ONCE per JVM as a Hive-partitioned parquet layout
-    * (`key=<value>/part-*.parquet`) under tmpdir and return the
-    * path-backed read. An equality / IN / dynamic-partition-pruning
+    * (`key=<value>/part-*.parquet`) under the scratch root and return
+    * the path-backed read. An equality / IN / dynamic-partition-pruning
     * predicate on `key` then eliminates whole directories before any
     * file opens — the write-once / query-many serving layout (the
     * persisted IVF inverted file reads `nprobe/ncells` of its data this
-    * way). Same per-JVM lock + exit-cleanup discipline as the bucketed
-    * staging. Incremental adds: append with the same `partitionBy(key)`
-    * via [[appendPartitioned]] — new rows land in their key's directory
+    * way). Same per-JVM lock discipline as the bucketed staging.
+    * Incremental adds: append with the same `partitionBy(key)` via
+    * [[appendPartitioned]] — new rows land in their key's directory
     * without rewriting existing ones.
     */
   def stagedPartitioned(spark: SparkSession, dir: String, base: String,
                         df: => DataFrame, key: String): DataFrame = {
-    val tbl = tableName(dir, base)
-    val path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), tbl)
-    stageLocks.computeIfAbsent(tbl, _ => new Object).synchronized {
+    val name = layoutName(dir, base)
+    val path = graft.core.Scratch.root.resolve(name)
+    stageLocks.computeIfAbsent(name, _ => new Object).synchronized {
       // completeness = a commit marker, NOT bare directory existence: a
       // write that died mid-job leaves a partial dir (e.g. only
       // _temporary/) which would otherwise poison every later call in
@@ -115,11 +91,9 @@ object Bucketing {
       // marker never appears, and depending on it would make every call
       // after the first rewrite the whole layout (discarding rows added
       // via appendPartitioned). _SUCCESS is still honored when present.
-      if (staged.add(tbl) ||
+      if (staged.add(name) ||
           !(java.nio.file.Files.exists(path.resolve("_SUCCESS")) ||
             java.nio.file.Files.exists(path.resolve(commitSentinel)))) {
-        cleanupHook
-        stagedPaths.add(path)
         df.write.mode("overwrite").partitionBy(key).parquet(path.toString)
         java.nio.file.Files.write(path.resolve(commitSentinel),
           Array.emptyByteArray)

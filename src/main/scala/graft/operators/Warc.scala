@@ -241,8 +241,8 @@ object Warc {
     */
   val RequestEvery = 3
 
-  /** Number of shard files ([[stagedArrivalDir]] convention: fixed at
-    * any sf, so file count never scales with rows).
+  /** Number of shard files (the `Fixtures.stagedShards` convention:
+    * fixed at any sf, so file count never scales with rows).
     */
   val NumShards = 4
 

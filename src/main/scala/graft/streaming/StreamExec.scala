@@ -437,7 +437,7 @@ object StreamExec {
     * between source and sink). Returns the READ-BACK of the sink
     * directory: the oracle checks the files a downstream job would
     * actually consume, not an in-memory table. Sink + checkpoint are
-    * per-call temp dirs, removed on JVM exit.
+    * a per-call [[Scratch.fresh]] dir, removed on JVM exit.
     */
   def runStreamingToParquetSink[T <: Product : TypeTag](
       spark: SparkSession, elems: Seq[T],
@@ -452,10 +452,7 @@ object StreamExec {
       val provider =
         if (needsRocks(out)) Seq(RocksKey -> RocksProvider) else Nil
       withConfs(spark, provider: _*) {
-      val base = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_psink_")
-      deleteRecursivelyOnExit(base)
+      val base = Scratch.fresh("psink_")
       val data = base.resolve("data")
       val ckpt = base.resolve("ckpt")
       val query = out.writeStream
@@ -474,19 +471,6 @@ object StreamExec {
       spark.read.parquet(data.toString)
       }
     }
-
-  /** Best-effort recursive temp-dir cleanup at JVM exit (same pattern as
-    * Bench's reliable-checkpoint dir): streamed sink output is read back
-    * within the run, so nothing needs the files after the process ends.
-    */
-  private def deleteRecursivelyOnExit(dir: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } catch { case _: Throwable => () }))
 
   /** `query.explain()` prints to stdout; capture it (public API — avoids
     * reaching into StreamExecution internals for the executed plan).

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Scratch
 import graft.operators.{ColOps, Layout}
 
 /** Physical-layout maintenance: the properties the oracle can't see.
@@ -15,7 +16,7 @@ class LayoutSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("compactParquet: 64 tiny files collapse to the size-targeted count, rows preserved") {
-    val base = SparkEntry.stagedCompacted(spark, dir)
+    val base = Fixtures.stagedCompacted(spark, dir)
     val small = base.resolve("small").toString
     val compacted = base.resolve("compacted").toString
     val before = Layout.dataFiles(spark, small)
@@ -28,17 +29,17 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactParquet: file count tracks the byte target (half target -> about twice the files)") {
-    val base = SparkEntry.stagedCompacted(spark, dir)
+    val base = Fixtures.stagedCompacted(spark, dir)
     val small = base.resolve("small").toString
     val bytes = Layout.dataBytes(spark, small)
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_half_").toString
+    val out = Scratch.fresh("compact_half_").toString
     Layout.compactParquet(spark, small, out, targetBytes = math.max(1L, bytes / 8))
     val n = Layout.dataFiles(spark, out)
     assert(n >= 6 && n <= 12, s"bytes/8 target should give ~8 files, got $n")
   }
 
   test("rangeLayout: every output file owns a DISJOINT n_chars range") {
-    val laid = SparkEntry.stagedRangeLayout(spark, dir)
+    val laid = Fixtures.stagedRangeLayout(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(laid.toString)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(fs.makeQualified(new org.apache.hadoop.fs.Path(laid.toString)))
@@ -75,7 +76,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zorderLayout: every output file owns a DISJOINT z-range (staged events layout)") {
-    val laid = SparkEntry.stagedZorderLayout(spark, dir)
+    val laid = Fixtures.stagedZorderLayout(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(laid.toString)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(fs.makeQualified(new org.apache.hadoop.fs.Path(laid.toString)))
@@ -100,7 +101,7 @@ class LayoutSpec extends SparkSpec {
     // z-interval of 1/16 of a 64×64 space confines both coordinates
     val grid = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
       .toDF("x", "y")
-    val out = java.nio.file.Files.createTempDirectory("graft_zgrid_")
+    val out = Scratch.fresh("zgrid_")
     val laid = Layout.zorderLayout(grid, out.toString, 16, "x", "y")
     assert(laid.count() == 64L * 64L) // content preserved
     val fs = new org.apache.hadoop.fs.Path(out.toString)
@@ -149,7 +150,7 @@ class LayoutSpec extends SparkSpec {
 
   test("partitionedLayout: content round-trips and a partition predicate prunes to its directory") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hive_test_").toString
+    val tmp = Scratch.fresh("hive_test_").toString
     val df = Seq((1L, "en", 10L), (2L, "de", 20L), (3L, "en", 30L),
       (4L, "fr", 40L), (5L, "de", 50L)).toDF("id", "lang", "n")
     val back = Layout.partitionedLayout(df, tmp, "lang")
@@ -170,5 +171,41 @@ class LayoutSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*lang[^\\]]* = en\\)\\].*"),
       s"lang predicate did not become a partition filter:\n$p")
+  }
+
+  test("scratch has one owner: every staged fixture and table lies under Scratch.root") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def graftEntries(): Set[String] = {
+      val ls = Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_")).toSet
+      finally ls.close()
+    }
+    val root = Scratch.root
+    val before = graftEntries()
+    // a private copy of the data dir: fixtures are keyed by it, so this
+    // test stages every one of them whatever other suites staged before
+    val sf = Scratch.fresh("sf_copy_")
+    Seq("documents", "events", "orders", "customer").foreach { t =>
+      Files.copy(Paths.get(dir, s"$t.parquet"), sf.resolve(s"$t.parquet"))
+    }
+    val d = sf.toString
+    // one fixture of each kind: a single file (csv), a shard directory
+    // (warc), a written table (orc), a Bucketing table (bucket join) and
+    // a multi-directory layout (compact)
+    val inputs: Seq[Path] = Seq("q_csv_source", "q_warc_extract",
+      "q_orc_source", "q_bucket_join").flatMap { q =>
+      val files = SparkEntry.queries(q)(spark, d).inputFiles
+      assert(files.nonEmpty, s"$q read no files")
+      files.toSeq.map(f => Paths.get(new java.net.URI(f)))
+    } :+ Fixtures.stagedCompacted(spark, d)
+    inputs.foreach { p =>
+      assert(p.startsWith(root), s"$p is outside the scratch root $root")
+      assert(Files.exists(p), s"$p was not staged")
+    }
+    val leaked = graftEntries() -- before - root.getFileName.toString
+    assert(leaked.isEmpty, s"staging left top-level tmpdir entries: $leaked")
   }
 }

@@ -152,7 +152,7 @@ class LiftSpec extends SparkSpec {
   }
 
   test("sinkTextFile writes the stream as text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/out"
+    val dir = graft.core.Scratch.fresh("sink").toString + "/out"
     src(List(10, 20, 30)).into(Sinks.sinkTextFile(dir))
     val lines = spark.read.textFile(dir).collect().map(_.toInt).sorted.toList
     assert(lines == List(10, 20, 30))

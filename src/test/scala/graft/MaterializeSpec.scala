@@ -16,7 +16,7 @@ class MaterializeSpec extends SparkSpec {
     * checkpoints were written to the checkpoint dir.
     */
   private def withReliable[T](flag: String)(body: => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val dir = graft.core.Scratch.fresh("ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set(Materialize.ReliableKey, flag)
     try {

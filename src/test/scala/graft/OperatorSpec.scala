@@ -276,7 +276,7 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("fileChunks: fixed-size chunking covers the length boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_chunks")
+    val dir = graft.core.Scratch.fresh("chunks")
     def stage(name: String, bytes: Array[Byte]): String = {
       val p = dir.resolve(name)
       java.nio.file.Files.write(p, bytes)

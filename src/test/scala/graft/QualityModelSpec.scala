@@ -64,7 +64,7 @@ class QualityModelSpec extends SparkSpec {
 
   test("model layout round-trips: modelDf → writeVersion → modelFromPath is exact") {
     val m = QualityModel.fit(docs, "doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory("graft_qm_rt_").toString
+    val base = graft.core.Scratch.fresh("qm_rt_").toString
     val path = graft.operators.Bucketing.writeVersion(
       spark, base, QualityModel.modelDf(spark, m), "seg")
     val back = QualityModel.modelFromPath(spark, path)
@@ -76,7 +76,7 @@ class QualityModelSpec extends SparkSpec {
     import spark.implicits._
     val d = docs
     val initial = d.filter(col("doc_id") < 45L)
-    val base = java.nio.file.Files.createTempDirectory("graft_qm_maint_").toString
+    val base = graft.core.Scratch.fresh("qm_maint_").toString
     // bootstrap publishes v1 regardless of threshold
     val (m1, p1) = QualityModel.maintainModel(spark, base, initial,
       "doc_id", "text", thresholdPpm = 0L)

@@ -198,7 +198,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 60L).map(i => (i, randVec()))
     val sigAll = Similarity.withNorm(embDf(vecs))
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_").toString
+    val base = graft.core.Scratch.fresh("ivf_").toString
     // write-once: first 48 vectors; incremental batch: the last 12,
     // assigned against the SAME seeds and appended into their cell dirs
     Similarity.ivfIndexRows(sigAll.filter(col("vec_id") < 48))
@@ -223,7 +223,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 60L).map(i => (i, randVec()))
     val sig = Similarity.withNorm(embDf(vecs))
-    val base = java.nio.file.Files.createTempDirectory("graft_ivfmnt_").toString
+    val base = graft.core.Scratch.fresh("ivfmnt_").toString
     // v1 = the seeded build (the write-once layout)
     graft.operators.Bucketing.writeVersion(spark, base,
       Similarity.ivfIndexRows(sig), "cell")
@@ -265,7 +265,7 @@ class SimilaritySpec extends SparkSpec {
     // incremental-vs-rebuild on the RETRAINED layout: append a batch
     // assigned against the same refined centroids == full rebuild
     val sub = Similarity.withNorm(embDf(vecs.filter(_._1 < 48)))
-    val incBase = java.nio.file.Files.createTempDirectory("graft_ivfinc_").toString
+    val incBase = graft.core.Scratch.fresh("ivfinc_").toString
     Similarity.ivfIndexRowsWith(sub, seeds2)
       .write.mode("overwrite").partitionBy("cell").parquet(incBase)
     val inc = graft.operators.Bucketing.appendPartitioned(spark, incBase,
@@ -280,7 +280,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 60L).map(i => (i, randVec()))
     val sig = Similarity.withNorm(embDf(vecs))
-    val base = java.nio.file.Files.createTempDirectory("graft_ivfdrift_").toString
+    val base = graft.core.Scratch.fresh("ivfdrift_").toString
 
     // no live version → bootstrap build regardless of threshold
     val (seeds1, p1) = Similarity.maintainIvf(spark, base, sig,
@@ -312,7 +312,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 60L).map(i => (i, randVec()))
     val sig = Similarity.withNorm(embDf(vecs))
-    val base = java.nio.file.Files.createTempDirectory("graft_ivfpq_").toString
+    val base = graft.core.Scratch.fresh("ivfpq_").toString
     // write-once: first 48 vectors; incremental: a GENUINE batch-only
     // append — only the 12 arriving rows flow through ivfPqIndexRowsWith
     // against the index's ORIGINAL seeds + codebook (deriving geometry
@@ -343,8 +343,8 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val vecs = (0L until 60L).map(i => (i, randVec()))
     val sig = Similarity.withNorm(embDf(vecs))
-    val cbDir = java.nio.file.Files.createTempDirectory("graft_pqcb_").toString
-    val codesDir = java.nio.file.Files.createTempDirectory("graft_pqcodes_").toString
+    val cbDir = graft.core.Scratch.fresh("pqcb_").toString
+    val codesDir = graft.core.Scratch.fresh("pqcodes_").toString
     Similarity.pqCodebook(sig).withColumn("sub", col("sub").cast("int"))
       .write.mode("overwrite").partitionBy("sub").parquet(cbDir)
     // write-once: codes of the first 48 vectors; incremental batch: the
@@ -635,8 +635,8 @@ class SimilaritySpec extends SparkSpec {
     val origSeeds = initial.filter(col("vec_id") < Similarity.NumCells)
       .select(col("vec_id").as("sid"), col("emb").as("s_emb"), col("nrm").as("s_nrm"))
     val origCb = Similarity.pqCodebook(initial)
-    val pqBase = java.nio.file.Files.createTempDirectory("graft_ingest_pq_").toString
-    val ivfBase = java.nio.file.Files.createTempDirectory("graft_ingest_ivf_").toString
+    val pqBase = graft.core.Scratch.fresh("ingest_pq_").toString
+    val ivfBase = graft.core.Scratch.fresh("ingest_ivf_").toString
     Bucketing.writeVersion(spark, pqBase,
       Similarity.ivfPqIndexRowsWith(initial, origSeeds, origCb), "cell")
     val servePath = Bucketing.liveVersion(pqBase).get._2

@@ -401,8 +401,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     implicit val enc: org.apache.spark.sql.Encoder[Elem[Long]] = Elem.enc[Long]
-    val outDir = java.nio.file.Files.createTempDirectory("graft_fsink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fsink_ckpt").toString
+    val outDir = graft.core.Scratch.fresh("fsink").toString
+    val ckpt = graft.core.Scratch.fresh("fsink_ckpt").toString
     val input = MemoryStream[Elem[Long]]
     val pipe = Pipes.map[Long, Long](_ * 3) |> Pipes.filter[Long](_ % 2 == 1)
     val q = pipe(SStream(input.toDS())).ds.toDF()
@@ -584,7 +584,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source runner: readStream.text discovery runs one micro-batch per shard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fsrc")
+    val dir = graft.core.Scratch.fresh("fsrc")
     (0 until 3).foreach { i =>
       java.nio.file.Files.write(dir.resolve(s"s$i.txt"),
         s"${i * 2}\tline a$i\n${i * 2 + 1}\tline b$i".getBytes("UTF-8"))
@@ -767,7 +767,7 @@ class StreamingSpec extends SparkSpec {
     // up only files it has not yet processed, and an idle restart must
     // emit nothing. MemoryStream can't prove this (it dies with the
     // query); a real file source + file sink + checkpointLocation can.
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_")
+    val base = graft.core.Scratch.fresh("restart_")
     val src = java.nio.file.Files.createDirectory(base.resolve("src"))
     val data = base.resolve("data").toString
     val ckpt = base.resolve("ckpt").toString
@@ -836,7 +836,7 @@ class StreamingSpec extends SparkSpec {
       // u3 is a new key; u2's trailing view must NOT re-advance
       val batch2 = Seq("1,buy,30", "2,cart,25", "3,view,30", "2,view,40")
 
-      val base = java.nio.file.Files.createTempDirectory("graft_keyed_restart_")
+      val base = graft.core.Scratch.fresh("keyed_restart_")
       val src = java.nio.file.Files.createDirectory(base.resolve("src"))
       val data = base.resolve("data").toString
       val ckpt = base.resolve("ckpt").toString
@@ -852,7 +852,7 @@ class StreamingSpec extends SparkSpec {
         s"state store not recovered across restart: $got")
       // unbroken control: both batches visible to ONE query from a fresh
       // checkpoint — the split-with-restart run must equal it exactly
-      val base2 = java.nio.file.Files.createTempDirectory("graft_keyed_ctrl_")
+      val base2 = graft.core.Scratch.fresh("keyed_ctrl_")
       val src2 = java.nio.file.Files.createDirectory(base2.resolve("src"))
       put(src2, "a.txt", batch1); put(src2, "b.txt", batch2)
       runOnce(src2.toString, base2.resolve("data").toString,
@@ -912,7 +912,7 @@ class StreamingSpec extends SparkSpec {
       def put(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
         java.nio.file.Files.write(dir.resolve(name),
           lines.mkString("\n").getBytes("UTF-8"))
-      val base = java.nio.file.Files.createTempDirectory("graft_join_restart_")
+      val base = graft.core.Scratch.fresh("join_restart_")
       val srcA = java.nio.file.Files.createDirectory(base.resolve("a"))
       val srcB = java.nio.file.Files.createDirectory(base.resolve("b"))
       val data = base.resolve("data").toString
@@ -930,7 +930,7 @@ class StreamingSpec extends SparkSpec {
       assert(got.contains((2L, 2000000L, 2500000L)),
         s"join state not recovered across restart: $got")
       // unbroken control from a fresh checkpoint must agree exactly
-      val base2 = java.nio.file.Files.createTempDirectory("graft_join_ctrl_")
+      val base2 = graft.core.Scratch.fresh("join_ctrl_")
       val srcA2 = java.nio.file.Files.createDirectory(base2.resolve("a"))
       val srcB2 = java.nio.file.Files.createDirectory(base2.resolve("b"))
       put(srcA2, "a1.txt", Seq("1,1000000", "2,2000000"))
@@ -994,9 +994,7 @@ class StreamingSpec extends SparkSpec {
 
   test("q_cdx_ingest_stream: appends stay in the pinned version (live never moves), append ≡ rebuild") {
     val dir = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_cdx_spec_").toString
+    val base = graft.core.Scratch.fresh("cdx_spec_").toString
     val served = SparkEntry.cdxIngestStreamAt(spark, dir, base)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
       .sorted.toSeq
@@ -1022,9 +1020,7 @@ class StreamingSpec extends SparkSpec {
 
   test("q_corpus_build_stream: version pinned, ingested layout ≡ batch canon set") {
     val dir = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-      "graft_corpus_spec_").toString
+    val base = graft.core.Scratch.fresh("corpus_spec_").toString
     // run the full ingest (the serve-side pack output is hash-gated by
     // the shared oracle; here we pin the LAYOUT-level invariants)
     SparkEntry.corpusBuildStreamAt(spark, dir, base).collect()
