@@ -15,24 +15,32 @@ object Compose {
   /** Re-rank a stream to dense ordinals 0..n-1 (needed before positional
     * joins when seqs are sparse).
     *
-    * ADAPTIVE: first a narrow density probe — partial-agg min/max/count
-    * plus one exact countDistinct shuffle of 8-byte seqs — and only rank
-    * when the seqs are NOT already 0..n-1. Sources built from keyed
-    * tables / fromSeq are usually dense, and the probe is far cheaper
-    * than the rank machinery (full-row range shuffle + boundary job +
-    * stamp + materialize) it then skips. countDistinct is required:
-    * min=0 ∧ max=n-1 alone admits duplicate-plus-gap multisets.
+    * ADAPTIVE: first the carry kernel's probe (`OrderedExec.seqRuns`, one
+    * job that checkpoints the stream and reads each partition's seq run),
+    * and only rank when the seqs are NOT already 0..n-1. Sources built
+    * from keyed tables / fromSeq are usually dense and arrive as
+    * ascending, disjoint runs, which prove the seqs distinct: then
+    * min=0 ∧ max=n-1 decides. Otherwise one aggregate adds the exact
+    * countDistinct (min=0 ∧ max=n-1 alone admits duplicate-plus-gap
+    * multisets). Either way the result reads the checkpointed rows, so
+    * nothing upstream runs twice.
     */
   def dense[A: TypeTag](in: SStream[A]): SStream[A] = {
-    implicit val encEE: Encoder[Elem[Elem[A]]] = Elem.enc[Elem[A]]
     implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-    val r = in.ds.toDF().agg(
-      count(lit(1)), coalesce(min(col("seq")), lit(0L)),
-      coalesce(max(col("seq")), lit(-1L)), countDistinct(col("seq"))).head()
-    val (n, mn, mx, nd) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    if (n == 0 || (mn == 0L && mx == n - 1 && nd == n)) in
+    val (rows, runs) = OrderedExec.seqRuns(in.ds)
+    val isDense = runs match {
+      case Some((n, mn, mx)) => n == 0 || (mn == 0L && mx == n - 1)
+      case None =>
+        val r = rows.toDF().agg(
+          count(lit(1)), coalesce(min(col("seq")), lit(0L)),
+          coalesce(max(col("seq")), lit(-1L)), countDistinct(col("seq"))).head()
+        val (n, mn, mx, nd) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        n == 0 || (mn == 0L && mx == n - 1 && nd == n)
+    }
+    if (isDense) SStream(rows)
     else {
-      val ranked = Ordinals.zipWithOrdinal(in.ds, Seq(col("seq")))
+      implicit val encEE: Encoder[Elem[Elem[A]]] = Elem.enc[Elem[A]]
+      val ranked = Ordinals.zipWithOrdinal(rows, Seq(col("seq")))
       SStream(ranked.map(e => Elem(e.seq, e.value.value)))
     }
   }

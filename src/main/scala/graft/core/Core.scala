@@ -132,7 +132,7 @@ object Ordinals {
                        (implicit enc: Encoder[Elem[A]]): Dataset[Elem[A]] =
     // Long count (never Iterator.size, an Int that wraps past 2^31 rows per
     // partition); the running count includes the row itself
-    OrderedExec.scanFold[A, Long, Elem[A]](ds, sortCols, numPartitions,
+    OrderedExec.scanFold[A, Long, Elem[A]](ds, Some((sortCols, numPartitions)),
       ds.sparkSession.createDataset(_)(enc))(0L, (n, _) => n + 1, _ + _)((a, n) => Elem(n - 1, a))
 
   /** Ordinal from an expression when the table already has a unique,

@@ -27,7 +27,7 @@ object RowExec {
   def runningSumLong(df: DataFrame, valueExpr: Column, outCol: String): DataFrame = {
     val withV = df.withColumn("__v", valueExpr.cast(LongType))
     val idx = withV.schema.fieldIndex("__v")
-    OrderedExec.scanFold[Row, Long, Row](withV, Seq(col("seq")), 0,
+    OrderedExec.scanFold[Row, Long, Row](withV, None,
       rows(df, withV.schema.add(outCol, LongType, nullable = false)))(
       0L, (b, r) => b + (if (r.isNullAt(idx)) 0L else r.getLong(idx)), _ + _)(
       (r, acc) => Row.fromSeq(r.toSeq :+ acc))
@@ -93,7 +93,7 @@ object RowExec {
     val noSeq = if (df.columns.contains("seq")) df.drop("seq") else df
     val outSchema = StructType(StructField("seq", LongType, nullable = false) +: noSeq.schema.fields.toSeq)
     // the running count includes the row itself
-    OrderedExec.scanFold[Row, Long, Row](noSeq, sortCols, 0, rows(df, outSchema))(
+    OrderedExec.scanFold[Row, Long, Row](noSeq, Some((sortCols, 0)), rows(df, outSchema))(
       0L, (n, _) => n + 1, _ + _)((r, n) => Row.fromSeq((n - 1) +: r.toSeq))
   }
 }

@@ -87,26 +87,41 @@ class CrossPartitionSpec extends SparkSpec {
     // the map holds its RDDs weakly: collect first, so only pinned ones count
     def pinned: Set[Int] = { System.gc(); sc.getPersistentRDDs.keySet.toSet }
     val before = pinned
-    intercept[SparkException] {
-      Sources.fromSeq(spark, 0L until N) |> Pipes.scanCombine(0L)((b: Long, a: Long) =>
-        if (a == N / 2) throw new IllegalStateException("step") else b + a)(_ + _)
+    // locals, so the closures below serialize without the suite
+    val n = N
+    def fails(what: String)(body: => Any): Unit = {
+      val e = intercept[SparkException](body)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(what)), e)
     }
-    intercept[SparkException] {
-      // its own input: a leaked cache of `df` would serve later specs
-      val rows = spark.range(N).toDF("seq")
-      RowExec.mapWithCarry(rows, 1, rows.schema) { (_, it) =>
-        it.map(r => if (r.getLong(0) == N / 2) throw new IllegalStateException("row") else r)
+    // a row function runs in the consumer's job: sorted runs, then shuffled
+    // (own inputs: a leaked cache of `df` would serve later specs). Spark
+    // keeps the plan of the last action that failed reachable until the
+    // next action fails (a plain localCheckpoint does the same), so these
+    // cases go before the ones that fail inside the kernel's own jobs
+    for (rows <- Seq(spark.range(n).toDF("seq"), spark.range(n).toDF("seq").repartition(4)))
+      fails("row") {
+        RowExec.mapWithCarry(rows, 1, rows.schema) { (_, it) =>
+          it.map(r => if (r.getLong(0) == n / 2) throw new IllegalStateException("row") else r)
+        }.collect()
       }
+    // a step runs in the probe's own job: sorted runs, then shuffled
+    val step = (b: Long, a: Long) => if (a == n / 2) throw new IllegalStateException("step") else b + a
+    fails("step")(Sources.fromSeq(spark, 0L until n) |> Pipes.scanCombine(0L)(step)(_ + _))
+    fails("step") {
+      implicit val enc: org.apache.spark.sql.Encoder[Elem[Long]] = Elem.enc[Long]
+      SStream(Sources.fromSeq(spark, 0L until n).ds.repartition(4)) |>
+        Pipes.scanCombine(0L)(step)(_ + _)
     }
-    // a failed localCheckpoint leaves its RDD in the map until collected
+    // an unreachable RDD leaves the map once collected
     var after = pinned
     var tries = 0
     while (after != before && tries < 20) { Thread.sleep(100); after = pinned; tries += 1 }
     assert(after == before)
   }
 
-  /** Spark jobs started while `body` runs. */
-  private def jobsOf(body: => Any): Int = {
+  /** `body`'s value and the Spark jobs started while it runs. */
+  private def counted[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val n = new AtomicInteger
     val l = new SparkListener {
@@ -114,8 +129,15 @@ class CrossPartitionSpec extends SparkSpec {
     }
     TestBus.drain(sc)
     sc.addSparkListener(l)
-    try { body; TestBus.drain(sc) } finally sc.removeSparkListener(l)
-    n.get
+    try { val t = body; TestBus.drain(sc); (t, n.get) } finally sc.removeSparkListener(l)
+  }
+
+  private def jobsOf(body: => Any): Int = counted(body)._2
+
+  /** `df`'s rows as sorted runs: a local relation, split in seq order. */
+  private lazy val runsDf: DataFrame = {
+    import spark.implicits._
+    xs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("seq", "v")
   }
 
   test("each ordered operator runs a pinned number of Spark jobs") {
@@ -125,16 +147,93 @@ class CrossPartitionSpec extends SparkSpec {
       "scanCombine" -> jobsOf(src |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + a)(_ + _)),
       "pairs" -> jobsOf(src |> Pipes.pairs[Long]),
       "consecutive" -> jobsOf(src |> Pipes.consecutive[Long](4)),
-      "runningSumLong" -> jobsOf(RowExec.runningSumLong(df, col("v"), "rs")),
-      "mapWithCarry" -> jobsOf(RowExec.mapWithCarry(df, 1, df.schema)((_, it: Iterator[Row]) => it)),
+      "runningSumLong/runs" -> jobsOf(RowExec.runningSumLong(runsDf, col("v"), "rs")),
+      "runningSumLong/shuffled" -> jobsOf(RowExec.runningSumLong(df, col("v"), "rs")),
+      "mapWithCarry/runs" -> jobsOf(RowExec.mapWithCarry(runsDf, 1, df.schema)((_, it: Iterator[Row]) => it)),
+      "mapWithCarry/shuffled" -> jobsOf(RowExec.mapWithCarry(df, 1, df.schema)((_, it: Iterator[Row]) => it)),
       "withDenseSeq" -> jobsOf(RowExec.withDenseSeq(df, Seq(col("v")))),
       "zipWithOrdinal" -> jobsOf(Ordinals.zipWithOrdinal(ds, Seq(col("value")))),
       "foldlCombine" -> jobsOf(src.into(Sinks.foldlCombine(0L)((b: Long, a: Long) => b + a)(_ + _))))
     // counted on this session (local[4], 4 shuffle partitions): an ordered
-    // operator that starts one more job fails here
+    // operator that starts one more job fails here. Sorted runs take the
+    // probe's one job; the shuffled `df` adds the sample and the sort's
+    // two stages (runningSumLong's fresh plan re-runs the repartition's
+    // map stage, `df`'s own plan has run it already); the by-column
+    // orderings skip the probe
     assert(got == Map(
-      "scanCombine" -> 5, "pairs" -> 5, "consecutive" -> 5, "runningSumLong" -> 6,
-      "mapWithCarry" -> 5, "withDenseSeq" -> 5, "zipWithOrdinal" -> 5, "foldlCombine" -> 3))
+      "scanCombine" -> 1, "pairs" -> 1, "consecutive" -> 1, "foldlCombine" -> 1,
+      "runningSumLong/runs" -> 1, "runningSumLong/shuffled" -> 5,
+      "mapWithCarry/runs" -> 1, "mapWithCarry/shuffled" -> 4,
+      "withDenseSeq" -> 3, "zipWithOrdinal" -> 3))
+  }
+
+  /** A (seq, v) DataFrame whose partitions hold exactly `parts`. */
+  private def partitioned(parts: Seq[Seq[(java.lang.Long, Long)]]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val rows = spark.sparkContext.parallelize(parts, parts.size)
+      .flatMap(_.map { case (s, v) => Row(s, v) })
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("seq", LongType, nullable = true), StructField("v", LongType, nullable = false))))
+  }
+
+  /** The list oracle: running sums and pairs over the rows in seq order,
+    * nulls first (the sort's placement), against both operators; each
+    * operator must start `jobs` jobs (1: the probe's runs held).
+    */
+  private def probeCase(parts: Seq[Seq[(java.lang.Long, Long)]], jobs: Int): Unit = {
+    val in = partitioned(parts)
+    val ordered = parts.flatten.sortBy { case (s, _) => Option(s).map(_.longValue) }
+    val sums = ordered.map(_._2).scanLeft(0L)(_ + _).tail
+    // equal seqs may come in either order: compare sorted multisets
+    def canon(rows: Seq[Seq[Any]]): List[String] = rows.map(_.mkString(",")).toList.sorted
+    def got(op: => DataFrame, cols: String*): List[String] = {
+      val (df, n) = counted(op)
+      assert(n == jobs, s"$n jobs, expected $jobs")
+      canon(df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq)
+    }
+    assert(got(RowExec.runningSumLong(in, col("v"), "rs"), "seq", "v", "rs") ==
+      canon(ordered.zip(sums).map { case ((s, v), r) => Seq(s, v, r) }))
+    assert(got(RowExec.pairsDf(in, Seq("v")), "seq", "prev_v", "v") ==
+      canon(ordered.zip(ordered.drop(1)).map { case ((_, p), (s, v)) => Seq(s, p, v) }))
+  }
+
+  /** `xs` with seqs 0..N-1, cut into `k` runs. */
+  private def runs(k: Int): Seq[Seq[(java.lang.Long, Long)]] =
+    xs.zipWithIndex.map { case (v, i) => (java.lang.Long.valueOf(i.toLong), v) }
+      .grouped((N + k - 1) / k).toSeq
+
+  test("probe: disjoint runs in reverse partition order take the runs path") {
+    probeCase(runs(4).reverse, jobs = 1)
+  }
+
+  test("probe: empty partitions between runs take the runs path") {
+    val r = runs(3)
+    probeCase(Seq(Nil, r(0), Nil, r(1), Nil, Nil, r(2), Nil), jobs = 1)
+  }
+
+  test("probe: runs in fewer partitions than the shuffle partitions finish in blocks") {
+    val one = Seq(runs(1).head)
+    probeCase(one, jobs = 1)
+    assert(RowExec.runningSumLong(partitioned(one), col("v"), "rs").rdd.getNumPartitions ==
+      spark.sessionState.conf.numShufflePartitions)
+    val r = runs(2)
+    probeCase(Seq(r(1), Nil, r(0)), jobs = 1)
+  }
+
+  test("probe: a duplicate seq straddling two partitions takes the sorted path") {
+    val r = runs(4)
+    // the second run starts with a copy of the first run's last row
+    probeCase(Seq(r(0), r(0).last +: r(1), r(2), r(3)), jobs = 4)
+  }
+
+  test("probe: one partition out of order takes the sorted path") {
+    val r = runs(4)
+    probeCase(Seq(r(0), r(1), new scala.util.Random(3).shuffle(r(2)), r(3)), jobs = 4)
+  }
+
+  test("probe: a null seq takes the sorted path and sorts first") {
+    val r = runs(4)
+    probeCase(Seq(r(0), r(1), r(2) :+ ((null: java.lang.Long) -> 17L), r(3)), jobs = 4)
   }
 
   test("foldr on a large reversed stream == foldRight") {

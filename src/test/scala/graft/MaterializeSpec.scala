@@ -57,6 +57,23 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("reliable checkpoint mode reaches the carry kernel on both paths") {
+    import spark.implicits._
+    val xs = Vector.tabulate(5000)(i => (i * 7919L) % 1000 - 500)
+    // sorted runs (the probe's checkpoint only) and a shuffled DataFrame
+    // (the probe's, then the sorted copy's)
+    def scan(): List[Long] = (Sources.fromSeq(spark, xs)
+      |> Pipes.scanCombine(0L)((b: Long, a: Long) => b + a)(_ + _)).into(Sinks.sinkList)
+    val shuffled = xs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("seq", "v")
+      .repartition(4)
+    def sums(): List[Long] = RowExec.runningSumLong(shuffled, col("v"), "rs")
+      .orderBy("seq").select("rs").collect().map(_.getLong(0)).toList
+    val (localScan, localSums) = (scan(), sums())
+    // a fresh checkpoint dir for each run: its rdd-* files are the kernel's
+    assert(withReliable("true")(scan()) == localScan)
+    assert(withReliable("true")(sums()) == localSums)
+  }
+
   test("without the flag, reliable dir alone does not change the default path") {
     // flag unset → localCheckpoint even with a checkpoint dir configured
     assert(spark.conf.getOption(Materialize.ReliableKey).isEmpty)

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import graft.operators._
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Plan-quality assertions (SURVEY.md §4, VERDICT round-1 item 6): the
@@ -15,6 +17,19 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  private object Adaptive extends AdaptiveSparkPlanHelper
+
+  /** The file scans in `df`'s executed plan (adaptive stages and
+    * subqueries included) over a layout whose path names `layout`: read
+    * from the scan's root paths, not from the plan text, which cuts the
+    * location at `spark.sql.maxMetadataStringLength` characters.
+    */
+  private def scansOf(df: DataFrame, layout: String): Seq[FileSourceScanExec] =
+    Adaptive.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(layout)) => s
+    }
 
   test("filter is pushed down to the parquet scan") {
     val df = SparkEntry.queries("q_filter")(spark, dir)
@@ -503,11 +518,10 @@ class PlanSpec extends SparkSpec {
     // the ADC scan over the persisted codes layout must be
     // column-pruned to the integer code rows — reading the emb floats
     // there would forfeit the 98.5 % byte saving the PQ index exists for
-    val codesScans = p.linesIterator.filter(l =>
-      l.contains("FileScan") && l.contains("pqcodes")).toList
+    val codesScans = scansOf(df, "pqcodes")
     assert(codesScans.nonEmpty, s"no staged-codes scan in:\n$p")
-    codesScans.foreach(l =>
-      assert(!l.contains("emb"), s"codes scan reads emb floats:\n$l"))
+    codesScans.foreach(s => assert(!s.requiredSchema.fieldNames.exists(_.contains("emb")),
+      s"codes scan reads emb floats:\n${s.requiredSchema.simpleString}"))
     // the staged codebook feeds the query-side distance table through a
     // broadcast, and nothing in the serve plans a cartesian
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
@@ -537,11 +551,10 @@ class PlanSpec extends SparkSpec {
     // dynamic partition pruning on the cell directories: only
     // nprobe/ncells of the posting lists are opened
     assert(p.contains("dynamicpruning"), s"no DPP on the ivfpq index scan:\n$p")
-    val idxScans = p.linesIterator.filter(l =>
-      l.contains("FileScan") && l.contains("ivfpq")).toList
+    val idxScans = scansOf(df, "ivfpq")
     assert(idxScans.nonEmpty, s"no staged ivfpq scan in:\n$p")
-    idxScans.foreach(l =>
-      assert(!l.contains("emb"), s"ivfpq index scan reads vectors:\n$l"))
+    idxScans.foreach(s => assert(!s.requiredSchema.fieldNames.exists(_.contains("emb")),
+      s"ivfpq index scan reads vectors:\n${s.requiredSchema.simpleString}"))
     assert(!p.contains("CartesianProduct"), s"ivfpq serve plans a cartesian:\n$p")
   }
 
