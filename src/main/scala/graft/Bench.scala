@@ -54,18 +54,10 @@ object Bench {
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run to the named queries —
     // for isolating one query's cost in a fresh JVM (cross-query JVM
     // state, GC, and listener accumulation excluded by construction).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSeq)
     // a typo'd name must fail loudly, not silently produce a partial run
     // whose JSON looks like a valid result
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(",")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
+    val selected = SparkEntry.select(only.getOrElse(Nil))
     // One timed execution of a query + the inter-query hygiene.
     // Hygiene, OUTSIDE the timed window: queries are independent, but
     // persisted/localCheckpoint blocks they leave behind are only
@@ -146,7 +138,7 @@ object Bench {
       val r = recordsFrom(recordPath)
       if (r.nonEmpty) r else recordsFrom(benchOut)
     }
-    val results = selected.map { case (name, fn) => name -> runOnce(fn) }
+    val results = selected.map(q => q.name -> runOnce(q.build))
     // SELF-ADJUDICATION: a query over its committed record by the
     // needsSolo gate is re-run SOLO after the sweep, so a wandering
     // machine-load spike shows up as (sweep: inflated, solo: at-record)
@@ -164,7 +156,7 @@ object Bench {
     // "solo_skipped" so the artifact still names every flagged query.
     val adjBudgetSec = sys.env.get("SPARK_GRAFT_ADJ_BUDGET")
       .flatMap(_.toDoubleOption).getOrElse(90.0)
-    val candidates = results.toSeq.collect {
+    val candidates = results.collect {
       case (name, (sec, None, stl))
           if records.get(name).exists(r => needsSolo(sec, r)) =>
         (name, sec, stl, records(name))
@@ -183,7 +175,7 @@ object Bench {
         // a FAILING solo re-run must not report its time-to-failure as
         // a fast "solo" number (that's the load-spike signature and
         // would steer the reader to the wrong verdict) — carry the error
-        val (solo, soloErr, soloStl) = runOnce(selected(name))
+        val (solo, soloErr, soloStl) = runOnce(SparkEntry.queries(name))
         (name, sec, swStl, solo, soloStl, soloErr, rec, false)
       }
     }
@@ -199,8 +191,8 @@ object Bench {
       case (k, sweep, swStl, solo, soloStl, None, rec, _) =>
         s"\"$k\":{\"sweep\":$sweep,\"sw_steal_s\":$swStl,\"solo\":$solo,\"solo_steal_s\":$soloStl,\"record\":$rec}"
     }.mkString("{", ",", "}")
-    val total = results.values.collect { case (sec, None, _) => sec }.sum
-    val nErr = results.values.count(_._2.isDefined)
+    val total = results.collect { case (_, (sec, None, _)) => sec }.sum
+    val nErr = results.count { case (_, (_, err, _)) => err.isDefined }
     // whole-run steal (sweep + solos): the single number that says
     // whether this run is comparable to an idle-machine record
     val stealRun = {

@@ -34,7 +34,7 @@ object Fixtures {
   /** q_corpus_build_warc's archive re-staged as TIME-ORDERED shards
     * (shard i = the i-th quarter of doc_ids in ascending order — crawl
     * segments arrive in crawl order), the precondition for
-    * [[SparkEntry.corpusBuildStreamAt]]'s first-arrival dedup ≡ batch
+    * [[queries.Streaming.corpusBuildStreamAt]]'s first-arrival dedup ≡ batch
     * keep-min. Page bytes are
     * byte-identical to [[stagedWarcShards]]'s; only the split axis
     * differs, which extraction (and therefore the shared oracle) never
@@ -94,7 +94,7 @@ object Fixtures {
           val id = r.getLong(0)
           val slotText = Charsets.Slots(Charsets.slotOf(id))._3
           val payload = r.getString(1).replace('\n', ' ') + " " + slotText
-          s"$id\t" + graft.functions.HtmlEntities.ncrEncode(payload) + SparkEntry.NcrBatteryRaw
+          s"$id\t" + graft.functions.HtmlEntities.ncrEncode(payload) + queries.Crawl.NcrBatteryRaw
         }.mkString("\n")
     }
 
@@ -390,7 +390,7 @@ object Fixtures {
     Scratch.once("compact", dir) { base =>
       val small = base.resolve("small").toString
       ColOps.table(s, dir, "events")
-        .select(col("event_id"), SparkEntry.ivalCol.as("cents"))
+        .select(col("event_id"), queries.Shared.ivalCol.as("cents"))
         .repartition(64)
         .write.mode("overwrite").parquet(small)
       // quarter of the input bytes per file → ~4 compacted files

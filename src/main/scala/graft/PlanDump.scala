@@ -13,21 +13,19 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val tag = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val selected = SparkEntry.select(args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r14")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { q =>
+      val df = q.build(spark, sfDir)
       // queryExecution.explainString, not .explain(), so the text can be
       // written to a file instead of stdout
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), txt)
-      println(s"PLANDUMP wrote $outDir/${name}_$tag.txt (${txt.length} chars)")
+      Files.writeString(Paths.get(outDir, s"${q.name}_$tag.txt"), txt)
+      println(s"PLANDUMP wrote $outDir/${q.name}_$tag.txt (${txt.length} chars)")
     }
     spark.stop()
   }

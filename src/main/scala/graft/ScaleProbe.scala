@@ -18,12 +18,12 @@ object ScaleProbe {
     val spark = Harness.session()
     spark.range(100000).selectExpr("sum(id)").collect() // warm
 
-    // same prep + operator as q_event_session (SparkEntry.ivalCol +
+    // same prep + operator as q_event_session (queries.Shared.ivalCol +
     // EventTime.session) so the probe measures the headline query's
     // actual shape, not a hand-copied twin that could drift
     val events = graft.operators.ColOps.table(spark, dir, "events")
       .withColumn("ts2", timestamp_micros(expr("ts div 1000")))
-      .withColumn("ival", SparkEntry.ivalCol)
+      .withColumn("ival", queries.Shared.ivalCol)
     val maxUid = events.agg(max("user_id")).head().getLong(0) + 1
 
     def sessionAgg(df: org.apache.spark.sql.DataFrame): Long =
@@ -112,7 +112,7 @@ object ScaleProbe {
         .select(col("keep_id").as("doc_id"))
       val survivors = kept.join(canonical, "doc_id")
       graft.operators.Packing.concatSplit(survivors, "doc_id", "text",
-        SparkEntry.PackBudget).count()
+        queries.TextCorpus.PackBudget).count()
     })
     // the FULL q_corpus_build chain (extract → quality gate → exact
     // dedup → BPE train → encode → pack) probed end-to-end on the 100×
@@ -396,7 +396,7 @@ object ScaleProbe {
     // checksum: pure scan + fixed-width shuffle — the flattest axis here
     probePair("tableChecksum", events, big, d =>
       graft.operators.Diagnostics.tableChecksum(d, col("event_id"),
-        Seq(col("event_id"), col("user_id"), SparkEntry.ivalCol), 64).count())
+        Seq(col("event_id"), col("user_id"), queries.Shared.ivalCol), 64).count())
 
     // codec decode: pure per-row loops (container parse + moment fold)
     // — must be the flattest data axis after tableChecksum; any
@@ -461,7 +461,7 @@ object ScaleProbe {
     // archive-decode probes over ONE shared cached shard pair: the
     // front door (warcExtract), the webgraph front half (linkEdges),
     // and the CURATED corpus-build flagship (curatedBuild — the shared
-    // SparkEntry.curatedCorpusBuild definition, so the probe can never
+    // queries.TextCorpus.curatedCorpusBuild definition, so the probe can never
     // drift from the query it claims to track). Copies carry shifted
     // doc ids so urls/dedup keys scale on their real axes
     if (probeEnabled("warcExtract") | probeEnabled("linkEdges") |
@@ -477,9 +477,9 @@ object ScaleProbe {
         graft.operators.Warc.linkDomainEdges(graft.operators.Warc.records(d))
           .groupBy(col("src_domain"), col("dst_domain")).count().count())
       probePair("curatedBuild", warcBase, warcBig, d =>
-        SparkEntry.curatedCorpusBuild(d).count())
+        queries.TextCorpus.curatedCorpusBuild(d).count())
       probePair("curatedNear", warcBase, warcBig, d =>
-        SparkEntry.curatedCorpusBuildNear(d).count())
+        queries.TextCorpus.curatedCorpusBuildNear(d).count())
       warcBase.unpersist(); warcBig.unpersist()
     }
 

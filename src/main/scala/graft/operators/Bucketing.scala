@@ -18,18 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  private val staged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Self-written commit marker for [[stagedPartitioned]] layouts — the
-    * `_` prefix keeps it invisible to Spark's file index. Written by us
-    * after a successful job, so layout completeness never depends on
-    * the committer's `_SUCCESS` setting.
+  /** Self-written commit marker for [[writeVersion]] layouts — the `_`
+    * prefix keeps it invisible to Spark's file index. Written by us
+    * after a successful job, so version liveness never depends on the
+    * committer's `_SUCCESS` setting.
     */
   private[operators] val commitSentinel = "_GRAFT_COMMIT"
 
-  /** Per-table staging locks: a thread that loses the staged.add race
-    * must BLOCK until the winner's write completes, not fall through to
-    * a tableExists check that can observe an in-progress write.
+  /** Per-table staging locks for [[stagedBucketed]]: a second caller
+    * blocks until the first caller's write completes, instead of
+    * observing an in-progress table.
     */
   private val stageLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -53,7 +51,10 @@ object Bucketing {
     val name = layoutName(dir, base)
     val tbl = s"graft_bkt_$name"
     stageLocks.computeIfAbsent(name, _ => new Object).synchronized {
-      if (staged.add(name) || !spark.catalog.tableExists(tbl)) {
+      // the in-memory catalog starts empty with the JVM, and a failed
+      // saveAsTable leaves no table, so a missing table is the one
+      // signal that the layout still has to be written
+      if (!spark.catalog.tableExists(tbl)) {
         val path = graft.core.Scratch.root.resolve(name)
         df.write.mode("overwrite").format("parquet")
           .bucketBy(nBuckets, key).sortBy(key)
@@ -70,34 +71,19 @@ object Bucketing {
     * predicate on `key` then eliminates whole directories before any
     * file opens — the write-once / query-many serving layout (the
     * persisted IVF inverted file reads `nprobe/ncells` of its data this
-    * way). Same per-JVM lock discipline as the bucketed staging.
+    * way). Staged through [[graft.core.Scratch.once]], like every
+    * other fixture.
     * Incremental adds: append with the same `partitionBy(key)` via
     * [[appendPartitioned]] — new rows land in their key's directory
     * without rewriting existing ones.
     */
   def stagedPartitioned(spark: SparkSession, dir: String, base: String,
                         df: => DataFrame, key: String): DataFrame = {
-    val name = layoutName(dir, base)
-    val path = graft.core.Scratch.root.resolve(name)
-    stageLocks.computeIfAbsent(name, _ => new Object).synchronized {
-      // completeness = a commit marker, NOT bare directory existence: a
-      // write that died mid-job leaves a partial dir (e.g. only
-      // _temporary/) which would otherwise poison every later call in
-      // the JVM — stagedBucketed self-heals the same way via
-      // catalog.tableExists, which a failed saveAsTable leaves false.
-      // We write our OWN sentinel after a successful job rather than
-      // relying on the committer's _SUCCESS: with
-      // mapreduce.fileoutputcommitter.marksuccessfuljobs=false the
-      // marker never appears, and depending on it would make every call
-      // after the first rewrite the whole layout (discarding rows added
-      // via appendPartitioned). _SUCCESS is still honored when present.
-      if (staged.add(name) ||
-          !(java.nio.file.Files.exists(path.resolve("_SUCCESS")) ||
-            java.nio.file.Files.exists(path.resolve(commitSentinel)))) {
-        df.write.mode("overwrite").partitionBy(key).parquet(path.toString)
-        java.nio.file.Files.write(path.resolve(commitSentinel),
-          Array.emptyByteArray)
-      }
+    // Scratch.once records the directory only after the write returns,
+    // so a write that dies mid-job is retried into a fresh directory
+    // instead of serving a partial layout
+    val path = graft.core.Scratch.once(base, dir) { d =>
+      df.write.mode("overwrite").partitionBy(key).parquet(d.toString)
     }
     spark.read.parquet(path.toString)
   }

@@ -38,4 +38,12 @@ class BenchSpec extends AnyFunSuite {
     // garbage body yields no records rather than throwing
     assert(Bench.parseRecords("not json at all", "/root/testdata/sf0.1").isEmpty)
   }
+
+  test("select: an unknown query name throws and is named in the message") {
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Seq("q_scan", "q_nope")))
+    assert(e.getMessage.contains("q_nope"), e.getMessage)
+    assert(!e.getMessage.contains("q_scan"), e.getMessage)
+    assert(SparkEntry.select(Seq("q_scan")).map(_.name) == Seq("q_scan"))
+    assert(SparkEntry.select(Nil).size == SparkEntry.registry.size)
+  }
 }

@@ -39,4 +39,14 @@ class DocAuditSpec extends AnyFunSuite {
     assert(noOracle.isEmpty,
       s"queries without oracle SQL: ${noOracle.toSeq.sorted.mkString(", ")}")
   }
+
+  test("the registry holds 307 distinct names, each with its oracle") {
+    // the registry is assembled from eight family files: a repeated name
+    // would silently drop one query once it becomes a map
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 307, s"${names.size} queries registered")
+    assert(names.distinct.size == names.size,
+      s"repeated names: ${names.diff(names.distinct).mkString(", ")}")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
 }

@@ -72,11 +72,11 @@ class HtmlEntitiesSpec extends AnyFunSuite {
   }
 
   test("q_html_entities battery: the oracle's hand-written decode matches the engine") {
-    assert(decode(SparkEntry.NcrBatteryRaw) == SparkEntry.NcrBatteryDecoded,
+    assert(decode(queries.Crawl.NcrBatteryRaw) == queries.Crawl.NcrBatteryDecoded,
       "NcrBatteryDecoded (the oracle constant) drifted from the decoder")
     // the battery raw form is pure ASCII and single-quote-free (it is
     // embedded in the oracle SQL without escaping)
-    assert(!SparkEntry.NcrBatteryDecoded.contains("'"))
+    assert(!queries.Crawl.NcrBatteryDecoded.contains("'"))
   }
 
   test("fixture round trip: decode(ncrEncode(s)) == s on every unicode fixture text") {

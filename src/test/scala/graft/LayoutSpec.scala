@@ -173,6 +173,30 @@ class LayoutSpec extends SparkSpec {
       s"lang predicate did not become a partition filter:\n$p")
   }
 
+  test("stagedPartitioned: a write that fails restages on the next call and reads every row") {
+    import spark.implicits._
+    val good = (0L until 40L).map(i => (i, (i % 4).toInt)).toDF("id", "k")
+    var writes = 0
+    // by-name: each staging attempt builds its own DataFrame; the first
+    // one fails in a task of the write job
+    def layout = {
+      writes += 1
+      if (writes > 1) good
+      else good.withColumn("id",
+        when(col("id") === 37L, raise_error(lit("torn write"))).otherwise(col("id")))
+    }
+    // a data-dir key of its own, so no other suite shares the fixture slot
+    val key = "layoutspec-restage"
+    intercept[Exception](graft.operators.Bucketing.stagedPartitioned(spark, key,
+      "restage", layout, "k").collect())
+    val back = graft.operators.Bucketing.stagedPartitioned(spark, key, "restage", layout, "k")
+    val got = back.select("id", "k").as[(Long, Int)].collect().sortBy(_._1).toSeq
+    assert(got == (0L until 40L).map(i => (i, (i % 4).toInt)), s"got $got")
+    // staged once it succeeded: a third call neither rewrites nor rebuilds
+    graft.operators.Bucketing.stagedPartitioned(spark, key, "restage", layout, "k")
+    assert(writes == 2, s"layout built $writes times")
+  }
+
   test("scratch has one owner: every staged fixture and table lies under Scratch.root") {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._

@@ -979,7 +979,7 @@ class StreamingSpec extends SparkSpec {
   test("q_ann_stream: serve is micro-batch-split invariant and equals the batch IVF search") {
     val dir = "/root/testdata/sf0.001"
     def served(quantum: Int): Seq[(Long, Long, Double, Long)] =
-      SparkEntry.annStreamServe(spark, dir, quantum).collect()
+      queries.Streaming.annStreamServe(spark, dir, quantum).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
         .sorted.toSeq
     val oneByOne = served(1)       // every query its own micro-batch
@@ -995,7 +995,7 @@ class StreamingSpec extends SparkSpec {
   test("q_cdx_ingest_stream: appends stay in the pinned version (live never moves), append ≡ rebuild") {
     val dir = "/root/testdata/sf0.001"
     val base = graft.core.Scratch.fresh("cdx_spec_").toString
-    val served = SparkEntry.cdxIngestStreamAt(spark, dir, base)
+    val served = queries.Streaming.cdxIngestStreamAt(spark, dir, base)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getString(3)))
       .sorted.toSeq
     // version pinning: the per-shard appends must not have published a
@@ -1023,7 +1023,7 @@ class StreamingSpec extends SparkSpec {
     val base = graft.core.Scratch.fresh("corpus_spec_").toString
     // run the full ingest (the serve-side pack output is hash-gated by
     // the shared oracle; here we pin the LAYOUT-level invariants)
-    SparkEntry.corpusBuildStreamAt(spark, dir, base).collect()
+    queries.Streaming.corpusBuildStreamAt(spark, dir, base).collect()
     val live = graft.operators.Bucketing.liveVersion(base)
     assert(live.exists(_._1 == 1), s"append moved the live version: $live")
     // append ≡ rebuild at the document level: the ingested layout holds
