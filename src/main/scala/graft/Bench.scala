@@ -28,13 +28,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_FORCE=hash evaluates EVERY output column per row
-    // (sum of xxhash64 over the full struct) instead of count() —
-    // count() lets Catalyst prune unreferenced projections, so
-    // pure-projection queries mostly measure fixed overhead. The default
-    // stays count() for continuity with the recorded baselines; both
-    // modes are recorded in BASELINE.md.
-    val forceHash = sys.env.get("SPARK_GRAFT_FORCE").contains("hash")
     val spark = Harness.session()
     // SPARK_GRAFT_RELIABLE_CKPT=1 benches the 100-TB-safe materialization
     // path (Materialize scaladoc): reliable checkpoint() to a FS dir
@@ -99,11 +92,13 @@ object Bench {
       val err: Option[String] =
         try {
           val df = fn(spark, sfDir)
-          // bit_xor, not sum: xxhash64 values span the full Long range, so a
-          // running sum overflows within rows and ANSI mode (Spark 4
-          // default) would abort the job mid-measurement
-          if (forceHash) df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
-          else df.count()
+          // forced by a hash of EVERY output column per row: count() would
+          // let Catalyst prune unread projections, so pure-projection
+          // queries would mostly measure fixed overhead. bit_xor, not sum:
+          // xxhash64 values span the full Long range, so a running sum
+          // overflows within rows and ANSI mode (Spark 4 default) would
+          // abort the job mid-measurement
+          df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
           None
         } catch { case e: Throwable =>
           // keep the JSON parseable no matter what the message contains:

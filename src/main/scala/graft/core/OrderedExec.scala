@@ -195,6 +195,10 @@ private[graft] object OrderedExec {
 
   /** The finish pass, lazily: `finish(carries(i), partition i)` over the
     * broadcast carries, rebuilt with `build`.
+    * When the consumer's action over it fails, Spark keeps that plan, and
+    * so the kernel's checkpoint, reachable until another action fails
+    * (CrossPartitionSpec's "a failing step or row function leaves no
+    * sorted copy cached" orders its cases around this).
     */
   private def finished[T, S, U: ClassTag](rows: RDD[InternalRow], decode: InternalRow => T,
                                           carries: Vector[S], build: RDD[U] => Dataset[U])(

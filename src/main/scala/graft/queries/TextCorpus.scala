@@ -21,7 +21,7 @@ object TextCorpus {
     * greedy oracle replays the same first-fit fold as a recursive CTE —
     * recursion depth = PackGroup, the per-group doc count.
     */
-  private[graft] val PackBudget = 256L
+  private val PackBudget = 256L
 
   private val PackGroup = 100L
 
@@ -99,7 +99,7 @@ object TextCorpus {
           .as("text"))
   }
 
-  private[graft] def curatedCorpusBuild(shards: DataFrame): DataFrame =
+  private def curatedCorpusBuild(shards: DataFrame): DataFrame =
     corpusBuildTail(curatedExtracted(shards))
 
   /** The curated flagship with the MinHash near-dup keep-best cut
@@ -108,7 +108,7 @@ object TextCorpus {
     * only in noise collapse to their token-richest copy BEFORE the
     * tokenizer learns merges from them).
     */
-  private[graft] def curatedCorpusBuildNear(shards: DataFrame): DataFrame =
+  private def curatedCorpusBuildNear(shards: DataFrame): DataFrame =
     corpusBuildTailNear(curatedExtracted(shards))
 
   /** The quality-gate + exact-dedup canon set shared by both corpus

@@ -46,4 +46,15 @@ class BenchSpec extends AnyFunSuite {
     assert(SparkEntry.select(Seq("q_scan")).map(_.name) == Seq("q_scan"))
     assert(SparkEntry.select(Nil).size == SparkEntry.registry.size)
   }
+
+  test("parseCpus: trims, defaults unset or empty to 4, throws naming SPARK_GRAFT_CPUS otherwise") {
+    assert(Harness.parseCpus(Some("4")) == 4)
+    assert(Harness.parseCpus(Some(" 8 ")) == 8)
+    assert(Harness.parseCpus(Some("")) == 4)
+    assert(Harness.parseCpus(None) == 4)
+    for (bad <- Seq("0", "abc")) {
+      val e = intercept[IllegalArgumentException](Harness.parseCpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(bad), e.getMessage)
+    }
+  }
 }

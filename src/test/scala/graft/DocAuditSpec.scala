@@ -49,4 +49,18 @@ class DocAuditSpec extends AnyFunSuite {
       s"repeated names: ${names.diff(names.distinct).mkString(", ")}")
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
+
+  test("every runMain in README.md and the verify skill names a class with a static main") {
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
+    val named = docs.flatMap { d =>
+      val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d)), "UTF-8")
+      "runMain (graft(?:\\.\\w+)+)".r.findAllMatchIn(txt).map(d -> _.group(1))
+    }
+    assert(named.nonEmpty, "no runMain found in the docs")
+    val broken = named.filterNot { case (_, cls) =>
+      scala.util.Try(Class.forName(cls).getMethod("main", classOf[Array[String]]))
+        .toOption.exists(m => java.lang.reflect.Modifier.isStatic(m.getModifiers))
+    }
+    assert(broken.isEmpty, s"runMain targets with no static main: ${broken.mkString(", ")}")
+  }
 }

@@ -31,6 +31,22 @@ class PlanSpec extends SparkSpec {
           if s.relation.location.rootPaths.exists(_.toString.contains(layout)) => s
     }
 
+  test("PlanDump: a .md target is one document, any other a file per query") {
+    val names = Seq("q_filter", "q_scan")
+    val md = graft.core.Scratch.fresh("plandump_md_").resolve("plans.md")
+    PlanDump.write(spark, dir, md.toString, names)
+    val doc = java.nio.file.Files.readString(md)
+    assert("(?m)^## (q_\\w+)$".r.findAllMatchIn(doc).map(_.group(1)).toSeq == names, doc)
+    doc.split("(?m)^## ").drop(1).foreach { section =>
+      assert(section.contains("== Physical Plan =="), s"section without a physical plan:\n$section")
+    }
+    val out = graft.core.Scratch.fresh("plandump_dir_")
+    PlanDump.write(spark, dir, out.toString, names)
+    assert(out.toFile.list().toSeq.sorted == Seq("q_filter.txt", "q_scan.txt"))
+    val e = intercept[IllegalArgumentException](PlanDump.write(spark, dir, out.toString, Seq("q_nope")))
+    assert(e.getMessage.contains("q_nope"), e.getMessage)
+  }
+
   test("filter is pushed down to the parquet scan") {
     val df = SparkEntry.queries("q_filter")(spark, dir)
     val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")

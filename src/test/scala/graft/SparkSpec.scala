@@ -6,17 +6,8 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one per test JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // pinned at 4: CrossPartitionSpec's job pins and PlanSpec's parallelism check were counted at local[4]
+  lazy val spark: SparkSession = Harness.session(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
