@@ -44,7 +44,7 @@ object DevSmoke {
 
     // incremental contract: live MemoryStream feed with carried scan state
     val feeder = graft.streaming.Incremental.open(spark,
-      graft.streaming.StreamPipes.scanStateful(0L)((b: Long, a: Long) => b + a),
+      graft.streaming.StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a),
       "devsmoke_inc")
     try {
       val fa = feeder.feed(Seq(1L, 2L, 3L))
@@ -97,7 +97,7 @@ object DevSmoke {
 
     // feedPipe leftover-inputs branch (Conduino.hs:253-256): feeding a
     // cut pipe past its termination reports the unconsumed remainder
-    // (Incremental.open scopes the RocksDB provider itself)
+    // (Incremental.open picks the RocksDB provider from the plan)
     val cutF = graft.streaming.Incremental.open(spark,
       graft.streaming.StreamPipes.takeTwsCut[Int](spark, 3), "devsmoke_cut")
     try {

@@ -71,6 +71,25 @@ object PlanDump {
     "q_robots_parse", "q_robots_discovery", "q_charset_langid",
     "q_charset_vocab", "q_cdx_revisit")
 
+  /** Per-run tokens that change between two dumps of the same plan:
+    * expression and exchange ids, lambda class names with their identity
+    * hashes, and the per-JVM scratch root (`Scratch.root`, a random
+    * `graft_<n>` under `java.io.tmpdir`) with the random suffix of the
+    * directory under it. Plans are cut at
+    * `spark.sql.maxMetadataStringLength`, so a path may end mid-name.
+    */
+  private val Volatile: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#[0-9]+L?".r -> "#N",
+    "plan_id=[0-9]+".r -> "plan_id=N",
+    "\\$\\$Lambda[^@\\s]*@[0-9a-f]+".r -> "\\$\\$Lambda",
+    "file:[^\\s,\\]]*/graft_[0-9]+(/[A-Za-z0-9_]*_)?[0-9]*".r -> "file:<scratch>$1")
+
+  /** `plan` with every [[Volatile]] token replaced by a fixed stand-in,
+    * so a regenerated PLANS.md differs only where a plan changed.
+    */
+  private[graft] def normalize(plan: String): String =
+    Volatile.foldLeft(plan) { case (text, (re, to)) => re.replaceAllIn(text, to) }
+
   def main(args: Array[String]): Unit = {
     val names = args.drop(1).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -96,8 +115,9 @@ object PlanDump {
       // queryExecution.explainString, not .explain(), so the text can be
       // written to a file instead of stdout
       val qe = q.build(spark, sfDir).queryExecution
-      if (md) doc.append(s"## ${q.name}\n\n```\n${qe.explainString(SimpleMode)}\n```\n\n")
-      else Files.writeString(Paths.get(out, s"${q.name}.txt"), qe.explainString(FormattedMode))
+      if (md) doc.append(s"## ${q.name}\n\n```\n${normalize(qe.explainString(SimpleMode))}\n```\n\n")
+      else Files.writeString(Paths.get(out, s"${q.name}.txt"),
+        normalize(qe.explainString(FormattedMode)))
     }
     if (md) Files.writeString(Paths.get(out), doc.toString)
     println(s"PLANDUMP wrote ${selected.size} plans to $out")

@@ -1,12 +1,14 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core._
 import graft.operators._
 import graft.Fixtures._
+import graft.streaming.{StreamExec, StreamPipes}
+import StreamExec.StreamSink.ForeachBatch
 import Shared._
 
 /** Streaming-executed queries (every `_stream` query): Structured
@@ -198,8 +200,7 @@ object Streaming {
     // max(1, …): an embeddings table at or under nInit rows makes
     // arriving empty, and grouped(0) throws even on an empty Seq — the
     // no-op ingest must serve the initial-only index, not error
-    graft.streaming.StreamExec.runForeachBatch(
-      s, arriving, quantum = math.max(1, (arriving.size + 2) / 3)) { (batch, _) =>
+    val ingest = ForeachBatch { (batch, _) =>
       val b = batch.toDF("vec_id", "emb", "nrm")
       Bucketing.appendPartitioned(s, servePath,
         Similarity.ivfPqIndexRowsWith(b, origSeeds, origCb), "cell")
@@ -209,6 +210,8 @@ object Streaming {
       Similarity.maintainIvf(s, ivfBase, grown)
       ()
     }
+    StreamExec.runStreamingAppend[(Long, Seq[Double], Double)](s, arriving, _.toDF(),
+      quantum = math.max(1, (arriving.size + 2) / 3), sink = ingest)
     Similarity.ivfPqServe(s.read.parquet(servePath), sig, 20, 3)
   }
 
@@ -268,14 +271,15 @@ object Streaming {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     var seen = initial
-    graft.streaming.StreamExec.runForeachBatch(
-      s, arriving, quantum = math.max(1, (arriving.size + 1) / 2)) { (batch, _) =>
+    val maintain = ForeachBatch { (batch, _) =>
       val b = batch.toDF("doc_id", "text")
       seen = graft.core.Materialize.checkpoint(seen.unionByName(b))
       QualityModel.maintainModel(s, base, seen, "doc_id", "text",
         QualityDriftThresholdPpm)
       ()
     }
+    StreamExec.runStreamingAppend[(Long, String)](s, arriving, _.toDF(),
+      quantum = math.max(1, (arriving.size + 1) / 2), sink = maintain)
     QualityModel.scoreWith(docs, "doc_id", "text", serveModel)
   }
 
@@ -302,6 +306,16 @@ object Streaming {
     cdx.withColumn("cdx_bucket",
       pmod(hash(col("canonical")), lit(CdxBuckets)))
 
+  /** The staged `.warc.gz` shards after shard-00, discovered by a real
+    * binaryFile stream one file per micro-batch.
+    */
+  private def laterShards(s: SparkSession, shards: java.nio.file.Path): DataFrame =
+    s.readStream
+      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      .option("maxFilesPerTrigger", "1")
+      .option("pathGlobFilter", "shard-0[1-9].warc.gz")
+      .format("binaryFile").load(shards.toString)
+
   private def cdxIngestStream(s: SparkSession, dir: String): DataFrame =
     cdxIngestStreamAt(s, dir, Scratch.fresh("cdx_ingest_").toString)
 
@@ -318,17 +332,12 @@ object Streaming {
         .load(shards.toString))), "cdx_bucket")
     val servePath = Bucketing.liveVersion(base).get._2
     // later shards arrive through a real file source, one per batch
-    graft.streaming.StreamExec.runSourceForeachBatch(s) {
-      s.readStream
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "shard-0[1-9].warc.gz")
-        .format("binaryFile").load(shards.toString)
-    } { (batch, _) =>
+    val append = ForeachBatch { (batch, _) =>
       Bucketing.appendPartitioned(s, servePath,
         cdxWithBucket(Warc.cdxIndex(batch)), "cdx_bucket")
       ()
     }
+    StreamExec.runSourceStream(s, append)(laterShards(s, shards))
     s.read.parquet(servePath)
       .select(col("canonical"), col("shard"), col("pos"), col("record_id"))
   }
@@ -382,19 +391,14 @@ object Streaming {
         .load(shards.toString))), "corpus_bucket")
     val servePath = Bucketing.liveVersion(base).get._2
     // later segments arrive through a real file source, one per batch
-    graft.streaming.StreamExec.runSourceForeachBatch(s) {
-      s.readStream
-        .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "shard-0[1-9].warc.gz")
-        .format("binaryFile").load(shards.toString)
-    } { (batch, _) =>
+    val append = ForeachBatch { (batch, _) =>
       val fresh = Dedup.newAgainstCorpus(curatedBatch(batch),
         s.read.parquet(servePath), "text")
       Bucketing.appendPartitioned(s, servePath,
         corpusWithBucket(fresh), "corpus_bucket")
       ()
     }
+    StreamExec.runSourceStream(s, append)(laterShards(s, shards))
     // serve: tokenizer tail over the pinned version — bootstrap +
     // appends ≡ the batch corpusCanon set, so the pack output shares
     // the batch oracle
@@ -445,8 +449,8 @@ object Streaming {
     // with the batch path bit-for-bit.
     QueryDef("q_scan_stream", (s, dir) => {
       val elems = centsElems(s, dir)
-      graft.streaming.StreamExec.runStreaming(
-        s, elems, graft.streaming.StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a),
+      StreamExec.runStreamingAppend[Elem[Long]](s, elems,
+        ds => StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a).apply(SStream(ds)).ds.toDF(),
         quantum = streamQuantum(elems.size))
         .select(col("seq"), col("value").as("run_sum"))
     },
@@ -476,9 +480,9 @@ object Streaming {
     // Same oracle as q_map_accum.
     QueryDef("q_delta_stream", (s, dir) => {
       val elems = centsElems(s, dir)
-      graft.streaming.StreamExec.runStreaming(
-        s, elems, graft.streaming.StreamPipes.mapAccumTws(0L)(
-          (a: Long, prev: Long) => (a, a - prev)),
+      StreamExec.runStreamingAppend[Elem[Long]](s, elems,
+        ds => StreamPipes.mapAccumTws(0L)((a: Long, prev: Long) => (a, a - prev))
+          .apply(SStream(ds)).ds.toDF(),
         quantum = streamQuantum2(elems.size))
         .select(col("seq"), col("value").as("delta"))
     },
@@ -493,12 +497,11 @@ object Streaming {
     // choice must not change a pipe's semantics.
     QueryDef("q_parquet_sink_stream", (s, dir) => {
       val elems = centsElems(s, dir)
-      graft.streaming.StreamExec.runStreamingToParquetSink[Elem[Long]](
-        s, elems,
-        ds => graft.streaming.StreamPipes.mapAccumTws(0L)(
-            (a: Long, prev: Long) => (a, a - prev))
-          .apply(graft.core.SStream(ds)).ds.toDF(),
-        quantum = streamQuantum2(elems.size))
+      StreamExec.runStreamingAppend[Elem[Long]](s, elems,
+        ds => StreamPipes.mapAccumTws(0L)((a: Long, prev: Long) => (a, a - prev))
+          .apply(SStream(ds)).ds.toDF(),
+        quantum = streamQuantum2(elems.size),
+        sink = StreamExec.StreamSink.Parquet(Scratch.fresh("psink_")))
         .select(col("seq"), col("value").as("delta"))
     },
       // same pipe, real parquet sink: the read-back must equal the batch
@@ -515,7 +518,9 @@ object Streaming {
     // operator, not fixture volume.
     QueryDef("q_zip_stream", (s, dir) => {
       val (ev, ord) = zipSideElems(s, dir, ZipStreamN)
-      graft.streaming.StreamExec.runStreamingZip(s, ev, ord)
+      StreamExec.runStreamingJoin2(s, ev, ord,
+        (a: Dataset[Elem[Long]], b: Dataset[Elem[Long]]) =>
+          StreamPipes.zipSourcesStream(SStream(a), SStream(b)).ds.toDF())
         .select(col("seq"), (col("value._1") + col("value._2")).as("value"))
     },
       // streaming-executed twin: same pairing, bounded to ZipStreamN
@@ -529,9 +534,11 @@ object Streaming {
     QueryDef("q_zip_outer_stream", (s, dir) => {
       val (ev, ord) = zipSideElems(s, dir, ZipStreamN)
       val ordEven = ord.filter(_.seq % 2 == 0)
-      graft.streaming.StreamExec.runStreamingZipLeft(
-          s, ev, ordEven, maxSeq = ZipStreamN,
-          sentinelA = sq => Elem(sq, 0L), sentinelB = sq => Elem(sq, 0L))
+      val sentinels = StreamPipes.sentinelSeqs(ZipStreamN).map(Elem(_, 0L))
+      StreamExec.runStreamingJoin2(s, ev, ordEven,
+          (a: Dataset[Elem[Long]], b: Dataset[Elem[Long]]) =>
+            StreamPipes.zipSourcesStreamLeft(SStream(a), SStream(b), ZipStreamN).ds.toDF(),
+          tailA = sentinels, tailB = sentinels)
         .select(col("seq"), col("value._1").as("iv"), col("value._2").as("ov"))
     },
       // left-outer positional join: odd positions carry NULL (the right
@@ -788,13 +795,13 @@ object Streaming {
       val m = qualityModelFor(s, dir, sanitized = true)
       val outDir = Scratch.fresh("qserve_").toString
       val shards = stagedTextShards(s, dir)
-      graft.streaming.StreamExec.runSourceForeachBatch(s) {
-        s.readStream.option("maxFilesPerTrigger", "1").text(shards.toString)
-      } { (batch, _) =>
+      val score = ForeachBatch { (batch, _) =>
         QualityModel.scoreWith(parseStagedTextLine(batch), "doc_id", "text", m)
           .write.mode("append").parquet(outDir)
         ()
       }
+      StreamExec.runSourceStream(s, score)(
+        s.readStream.option("maxFilesPerTrigger", "1").text(shards.toString))
       s.read.parquet(outDir)
     },
       // serve ≡ batch: the streamed broadcast-model scorer shares the
@@ -894,8 +901,9 @@ object Streaming {
         graft.core.Elem(i.toLong, t)
       }
       Sketches.kmvStreamSummary(
-        graft.streaming.StreamExec.runStreaming(s, elems,
-          Sketches.kmvStreamPipe, quantum = streamQuantum2(texts.size)))
+        StreamExec.runStreamingAppend[Elem[String]](s, elems,
+          ds => Sketches.kmvStreamPipe(SStream(ds)).ds.toDF(),
+          quantum = streamQuantum2(texts.size)))
     },
       Sketches.kmvWordSketchSql),
 

@@ -4,7 +4,7 @@ import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
 
 import graft.core._
 
@@ -22,15 +22,16 @@ import graft.core._
   *
   * Stateless pipes (map/filter/concatMap — the `graft.core.Pipes`
   * closures) run unchanged on the streaming Dataset. Ordered-stateful
-  * scan/mapAccum run via [[StreamPipes.scanStateful]]
-  * (flatMapGroupsWithState), whose GroupState is the carried fold
-  * accumulator.
+  * scan/mapAccum run via [[StreamPipes.scanTws]]/[[StreamPipes.mapAccumTws]]
+  * (transformWithState), whose ValueState is the carried fold
+  * accumulator. The query starts through [[StreamExec.start]], so its
+  * state-store provider comes from its plan like every other stream's.
   *
   * Scale note: this single-key scan serializes by design — the reference
   * semantics are a strictly ordered stream. Real 100-TB streaming jobs
   * shard by key first (`groupByKey(k)` + the same stateful op per key),
   * which this implementation supports by construction
-  * (flatMapGroupsWithState is already keyed); the single-key instance is
+  * (transformWithState is already keyed); the single-key instance is
   * the faithful port of the reference's contract.
   */
 object Incremental {
@@ -119,35 +120,19 @@ object Incremental {
     def stop(): Unit = query.stop()
   }
 
-  /** Open a pipe for incremental feeding (`feedPipe`'s loop). The pipe
-    * must be streaming-capable (stateless core pipes and
-    * [[StreamPipes]] stateful ones are; cut/iterative pipes are batch
-    * constructs).
+  /** Open a pipe for incremental feeding (`feedPipe`'s loop), its
+    * outputs landing in the memory table `name`. The pipe must be
+    * streaming-capable (stateless core pipes and [[StreamPipes]] stateful
+    * ones are; cut/iterative pipes are batch constructs).
     */
-  private val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
   def open[A: TypeTag, B: TypeTag](spark: SparkSession, pipe: Pipe[A, B],
                                    name: String): Feeder[A, B] = {
     implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-    implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
     implicit val sq: SQLContext = spark.sqlContext
     val input = MemoryStream[Elem[A]]
-    val out = pipe(SStream(input.toDS())).ds
-    // scope the RocksDB provider around query START (the query captures
-    // the conf then) — the same uniform-backend contract as
-    // StreamExec.runProtocol, so no caller has to hand-set it
-    val prev = spark.conf.getOption(RocksKey)
-    spark.conf.set(RocksKey, RocksProvider)
-    val query =
-      try out.writeStream
-        .format("memory").queryName(name).outputMode(OutputMode.Append())
-        .start()
-      finally prev match {
-        case Some(v) => spark.conf.set(RocksKey, v)
-        case None    => spark.conf.unset(RocksKey)
-      }
+    val out = pipe(SStream(input.toDS())).ds.toDF()
+    val query = StreamExec.start(out, OutputMode.Append(),
+      StreamExec.StreamSink.Memory, name)
     val cut = pipe match {
       case c: StreamPipes.CutPipe[_, _] =>
         // a reused CutPipe instance would otherwise report the PREVIOUS
@@ -187,8 +172,8 @@ object Incremental {
   }
 }
 
-/** Streaming-capable stateful pipes (the `transformWithState`/
-  * `flatMapGroupsWithState` side of SURVEY.md §2.4).
+/** Streaming-capable stateful pipes (the `transformWithState` side of
+  * SURVEY.md §2.4) and the stream-stream positional zips.
   */
 object StreamPipes {
 
@@ -271,66 +256,12 @@ object StreamPipes {
     new CutPipe(inner, acc)
   }
 
-  /** scan over a streaming Dataset: flatMapGroupsWithState holds the
-    * accumulator; within each micro-batch rows are folded in seq order.
-    * Output seq = input seq (same convention as the batch scan).
-    */
-  def scanStateful[A: TypeTag, B: TypeTag](zero: B)(step: (B, A) => B): Pipe[A, B] =
-    new Pipe[A, B] {
-      def apply(in: SStream[A]): SStream[B] = {
-        implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-        implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-        implicit val encBraw: Encoder[B] =
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[B]()
-        implicit val encKey: Encoder[Int] = Encoders.scalaInt
-        val out = in.ds.groupByKey(_ => 0)
-          .flatMapGroupsWithState[B, Elem[B]](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-            (_: Int, rows: Iterator[Elem[A]], state: GroupState[B]) =>
-              var acc = state.getOption.getOrElse(zero)
-              val outs = rows.toSeq.sortBy(_.seq).map { e =>
-                acc = step(acc, e.value); Elem(e.seq, acc)
-              }
-              state.update(acc)
-              outs.iterator
-          }
-        SStream(out)
-      }
-    }
-
-  /** mapAccum over a streaming Dataset (same machinery, outputs only). */
-  def mapAccumStateful[A: TypeTag, S: TypeTag, B: TypeTag](s0: S)(
-      f: (A, S) => (S, B)): Pipe[A, B] =
-    new Pipe[A, B] {
-      def apply(in: SStream[A]): SStream[B] = {
-        implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-        implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-        implicit val encS: Encoder[S] =
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[S]()
-        implicit val encKey: Encoder[Int] = Encoders.scalaInt
-        val out = in.ds.groupByKey(_ => 0)
-          .flatMapGroupsWithState[S, Elem[B]](
-            OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-            (_: Int, rows: Iterator[Elem[A]], state: GroupState[S]) =>
-              var s = state.getOption.getOrElse(s0)
-              val outs = rows.toSeq.sortBy(_.seq).map { e =>
-                val (s2, b) = f(e.value, s); s = s2; Elem(e.seq, b)
-              }
-              state.update(s)
-              outs.iterator
-          }
-        SStream(out)
-      }
-    }
-
   // ----- transformWithState variants (SURVEY §1.2/§7.6) -----
   //
-  // The non-deprecated arbitrary-state API. Requires the RocksDB state
-  // store provider on the session:
-  //   spark.sql.streaming.stateStore.providerClass =
-  //     org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-  // Within a micro-batch rows fold in seq order; the ValueState carries
-  // the accumulator across batches — exactly the suspended continuation
+  // The non-deprecated arbitrary-state API. It requires the RocksDB state
+  // store provider, which StreamExec.start picks from the plan. Within a
+  // micro-batch rows fold in seq order; the ValueState carries the
+  // accumulator across batches — exactly the suspended continuation
   // of the reference's feedPipe.
 
   /** Single-key ordered stateful processor: fold rows in seq order
@@ -496,7 +427,7 @@ object StreamPipes {
     * Structured Streaming's outer-join contract drives the shape:
     * unmatched preserved-side rows emit only after BOTH watermarks pass
     * their event time, so a bounded feed must push sentinel rows through
-    * both sides to flush the tail (see StreamExec.runStreamingZipLeft).
+    * both sides to flush the tail (see [[sentinelSeqs]]).
     * `maxSeq` bounds the REAL positions: rows at seq ≥ maxSeq are
     * watermark-advancing sentinels, excluded from the output by a
     * predicate on the left EVENT-TIME attribute — Catalyst cannot push
@@ -524,4 +455,16 @@ object StreamPipes {
         struct(col("value").as("_1"), col("__bvalue").as("_2")).as("value"))
       .as[Elem[(A, Option[B])]])
   }
+
+  /** Seqs of the two sentinel rows that flush a
+    * [[zipSourcesStreamLeft]] whose real positions are below `maxSeq`.
+    * Fed one pair per micro-batch (the `tailA`/`tailB` of
+    * [[StreamExec.runStreamingJoin2]]), the first advances both
+    * watermarks past every real position and the second flushes the
+    * unmatched left rows the advanced watermark released (watermarks
+    * computed in batch N gate emission in batch N+1). Seqs step by two
+    * DAYS of µs, far past any delayThreshold.
+    */
+  def sentinelSeqs(maxSeq: Long): Seq[Long] =
+    Seq(1, 2).map(k => maxSeq + k * 172800000000L)
 }

@@ -1,12 +1,14 @@
 package graft.streaming
 
+import java.nio.file.Path
+
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql._
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
-
-import graft.core._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Execute a streaming-capable pipe END-TO-END through Structured
   * Streaming and hand back the landed result as a DataFrame — the
@@ -16,12 +18,15 @@ import graft.core._
   * batch `q_scan` checks the streaming `q_scan_stream`, because a pipe's
   * semantics must not depend on which engine path ran it.
   *
-  * Mechanics: the input rows become a [[MemoryStream]] fed in fixed-size
-  * quanta (each quantum = one micro-batch, so cross-batch state carry in
-  * the `transformWithState` store is genuinely exercised — with the
+  * Mechanics: the input rows become [[MemoryStream]]s fed in fixed-size
+  * chunks (each feed round = one micro-batch, so cross-batch state carry
+  * in the `transformWithState` store is genuinely exercised — with the
   * default quantum a sf0.01 run takes 3 micro-batches, sf0.1 takes 25);
-  * the memory sink accumulates Append-mode output; the sink table is the
-  * returned DataFrame.
+  * the [[StreamSink]] lands the output (memory table, parquet files with
+  * a checkpoint, or a `foreachBatch` body) and its read-back is the
+  * returned DataFrame. Every query, including an [[Incremental]] Feeder's,
+  * starts in [[start]], so the state-store and partition policy has one
+  * definition.
   *
   * Scale note: the driver-side feed is the correctness fixture's shape,
   * not the deployment shape — a production run replaces MemoryStream with
@@ -32,55 +37,72 @@ import graft.core._
   */
 object StreamExec {
 
+  /** Where a run lands its output. */
+  sealed trait StreamSink
+  object StreamSink {
+    /** An in-memory table; the run returns it. */
+    case object Memory extends StreamSink
+
+    /** The deployable sink shape: parquet files under `base/data`, each
+      * micro-batch committed atomically to the sink's `_spark_metadata`
+      * log, offsets and state under `base/ckpt` — a later run on the same
+      * base resumes from the checkpoint instead of re-emitting. The run
+      * returns the read-back of the files, what a downstream job consumes.
+      */
+    final case class Parquet(base: Path) extends StreamSink {
+      def data: Path = base.resolve("data")
+      def ckpt: Path = base.resolve("ckpt")
+    }
+
+    /** Maintenance side-effects that are not row emission: each
+      * micro-batch invokes `body(batchDf, batchId)` on the driver, which
+      * does batch-API work (index append, snapshot merge, versioned
+      * publish). The query's product is whatever the body built; the run
+      * returns an empty DataFrame.
+      */
+    final case class ForeachBatch(body: (DataFrame, Long) => Unit) extends StreamSink
+  }
+
   private val nameCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The previous run's memory-sink table, dropped when the NEXT run
-    * starts: callers consume each result before building the next query
-    * (Verify writes, Bench counts), so at most one finished sink stays
-    * registered — repeated runs can't accumulate full result copies in
-    * driver memory.
+  /** The previous run's memory-sink table, dropped when the NEXT
+    * memory-sink run starts: callers consume each result before building
+    * the next query (Verify writes, Bench counts), so at most one finished
+    * sink stays registered — repeated runs can't accumulate full result
+    * copies in driver memory.
     */
   @volatile private var lastSinkTable: Option[String] = None
 
-  /** Physical plan of the last micro-batch of the most recent
-    * [[runStreaming]] call — lets specs assert the stateful operator
-    * (TransformWithStateExec / StateStore) actually executed, which a
-    * batch read of the memory sink cannot show.
+  /** Physical plan of the last micro-batch of the most recent run — lets
+    * specs assert the stateful operator (TransformWithStateExec /
+    * StateStore) actually executed, which a batch read of the sink cannot
+    * show.
     */
   @volatile private[graft] var lastStreamingPlan: String = ""
 
-  private val RocksKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksProvider =
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** RocksDB is REQUIRED by `transformWithState` and nothing else in
-    * this library's streaming surface. The other stateful shapes
-    * (stream-stream joins, watermarked aggregations/dedup) run on the
-    * default HDFS-backed provider, whose per-batch commit for the
-    * near-empty per-partition stores these proof queries carry is one
-    * tiny delta file per store — where RocksDB pays a flush + changelog
-    * + maintenance round per store instance per batch (a stream-stream
-    * join commits FOUR stores per partition). Measured in the
-    * optimization round (interleaved A/B, min-of-reps): the provider
-    * choice is per-QUERY, detected from the logical plan, so the TWS
-    * pipes keep RocksDB and everything else stops paying for it. At
-    * production state sizes the trade flips — large state wants RocksDB
-    * — which is why this stays a per-plan decision, not a global conf.
-    * `graft.streaming.forceRocksDB=true` (session conf) is the explicit
-    * large-state escape hatch: it forces RocksDB for every stateful
-    * query regardless of plan shape.
+  /** The state-store provider a query starts with, read from its plan;
+    * `None` keeps Spark's default. RocksDB is REQUIRED by
+    * `transformWithState` and nothing else in this library's streaming
+    * surface. The other stateful shapes (stream-stream joins, watermarked
+    * aggregations/dedup) run on the default HDFS-backed provider, whose
+    * per-batch commit for the near-empty per-partition stores these proof
+    * queries carry is one tiny delta file per store — where RocksDB pays a
+    * flush + changelog + maintenance round per store instance per batch (a
+    * stream-stream join commits FOUR stores per partition). Measured in the
+    * optimization round (interleaved A/B, min-of-reps): the TWS pipes keep
+    * RocksDB and everything else stops paying for it. At production state
+    * sizes the trade flips — large state wants RocksDB — which is why this
+    * stays a per-plan decision, not a global conf. The logical CLASS is
+    * matched, not nodeName text, so a node rename cannot silently flip
+    * providers.
     */
-  private val ForceRocksKey = "graft.streaming.forceRocksDB"
-
-  private def needsRocks(out: DataFrame): Boolean =
-    // the logical CLASS, not nodeName text (advisor finding: a node
-    // rename would silently flip providers); TransformWithStateInPySpark
-    // is the Python twin — this library never plans it, but matching the
-    // class hierarchy keeps the check rename-proof for the node we use
-    out.sparkSession.conf.get(ForceRocksKey, "false").equalsIgnoreCase("true") ||
-      out.queryExecution.logical.collectFirst {
-        case p: org.apache.spark.sql.catalyst.plans.logical.TransformWithState => p
-      }.isDefined
+  private[graft] def stateStoreProvider(out: DataFrame): Option[String] =
+    out.queryExecution.logical.collectFirst { case p: TransformWithState => p }
+      .map(_ => RocksProvider)
 
   /** State-partition count for the proof queries, fixed at query start
     * from the session conf: every micro-batch commits one store (four for
@@ -111,131 +133,79 @@ object StreamExec {
     }
   }
 
-  /** The start/track/feed/stop protocol shared by every runner: drop the
-    * previous sink, scope the state-store + partition confs, start the
-    * query in `mode` on the plan `mk` builds, record the sink table
+  /** The one place a streaming query starts: the plan's state-store
+    * provider is scoped around `start()` (the query clones the session
+    * confs there), and `out` is wired to `sink`. A memory sink is
+    * registered as the table `name`. The partition count is the caller's
+    * session value: [[run]] scopes it to [[StreamShufflePartitions]], an
+    * [[Incremental]] Feeder keeps the session's.
+    */
+  private[streaming] def start(out: DataFrame, mode: OutputMode, sink: StreamSink,
+                               name: String): StreamingQuery =
+    withConfs(out.sparkSession, stateStoreProvider(out).map(ProviderKey -> _).toSeq: _*) {
+      val w = out.writeStream.outputMode(mode)
+      (sink match {
+        case StreamSink.Memory => w.format("memory").queryName(name)
+        case p: StreamSink.Parquet =>
+          w.format("parquet").option("path", p.data.toString)
+            .option("checkpointLocation", p.ckpt.toString)
+        case StreamSink.ForeachBatch(body) =>
+          w.foreachBatch((df: Dataset[Row], id: Long) => body(df.toDF(), id))
+      }).start()
+    }
+
+  /** The start/feed/stop protocol behind every runner: drop the previous
+    * memory table, build the plan, [[start]] it, record the memory table
     * BEFORE feeding (a run that throws mid-feed must still have its view
     * dropped by the next run), drive the feed callback `mk` returned,
-    * capture the executed plan, stop the query, return the sink table.
-    * `mk` runs inside the scoped confs and receives the SQLContext the
-    * MemoryStream constructor needs; it returns the output plan plus the
-    * callback that feeds its input stream(s).
+    * capture the executed plan, stop the query, return the sink's
+    * read-back. The partition count is scoped over the whole run, so a
+    * `foreachBatch` body's batch jobs see it too. `mk` receives the
+    * SQLContext the MemoryStream constructor needs.
     */
-  private def runProtocol(spark: SparkSession, mode: OutputMode)(
-      mk: SQLContext => (DataFrame,
-        org.apache.spark.sql.streaming.StreamingQuery => Unit)): DataFrame = {
-    lastSinkTable.foreach(spark.catalog.dropTempView)
+  private def run(spark: SparkSession, mode: OutputMode, sink: StreamSink)(
+      mk: SQLContext => (DataFrame, StreamingQuery => Unit)): DataFrame = {
+    val memory = sink == StreamSink.Memory
+    if (memory) lastSinkTable.foreach(spark.catalog.dropTempView)
     withConfs(spark, ShuffleKey -> StreamShufflePartitions) {
       val (out, feed) = mk(spark.sqlContext)
-      // provider chosen from the PLAN (see needsRocks), set before
-      // start() — the query reads it once at start
-      val provider =
-        if (needsRocks(out)) Seq(RocksKey -> RocksProvider) else Nil
-      withConfs(spark, provider: _*) {
-        val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-        val query = out.writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .start()
-        lastSinkTable = Some(name)
-        try {
-          feed(query)
-          lastStreamingPlan = capturedExplain(query)
-        } finally query.stop()
-        spark.table(name)
+      val name = if (memory) s"graft_stream_${nameCounter.incrementAndGet()}" else ""
+      val query = start(out, mode, sink, name)
+      if (memory) lastSinkTable = Some(name)
+      try {
+        feed(query)
+        lastStreamingPlan = capturedExplain(query)
+      } finally query.stop()
+      sink match {
+        case StreamSink.Memory => spark.table(name)
+        case p: StreamSink.Parquet => spark.read.parquet(p.data.toString)
+        case _: StreamSink.ForeachBatch => spark.emptyDataFrame
       }
     }
   }
 
-  /** Run `pipe` over `elems` via Structured Streaming (quantum rows per
-    * micro-batch) and return the memory-sink table. The RocksDB state
-    * store provider is set for the run and restored after (required by
-    * `transformWithState`).
+  /** One MemoryStream and the chunks the feed loop pushes into it. An
+    * empty chunk adds nothing: it pads a side with fewer chunks so that
+    * later chunks (tails, sentinels) line up by round.
     */
-  def runStreaming[A: TypeTag, B: TypeTag](
-      spark: SparkSession, elems: Seq[Elem[A]], pipe: Pipe[A, B],
-      quantum: Int = 4096): DataFrame =
-    runProtocol(spark, OutputMode.Append()) { implicit sq =>
-      implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-      val input = MemoryStream[Elem[A]]
-      val out = pipe(SStream(input.toDS())).ds.toDF()
-      (out, query => elems.grouped(quantum).foreach { chunk =>
-        input.addData(chunk)
-        query.processAllAvailable()
-      })
+  private final class Feed[T](stream: MemoryStream[T], chunks: Seq[Seq[T]]) {
+    def rounds: Int = chunks.size
+    def add(i: Int): Unit = chunks.lift(i).filter(_.nonEmpty).foreach(c => stream.addData(c))
+  }
+
+  /** The one feed loop: round i adds the i-th chunk of every stream that
+    * still has one, then drains it as one micro-batch.
+    */
+  private def feedRounds(query: StreamingQuery, feeds: Feed[_]*): Unit =
+    (0 until feeds.map(_.rounds).max).foreach { i =>
+      feeds.foreach(_.add(i))
+      query.processAllAvailable()
     }
 
-  /** Run the streaming zipSource end-to-end: two MemoryStreams fed in
-    * quanta (sides advance at different rates within a quantum round)
-    * through [[StreamPipes.zipSourcesStream]]'s stream-stream join, landed
-    * in the memory sink. Both sides' seqs must be dense positions (the
-    * zip's documented precondition); quanta are ordered prefix chunks.
-    *
-    * `rounds` bounds the micro-batch count, not the rows: a stream-stream
-    * join batch costs ~4 s of dual state-store commits across the shuffle
-    * partitions regardless of row count, so the batch count — two proves
-    * cross-batch pairing — is the whole cost model.
-    */
-  def runStreamingZip[A: TypeTag, B: TypeTag](
-      spark: SparkSession, as: Seq[Elem[A]], bs: Seq[Elem[B]],
-      rounds: Int = 2): DataFrame =
-    // RocksDB here too (via runProtocol): the join itself doesn't require
-    // it, but all streaming proof queries should exercise ONE state-store
-    // backend so the recorded cost model (per-partition store commits) is
-    // uniform
-    runProtocol(spark, OutputMode.Append()) { implicit sq =>
-      implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-      implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-      val ia = MemoryStream[Elem[A]]
-      val ib = MemoryStream[Elem[B]]
-      val out = StreamPipes.zipSourcesStream(SStream(ia.toDS()), SStream(ib.toDS())).ds.toDF()
-      (out, { query =>
-        val ca = as.grouped(math.max(1, (as.size + rounds - 1) / rounds)).toSeq
-        val cb = bs.grouped(math.max(1, (bs.size + rounds - 1) / rounds)).toSeq
-        (0 until math.max(ca.size, cb.size)).foreach { i =>
-          if (i < ca.size) ia.addData(ca(i))
-          if (i < cb.size) ib.addData(cb(i))
-          query.processAllAvailable()
-        }
-      })
-    }
-
-  /** Run the LEFT-OUTER streaming zip ([[StreamPipes.zipSourcesStreamLeft]])
-    * end-to-end: both sides fed in `rounds` prefix chunks, then
-    * `sentinelRounds` far-future rows pushed through BOTH streams, one
-    * micro-batch each — the first advances both watermarks past every
-    * real position, the second flushes the unmatched left rows the
-    * advanced watermark released (watermarks computed in batch N gate
-    * emission in batch N+1).
-    */
-  def runStreamingZipLeft[A: TypeTag, B: TypeTag](
-      spark: SparkSession, as: Seq[Elem[A]], bs: Seq[Elem[B]],
-      maxSeq: Long, sentinelA: Long => Elem[A], sentinelB: Long => Elem[B],
-      rounds: Int = 2, sentinelRounds: Int = 2): DataFrame =
-    runProtocol(spark, OutputMode.Append()) { implicit sq =>
-      implicit val encA: Encoder[Elem[A]] = Elem.enc[A]
-      implicit val encB: Encoder[Elem[B]] = Elem.enc[B]
-      val ia = MemoryStream[Elem[A]]
-      val ib = MemoryStream[Elem[B]]
-      val out = StreamPipes.zipSourcesStreamLeft(
-        SStream(ia.toDS()), SStream(ib.toDS()), maxSeq).ds.toDF()
-      (out, { query =>
-        val ca = as.grouped(math.max(1, (as.size + rounds - 1) / rounds)).toSeq
-        val cb = bs.grouped(math.max(1, (bs.size + rounds - 1) / rounds)).toSeq
-        (0 until math.max(ca.size, cb.size)).foreach { i =>
-          if (i < ca.size) ia.addData(ca(i))
-          if (i < cb.size) ib.addData(cb(i))
-          query.processAllAvailable()
-        }
-        // sentinel seqs step by two DAYS of µs per round, far past any
-        // delayThreshold — each round is its own micro-batch
-        (1 to sentinelRounds).foreach { k =>
-          val sq = maxSeq + k * 172800000000L
-          ia.addData(sentinelA(sq))
-          ib.addData(sentinelB(sq))
-          query.processAllAvailable()
-        }
-      })
-    }
+  private def memoryStream[T <: Product : TypeTag](implicit sq: SQLContext): MemoryStream[T] = {
+    implicit val enc: Encoder[T] = ExpressionEncoder[T]()
+    MemoryStream[T]
+  }
 
   /** Run `pipe` over the TRUE unbounded rate source
     * ([[graft.core.Sources.rateCounter]]) for a bounded wall-clock window
@@ -252,10 +222,10 @@ object StreamExec {
     * unbounded spin.
     */
   def runRateStream[B: TypeTag](
-      spark: SparkSession, pipe: Pipe[Long, B], n: Long,
+      spark: SparkSession, pipe: graft.core.Pipe[Long, B], n: Long,
       rowsPerSecond: Long = 50000,
       timeoutMs: Long = 60000): DataFrame =
-    runProtocol(spark, OutputMode.Append()) { _ =>
+    run(spark, OutputMode.Append(), StreamSink.Memory) { _ =>
       val src = graft.core.Sources.rateCounter(spark, rowsPerSecond)
       val out = pipe(src).ds.toDF().filter(org.apache.spark.sql.functions.col("seq") < n)
       (out, { query =>
@@ -286,75 +256,60 @@ object StreamExec {
   private def runBuilt[T <: Product : TypeTag](
       spark: SparkSession, mode: OutputMode, elems: Seq[T],
       build: Dataset[T] => DataFrame, quantum: Int,
-      tail: Seq[T] = Nil): DataFrame =
-    runProtocol(spark, mode) { implicit sq =>
-      implicit val encT: Encoder[T] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T]()
-      val input = MemoryStream[T]
-      val out = build(input.toDS())
-      (out, { query =>
-        elems.grouped(quantum).foreach { chunk =>
-          input.addData(chunk)
-          query.processAllAvailable()
-        }
-        // tail rows each get their OWN micro-batch: a watermark computed
-        // at the end of batch N only gates emission during batch N+1, so
-        // closing windows deterministically takes one batch to advance
-        // the watermark and another to flush
-        tail.foreach { t =>
-          input.addData(t)
-          query.processAllAvailable()
-        }
-      })
+      tail: Seq[T], sink: StreamSink): DataFrame =
+    run(spark, mode, sink) { implicit sq =>
+      val input = memoryStream[T]
+      // tail rows each get their OWN micro-batch: a watermark computed
+      // at the end of batch N only gates emission during batch N+1, so
+      // closing windows deterministically takes one batch to advance
+      // the watermark and another to flush
+      (build(input.toDS()), feedRounds(_,
+        new Feed(input, elems.grouped(quantum).toSeq ++ tail.map(Seq(_)))))
     }
 
-  /** Run an arbitrary streaming plan end-to-end in Append output mode
-    * (the [[runStreaming]] shape for DataFrame-level builders that are
-    * not `Pipe`s — e.g. watermark-bounded dedup). `tail` rows are fed
-    * one micro-batch each AFTER the main quanta — sentinel rows that
-    * advance the watermark and then flush the windows it closed.
+  /** Run a streaming plan end-to-end in Append output mode: `elems` fed
+    * `quantum` rows per micro-batch through `build` — a `Pipe` over
+    * `Elem` rows (`ds => pipe(SStream(ds)).ds.toDF()`) or any
+    * DataFrame-level builder (e.g. watermark-bounded dedup). `tail` rows
+    * are fed one micro-batch each AFTER the main quanta — sentinel rows
+    * that advance the watermark and then flush the windows it closed.
     */
   def runStreamingAppend[T <: Product : TypeTag](
       spark: SparkSession, elems: Seq[T],
       build: Dataset[T] => DataFrame, quantum: Int = 4096,
-      tail: Seq[T] = Nil): DataFrame =
-    runBuilt(spark, OutputMode.Append(), elems, build, quantum, tail)
+      tail: Seq[T] = Nil, sink: StreamSink = StreamSink.Memory): DataFrame =
+    runBuilt(spark, OutputMode.Append(), elems, build, quantum, tail, sink)
 
   /** Run a TWO-INPUT streaming plan end-to-end in Append mode — the
-    * runner for stream-stream EVENT-TIME joins built directly from two
-    * typed row streams (watermarks + time-range condition are the
-    * builder's responsibility). Both sides feed in `rounds` ordered
-    * prefix chunks (cross-batch join state genuinely exercised), then
-    * `tailA`/`tailB` sentinel rows each get their OWN micro-batch — the
-    * watermark a batch computes only gates state eviction in the next,
-    * so flushing deterministically needs the extra rounds.
+    * runner for stream-stream joins built directly from two typed row
+    * streams: the positional zips ([[StreamPipes.zipSourcesStream]] and
+    * its left-outer twin) and event-time joins (watermarks + time-range
+    * condition are the builder's responsibility). Each side feeds in
+    * `rounds` ordered prefix chunks of `ceil(n / rounds)` rows (sides
+    * advance at different rates within a round, and cross-batch join
+    * state is genuinely exercised), then `tailA`/`tailB` sentinel rows
+    * each get their OWN micro-batch — the watermark a batch computes only
+    * gates state eviction in the next, so flushing deterministically needs
+    * the extra rounds.
+    *
+    * `rounds` bounds the micro-batch count, not the rows: a stream-stream
+    * join batch costs ~4 s of dual state-store commits across the shuffle
+    * partitions regardless of row count, so the batch count — two proves
+    * cross-batch pairing — is the whole cost model.
     */
   def runStreamingJoin2[A <: Product : TypeTag, B <: Product : TypeTag](
       spark: SparkSession, as: Seq[A], bs: Seq[B],
       build: (Dataset[A], Dataset[B]) => DataFrame,
       rounds: Int = 2, tailA: Seq[A] = Nil, tailB: Seq[B] = Nil): DataFrame =
-    runProtocol(spark, OutputMode.Append()) { implicit sq =>
-      implicit val encA: Encoder[A] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[A]()
-      implicit val encB: Encoder[B] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[B]()
-      val ia = MemoryStream[A]
-      val ib = MemoryStream[B]
-      val out = build(ia.toDS(), ib.toDS())
-      (out, { query =>
-        val ca = as.grouped(math.max(1, (as.size + rounds - 1) / rounds)).toSeq
-        val cb = bs.grouped(math.max(1, (bs.size + rounds - 1) / rounds)).toSeq
-        (0 until math.max(ca.size, cb.size)).foreach { i =>
-          if (i < ca.size) ia.addData(ca(i))
-          if (i < cb.size) ib.addData(cb(i))
-          query.processAllAvailable()
-        }
-        (0 until math.max(tailA.size, tailB.size)).foreach { i =>
-          if (i < tailA.size) ia.addData(tailA(i))
-          if (i < tailB.size) ib.addData(tailB(i))
-          query.processAllAvailable()
-        }
-      })
+    run(spark, OutputMode.Append(), StreamSink.Memory) { implicit sq =>
+      val ia = memoryStream[A]
+      val ib = memoryStream[B]
+      val ca = as.grouped(math.max(1, (as.size + rounds - 1) / rounds)).toSeq
+      val cb = bs.grouped(math.max(1, (bs.size + rounds - 1) / rounds)).toSeq
+      val n = math.max(ca.size, cb.size)
+      (build(ia.toDS(), ib.toDS()), feedRounds(_,
+        new Feed(ia, ca.padTo(n, Nil) ++ tailA.map(Seq(_))),
+        new Feed(ib, cb.padTo(n, Nil) ++ tailB.map(Seq(_)))))
     }
 
   /** Run a streaming AGGREGATION end-to-end in Complete output mode:
@@ -366,116 +321,29 @@ object StreamExec {
   def runStreamingComplete[T <: Product : TypeTag](
       spark: SparkSession, elems: Seq[T],
       build: Dataset[T] => DataFrame, quantum: Int = 4096): DataFrame =
-    runBuilt(spark, OutputMode.Complete(), elems, build, quantum)
-
-  /** Run a MemoryStream-fed query into a `foreachBatch` SINK — the
-    * Structured Streaming pattern for maintenance side-effects that are
-    * not row emission: each micro-batch invokes `body(batchDf, batchId)`
-    * on the driver, and the body performs batch-API work (index append,
-    * snapshot merge, versioned publish). No memory sink exists; the
-    * query's product is whatever the body built. Quanta feed exactly
-    * like [[runStreaming]], so each quantum is one genuine micro-batch.
-    */
-  def runForeachBatch[T <: Product : TypeTag](
-      spark: SparkSession, elems: Seq[T], quantum: Int = 4096)(
-      body: (DataFrame, Long) => Unit): Unit =
-    // pass-through stream into a driver body: no state store exists, so
-    // no provider override (the body's batch jobs read session confs)
-    withConfs(spark, ShuffleKey -> StreamShufflePartitions) {
-      implicit val sq: SQLContext = spark.sqlContext
-      implicit val encT: Encoder[T] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T]()
-      val input = MemoryStream[T]
-      val query = input.toDS().toDF().writeStream
-        .foreachBatch((df: Dataset[Row], id: Long) => body(df.toDF(), id))
-        .start()
-      try elems.grouped(quantum).foreach { chunk =>
-        input.addData(chunk)
-        query.processAllAvailable()
-      } finally query.stop()
-    }
+    runBuilt(spark, OutputMode.Complete(), elems, build, quantum, Nil, StreamSink.Memory)
 
   /** Run a plan whose SOURCE is a real unbounded stream reader (file
-    * discovery here; the same contract covers Kafka/rate readers) to the
-    * memory sink — the production-ingestion twin of the MemoryStream
-    * proofs: NO driver-fed rows anywhere. The reader discovers its input
-    * itself, `maxFilesPerTrigger` on the reader decides the micro-batch
+    * discovery here; the same contract covers Kafka/rate readers) into
+    * `sink` — the production-ingestion twin of the MemoryStream proofs:
+    * NO driver-fed rows anywhere. The reader discovers its input itself,
+    * `maxFilesPerTrigger` on the reader decides the micro-batch
     * granularity, and one processAllAvailable drains every discovered
     * file as its own genuine micro-batch. Reference `sourceHandleLines`
     * (`Combinators.hs:245-257`) executed as an unbounded tailing source.
     * `mkOut` is by-name so the readStream plan is built inside the
     * scoped confs, like every other runner.
     */
-  def runSourceStream(spark: SparkSession)(mkOut: => DataFrame): DataFrame =
-    runProtocol(spark, OutputMode.Append()) { _ =>
+  def runSourceStream(spark: SparkSession, sink: StreamSink = StreamSink.Memory)(
+      mkOut: => DataFrame): DataFrame =
+    run(spark, OutputMode.Append(), sink) { _ =>
       (mkOut, _.processAllAvailable())
-    }
-
-  /** [[runForeachBatch]] with a REAL stream reader as the source — the
-    * production maintenance-ingest shape with no driver-fed rows: the
-    * reader discovers arriving files itself (`maxFilesPerTrigger` sets
-    * batch granularity), and each discovered batch invokes `body` for
-    * batch-API side-effects (index append, versioned publish). The
-    * query's product is whatever the body built.
-    */
-  def runSourceForeachBatch(spark: SparkSession)(mkSource: => DataFrame)(
-      body: (DataFrame, Long) => Unit): Unit =
-    // file-discovery stream into a driver body: stateless, no provider
-    // override needed (see runForeachBatch)
-    withConfs(spark, ShuffleKey -> StreamShufflePartitions) {
-      val query = mkSource.writeStream
-        .foreachBatch((df: Dataset[Row], id: Long) => body(df.toDF(), id))
-        .start()
-      try query.processAllAvailable() finally query.stop()
-    }
-
-  /** Run `build` over MemoryStream-fed rows into a REAL parquet file
-    * sink with a checkpointLocation — the deployable sink shape: each
-    * micro-batch's files are committed atomically to the sink's
-    * `_spark_metadata` log, and offsets live in the checkpoint, so a
-    * restarted query resumes instead of re-emitting (exactly-once
-    * between source and sink). Returns the READ-BACK of the sink
-    * directory: the oracle checks the files a downstream job would
-    * actually consume, not an in-memory table. Sink + checkpoint are
-    * a per-call [[Scratch.fresh]] dir, removed on JVM exit.
-    */
-  def runStreamingToParquetSink[T <: Product : TypeTag](
-      spark: SparkSession, elems: Seq[T],
-      build: Dataset[T] => DataFrame, quantum: Int = 4096): DataFrame =
-    withConfs(spark, ShuffleKey -> StreamShufflePartitions) {
-      implicit val sq: SQLContext = spark.sqlContext
-      implicit val encT: Encoder[T] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T]()
-      val input = MemoryStream[T]
-      val out = build(input.toDS())
-      // provider from the plan, set before start (see needsRocks)
-      val provider =
-        if (needsRocks(out)) Seq(RocksKey -> RocksProvider) else Nil
-      withConfs(spark, provider: _*) {
-      val base = Scratch.fresh("psink_")
-      val data = base.resolve("data")
-      val ckpt = base.resolve("ckpt")
-      val query = out.writeStream
-        .format("parquet")
-        .option("path", data.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(OutputMode.Append())
-        .start()
-      try {
-        elems.grouped(quantum).foreach { chunk =>
-          input.addData(chunk)
-          query.processAllAvailable()
-        }
-        lastStreamingPlan = capturedExplain(query)
-      } finally query.stop()
-      spark.read.parquet(data.toString)
-      }
     }
 
   /** `query.explain()` prints to stdout; capture it (public API — avoids
     * reaching into StreamExecution internals for the executed plan).
     */
-  private[graft] def capturedExplain(query: org.apache.spark.sql.streaming.StreamingQuery): String = {
+  private[graft] def capturedExplain(query: StreamingQuery): String = {
     val buf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) { query.explain() }
     buf.toString("UTF-8")

@@ -50,6 +50,24 @@ class DocAuditSpec extends AnyFunSuite {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
   }
 
+  test("every StreamExec, StreamPipes and Incremental member named in README.md or QUERIES.md exists") {
+    // the streaming docs named runners and pipes that a refactor had
+    // deleted; resolve each `Obj.member` against the compiled object
+    val named = Seq("README.md", "QUERIES.md").flatMap { d =>
+      val txt = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(d)), "UTF-8")
+      "\\b(StreamExec|StreamPipes|Incremental)\\.(\\w+)".r.findAllMatchIn(txt)
+        .map(m => (d, m.group(1), m.group(2)))
+    }.distinct
+    assert(named.nonEmpty, "no streaming member named in the docs")
+    def exists(obj: String, member: String): Boolean = {
+      val cls = s"graft.streaming.$obj$$"
+      Class.forName(cls).getMethods.exists(_.getName == member) ||
+        scala.util.Try(Class.forName(cls + member)).isSuccess
+    }
+    val broken = named.filterNot { case (_, obj, member) => exists(obj, member) }
+    assert(broken.isEmpty, s"docs name members that do not exist: ${broken.mkString(", ")}")
+  }
+
   test("every runMain in README.md and the verify skill names a class with a static main") {
     val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
     val named = docs.flatMap { d =>

@@ -47,6 +47,29 @@ class PlanSpec extends SparkSpec {
     assert(e.getMessage.contains("q_nope"), e.getMessage)
   }
 
+  test("PlanDump: two dumps of the same queries are identical text") {
+    // q_zip_with plans lambdas, q_csv_source reads a staged scratch file,
+    // and both rebuild with fresh expression and exchange ids
+    val names = Seq("q_zip_with", "q_csv_source")
+    def dump(): String = {
+      val md = graft.core.Scratch.fresh("plandump_twice_").resolve("plans.md")
+      PlanDump.write(spark, dir, md.toString, names)
+      java.nio.file.Files.readString(md)
+    }
+    val (a, b) = (dump(), dump())
+    val diff = a.linesIterator.zip(b.linesIterator).find { case (x, y) => x != y }
+    assert(a == b, s"first differing lines: $diff")
+    assert(!"#[0-9]".r.findFirstIn(a).isDefined && !a.contains("$$Lambda$"), a)
+    val raw = "MapElements graft.core.Compose$$$Lambda$4662/0x00007f73a12f5268@68a1d32f, " +
+      "obj#380: graft.core.Elem, [seq#12L, value#13], [plan_id=73], " +
+      "Location: InMemoryFileIndex(1 paths)[file:/tmp/x/graft_1354546585930934467/pqcb_4_8_1236630..., " +
+      "PartitionFilters"
+    assert(PlanDump.normalize(raw) ==
+      "MapElements graft.core.Compose$$$Lambda, obj#N: graft.core.Elem, [seq#N, value#N], " +
+      "[plan_id=N], Location: InMemoryFileIndex(1 paths)[file:<scratch>/pqcb_4_8_..., " +
+      "PartitionFilters")
+  }
+
   test("filter is pushed down to the parquet scan") {
     val df = SparkEntry.queries("q_filter")(spark, dir)
     val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString("\n")

@@ -656,8 +656,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Seq[Double], Double)].collect().sortBy(_._1).toSeq
     var grown = initial
     var fired = 0
-    graft.streaming.StreamExec.runForeachBatch(
-      spark, arriving, quantum = arriving.size / 2 + 1) { (batch, _) =>
+    val ingest = graft.streaming.StreamExec.StreamSink.ForeachBatch { (batch, _) =>
       val b = batch.toDF("vec_id", "emb", "nrm")
       Bucketing.appendPartitioned(spark, servePath,
         Similarity.ivfPqIndexRowsWith(b, origSeeds, origCb), "cell")
@@ -668,6 +667,8 @@ class SimilaritySpec extends SparkSpec {
           driftThresholdPpm = 1L)._2.isDefined) fired += 1
       ()
     }
+    graft.streaming.StreamExec.runStreamingAppend[(Long, Seq[Double], Double)](
+      spark, arriving, _.toDF(), quantum = arriving.size / 2 + 1, sink = ingest)
     assert(fired >= 1, "drift gate never fired mid-stream")
     // maintenance published NEW versions of ITS base only: the pinned
     // serving version still carries its own commit sentinel and the

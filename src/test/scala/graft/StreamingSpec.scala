@@ -37,7 +37,7 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental stateful scan ≡ batch scan (state carried across quanta)") {
     val inputs = Seq(1, 2, 3, 4, 5, 6, 7, 8, 9, 10)
-    val pipe = StreamPipes.scanStateful(0)((b: Int, a: Int) => b + a)
+    val pipe = StreamPipes.scanTws(0)((b: Int, a: Int) => b + a)
     val f = Incremental.open(spark, pipe, "inc_scan")
     try {
       val o1 = f.feed(inputs.take(4))
@@ -54,7 +54,7 @@ class StreamingSpec extends SparkSpec {
   test("incremental mapAccum ≡ batch mapAccum") {
     val inputs = Seq(5, 1, 7, 2, 9)
     val f = Incremental.open(spark,
-      StreamPipes.mapAccumStateful(0)((a: Int, s: Int) => (s + a, s + a)), "inc_acc")
+      StreamPipes.mapAccumTws(0)((a: Int, s: Int) => (s + a, s + a)), "inc_acc")
     try {
       val got = Seq(inputs.take(2), inputs.slice(2, 4), inputs.drop(4)).flatMap(q => f.feed(q))
       val batch = (Sources.fromSeq(spark, inputs)
@@ -196,77 +196,94 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+  test("transformWithState scan/mapAccum ≡ batch across quanta (non-deprecated API)") {
+    // no provider conf set here: the Feeder gets RocksDB from its plan,
+    // keeps the session's partition count, and leaves the session as it was
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val partsKey = "spark.sql.shuffle.partitions"
+    assert(!spark.conf.getOption(providerKey).contains(StreamExec.RocksProvider))
+    val prevParts = spark.conf.get(partsKey)
+    spark.conf.set(partsKey, "3")
+    val f =
+      try Incremental.open(spark,
+        StreamPipes.scanTws(0)((b: Int, a: Int) => b + a), "tws_scan")
+      finally spark.conf.set(partsKey, prevParts)
+    try {
+      assert(f.feed(Seq(1, 2, 3)) == Seq(1, 3, 6))
+      assert(f.feed(Seq(4)) == Seq(10))       // state carried across quanta
+      val plan = StreamExec.capturedExplain(
+        spark.streams.active.find(_.name == "tws_scan").get)
+      assert(plan.contains("TransformWithState") && plan.matches("(?s).*hashpartitioning\\([^)]*, 3\\).*"),
+        s"expected a 3-partition TransformWithState plan in:\n$plan")
+    } finally f.stop()
+    assert(!spark.conf.getOption(providerKey).contains(StreamExec.RocksProvider),
+      "opening the Feeder left the RocksDB provider on the session")
+    val g = Incremental.open(spark,
+      StreamPipes.mapAccumTws(0)((a: Int, s: Int) => (s + a, s)), "tws_macc")
+    try {
+      assert(g.feed(Seq(5, 6)) == Seq(0, 5))  // emits the PRE-state
+      assert(g.feed(Seq(7)) == Seq(11))
+    } finally g.stop()
   }
 
-  test("transformWithState scan/mapAccum ≡ batch across quanta (non-deprecated API)") {
-    withRocksDb {
-      val f = Incremental.open(spark,
-        StreamPipes.scanTws(0)((b: Int, a: Int) => b + a), "tws_scan")
-      try {
-        assert(f.feed(Seq(1, 2, 3)) == Seq(1, 3, 6))
-        assert(f.feed(Seq(4)) == Seq(10))       // state carried across quanta
-      } finally f.stop()
-      val g = Incremental.open(spark,
-        StreamPipes.mapAccumTws(0)((a: Int, s: Int) => (s + a, s)), "tws_macc")
-      try {
-        assert(g.feed(Seq(5, 6)) == Seq(0, 5))  // emits the PRE-state
-        assert(g.feed(Seq(7)) == Seq(11))
-      } finally g.stop()
-    }
+  test("state-store policy: transformWithState gets RocksDB; stream-stream join and watermark dedup keep Spark's default") {
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    implicit val encE: Encoder[Elem[Long]] = Elem.enc[Long]
+    implicit val encT: Encoder[(java.sql.Timestamp, String)] =
+      ExpressionEncoder[(java.sql.Timestamp, String)]()
+    def longs() = SStream(MemoryStream[Elem[Long]].toDS())
+    val tws = StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a).apply(longs()).ds.toDF()
+    val join = StreamPipes.zipSourcesStream(longs(), longs()).ds.toDF()
+    val dedup = graft.operators.Dedup.streamingExact(
+      MemoryStream[(java.sql.Timestamp, String)].toDS().toDF("ts", "k"),
+      "ts", "10 seconds", Seq("k"))
+    assert(StreamExec.stateStoreProvider(tws) == Some(StreamExec.RocksProvider))
+    assert(StreamExec.RocksProvider.endsWith(".RocksDBStateStoreProvider"))
+    assert(StreamExec.stateStoreProvider(join).isEmpty)
+    assert(StreamExec.stateStoreProvider(dedup).isEmpty)
   }
 
   test("transformWithState take/pairs/consecutive carry state across quanta") {
-    withRocksDb {
-      val ft = Incremental.open(spark, StreamPipes.takeTws[Int](4), "tws_take")
-      try {
-        assert(ft.feed(Seq(1, 2, 3)) == Seq(1, 2, 3))
-        assert(ft.feed(Seq(4, 5, 6)) == Seq(4)) // cut lands mid-quantum
-        assert(ft.feed(Seq(7)).isEmpty)
-      } finally ft.stop()
-      val fp = Incremental.open(spark, StreamPipes.pairsTws[Int], "tws_pairs")
-      try {
-        assert(fp.feed(Seq(1, 2, 3)) == Seq((1, 2), (2, 3)))
-        assert(fp.feed(Seq(4)) == Seq((3, 4))) // pair spans the quantum gap
-      } finally fp.stop()
-      val fc = Incremental.open(spark, StreamPipes.consecutiveTws[Int](2), "tws_consec")
-      try {
-        assert(fc.feed(Seq(1, 2, 3)) == Seq(Seq(), Seq(1), Seq(1, 2)))
-        assert(fc.feed(Seq(4)) == Seq(Seq(2, 3)))
-      } finally fc.stop()
-    }
+    val ft = Incremental.open(spark, StreamPipes.takeTws[Int](4), "tws_take")
+    try {
+      assert(ft.feed(Seq(1, 2, 3)) == Seq(1, 2, 3))
+      assert(ft.feed(Seq(4, 5, 6)) == Seq(4)) // cut lands mid-quantum
+      assert(ft.feed(Seq(7)).isEmpty)
+    } finally ft.stop()
+    val fp = Incremental.open(spark, StreamPipes.pairsTws[Int], "tws_pairs")
+    try {
+      assert(fp.feed(Seq(1, 2, 3)) == Seq((1, 2), (2, 3)))
+      assert(fp.feed(Seq(4)) == Seq((3, 4))) // pair spans the quantum gap
+    } finally fp.stop()
+    val fc = Incremental.open(spark, StreamPipes.consecutiveTws[Int](2), "tws_consec")
+    try {
+      assert(fc.feed(Seq(1, 2, 3)) == Seq(Seq(), Seq(1), Seq(1, 2)))
+      assert(fc.feed(Seq(4)) == Seq(Seq(2, 3)))
+    } finally fc.stop()
   }
 
   test("streaming takeWhile/dropWhile: cut carried across quanta (incremental ≡ batch)") {
-    withRocksDb {
-      val inputs = Seq(1, 2, 3, 7, 2, 1)
-      val quanta = Seq(inputs.take(2), inputs.slice(2, 4), inputs.drop(4))
-      val batchTW = (Sources.fromSeq(spark, inputs)
-        |> Pipes.takeWhile[Int](_ < 5)).into(Sinks.sinkList)
-      val f = Incremental.open(spark, StreamPipes.takeWhileTws[Int](_ < 5), "tws_tw")
-      try {
-        // cut lands MID-quantum (at 7); later quanta emit nothing even
-        // though their elements satisfy the predicate again
-        assert(quanta.flatMap(q => f.feed(q)) == batchTW && batchTW == Seq(1, 2, 3))
-      } finally f.stop()
-      // the emitting form is the composite `dropWhile p >> id` — the
-      // first failing element is consumed by dropWhile, not passed
-      val batchDW = (Sources.fromSeq(spark, inputs)
-        |> Pipes.suffixAfter(Pipes.dropWhile[Int](_ < 5))).into(Sinks.sinkList)
-      val g = Incremental.open(spark, StreamPipes.dropWhileTws[Int](_ < 5), "tws_dw")
-      try {
-        assert(quanta.flatMap(q => g.feed(q)) == batchDW && batchDW == Seq(2, 1))
-      } finally g.stop()
-    }
+    val inputs = Seq(1, 2, 3, 7, 2, 1)
+    val quanta = Seq(inputs.take(2), inputs.slice(2, 4), inputs.drop(4))
+    val batchTW = (Sources.fromSeq(spark, inputs)
+      |> Pipes.takeWhile[Int](_ < 5)).into(Sinks.sinkList)
+    val f = Incremental.open(spark, StreamPipes.takeWhileTws[Int](_ < 5), "tws_tw")
+    try {
+      // cut lands MID-quantum (at 7); later quanta emit nothing even
+      // though their elements satisfy the predicate again
+      assert(quanta.flatMap(q => f.feed(q)) == batchTW && batchTW == Seq(1, 2, 3))
+    } finally f.stop()
+    // the emitting form is the composite `dropWhile p >> id` — the
+    // first failing element is consumed by dropWhile, not passed
+    val batchDW = (Sources.fromSeq(spark, inputs)
+      |> Pipes.suffixAfter(Pipes.dropWhile[Int](_ < 5))).into(Sinks.sinkList)
+    val g = Incremental.open(spark, StreamPipes.dropWhileTws[Int](_ < 5), "tws_dw")
+    try {
+      assert(quanta.flatMap(q => g.feed(q)) == batchDW && batchDW == Seq(2, 1))
+    } finally g.stop()
   }
 
   test("streaming zipSource: stream-stream equi-join on seq, positions pair across quanta") {
@@ -315,8 +332,9 @@ class StreamingSpec extends SparkSpec {
   test("StreamExec.runStreaming: scan lands batch-identical output via a stateful streaming plan") {
     val elems = (1L to 10L).map(i => Elem(i, i))
     // quantum=4 → three micro-batches: state carry is genuinely exercised
-    val df = StreamExec.runStreaming(spark, elems,
-      StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a), quantum = 4)
+    val df = StreamExec.runStreamingAppend[Elem[Long]](spark, elems,
+      ds => StreamPipes.scanTws(0L)((b: Long, a: Long) => b + a).apply(SStream(ds)).ds.toDF(),
+      quantum = 4)
     val got = df.collect()
       .map(r => (r.getAs[Long]("seq"), r.getAs[Long]("value"))).sortBy(_._1)
     assert(got.map(_._2).toList == List(1L, 3L, 6L, 10L, 15L, 21L, 28L, 36L, 45L, 55L),
@@ -324,6 +342,9 @@ class StreamingSpec extends SparkSpec {
     // the proof the oracle row can't give: the executed plan is stateful
     assert(StreamExec.lastStreamingPlan.contains("TransformWithState"),
       s"expected a TransformWithState operator in:\n${StreamExec.lastStreamingPlan}")
+    // every runner starts its query on 4 state partitions
+    assert(StreamExec.lastStreamingPlan.matches("(?s).*hashpartitioning\\([^)]*, 4\\).*"),
+      s"expected 4 state partitions in:\n${StreamExec.lastStreamingPlan}")
   }
 
   test("StreamExec.runStreamingComplete: final snapshot equals the batch agg") {
@@ -426,72 +447,68 @@ class StreamingSpec extends SparkSpec {
       "no _spark_metadata transaction log in the file sink output")
   }
 
-  test("feedPipe leftover-inputs branch: take(3) fed 10 → 7 leftovers (Conduino.hs:253-256)") { withRocksDb {
-      val f = Incremental.open(spark,
-        StreamPipes.takeTwsCut[Int](spark, 3), "inc_cut_take")
-      try {
-        f.feedEither(1 to 10) match {
-          case Right((leftover, outs)) =>
-            assert(outs == Seq(1, 2, 3))
-            assert(leftover == (4 to 10))
-          case Left(outs) => fail(s"pipe should have terminated, got Left($outs)")
-        }
-        // already terminated: every later quantum is all-leftover, no output
-        f.feedEither(Seq(11, 12)) match {
-          case Right((leftover, outs)) =>
-            assert(leftover == Seq(11, 12) && outs.isEmpty)
-          case Left(outs) => fail(s"expected Right, got Left($outs)")
-        }
-      } finally f.stop()
-  }
-  }
-
-  test("feedPipe exact-fill: take(3) fed exactly 3 terminates with ZERO leftovers") { withRocksDb {
-      val f = Incremental.open(spark,
-        StreamPipes.takeTwsCut[Int](spark, 3), "inc_cut_exact")
-      try {
-        // under-fill: still awaiting input → Left
-        assert(f.feedEither(Seq(1, 2)) == Left(Seq(1, 2)))
-        // the n-th element itself flips the branch — no over-feed needed
-        f.feedEither(Seq(3)) match {
-          case Right((leftover, outs)) =>
-            assert(outs == Seq(3) && leftover.isEmpty)
-          case Left(outs) => fail(s"expected Right, got Left($outs)")
-        }
-      } finally f.stop()
-  }
+  test("feedPipe leftover-inputs branch: take(3) fed 10 → 7 leftovers (Conduino.hs:253-256)") {
+    val f = Incremental.open(spark,
+      StreamPipes.takeTwsCut[Int](spark, 3), "inc_cut_take")
+    try {
+      f.feedEither(1 to 10) match {
+        case Right((leftover, outs)) =>
+          assert(outs == Seq(1, 2, 3))
+          assert(leftover == (4 to 10))
+        case Left(outs) => fail(s"pipe should have terminated, got Left($outs)")
+      }
+      // already terminated: every later quantum is all-leftover, no output
+      f.feedEither(Seq(11, 12)) match {
+        case Right((leftover, outs)) =>
+          assert(leftover == Seq(11, 12) && outs.isEmpty)
+        case Left(outs) => fail(s"expected Right, got Left($outs)")
+      }
+    } finally f.stop()
   }
 
-  test("feedPipe takeWhile cut: failing element is consumed, remainder is leftover") { withRocksDb {
-      val f = Incremental.open(spark,
-        StreamPipes.takeWhileTwsCut[Int](spark, _ < 4), "inc_cut_tw")
-      try {
-        f.feedEither(Seq(1, 2, 3, 4, 5, 6)) match {
-          case Right((leftover, outs)) =>
-            assert(outs == Seq(1, 2, 3))
-            // 4 was awaited and tested (consumed) — only 5, 6 are leftover
-            assert(leftover == Seq(5, 6))
-          case Left(outs) => fail(s"expected Right, got Left($outs)")
-        }
-      } finally f.stop()
-  }
-  }
-
-  test("feedPipe leftover boundary survives downstream |> composition") { withRocksDb {
-      val pipe = StreamPipes.takeTwsCut[Int](spark, 2) |> Pipes.map[Int, Int](_ * 10)
-      val f = Incremental.open(spark, pipe, "inc_cut_composed")
-      try {
-        f.feedEither(Seq(1, 2, 3, 4)) match {
-          case Right((leftover, outs)) =>
-            assert(outs == Seq(10, 20))
-            assert(leftover == Seq(3, 4))
-          case Left(outs) => fail(s"expected Right, got Left($outs)")
-        }
-      } finally f.stop()
-  }
+  test("feedPipe exact-fill: take(3) fed exactly 3 terminates with ZERO leftovers") {
+    val f = Incremental.open(spark,
+      StreamPipes.takeTwsCut[Int](spark, 3), "inc_cut_exact")
+    try {
+      // under-fill: still awaiting input → Left
+      assert(f.feedEither(Seq(1, 2)) == Left(Seq(1, 2)))
+      // the n-th element itself flips the branch — no over-feed needed
+      f.feedEither(Seq(3)) match {
+        case Right((leftover, outs)) =>
+          assert(outs == Seq(3) && leftover.isEmpty)
+        case Left(outs) => fail(s"expected Right, got Left($outs)")
+      }
+    } finally f.stop()
   }
 
-  test("feedPipe: reopening a used CutPipe resets the boundary (no stale termination)") { withRocksDb {
+  test("feedPipe takeWhile cut: failing element is consumed, remainder is leftover") {
+    val f = Incremental.open(spark,
+      StreamPipes.takeWhileTwsCut[Int](spark, _ < 4), "inc_cut_tw")
+    try {
+      f.feedEither(Seq(1, 2, 3, 4, 5, 6)) match {
+        case Right((leftover, outs)) =>
+          assert(outs == Seq(1, 2, 3))
+          // 4 was awaited and tested (consumed) — only 5, 6 are leftover
+          assert(leftover == Seq(5, 6))
+        case Left(outs) => fail(s"expected Right, got Left($outs)")
+      }
+    } finally f.stop()
+  }
+
+  test("feedPipe leftover boundary survives downstream |> composition") {
+    val pipe = StreamPipes.takeTwsCut[Int](spark, 2) |> Pipes.map[Int, Int](_ * 10)
+    val f = Incremental.open(spark, pipe, "inc_cut_composed")
+    try {
+      f.feedEither(Seq(1, 2, 3, 4)) match {
+        case Right((leftover, outs)) =>
+          assert(outs == Seq(10, 20))
+          assert(leftover == Seq(3, 4))
+        case Left(outs) => fail(s"expected Right, got Left($outs)")
+      }
+    } finally f.stop()
+  }
+
+  test("feedPipe: reopening a used CutPipe resets the boundary (no stale termination)") {
     val p = StreamPipes.takeTwsCut[Int](spark, 3)
     val f1 = Incremental.open(spark, p, "inc_cut_reuse_a")
     try assert(f1.feedEither(1 to 5).isRight) // terminate in the first feeder
@@ -506,30 +523,39 @@ class StreamingSpec extends SparkSpec {
         case Left(outs) => fail(s"expected Right, got Left($outs)")
       }
     } finally f2.stop()
-  } }
+  }
 
-  test("feedPipe parity: streaming cut leftovers agree with the batch take cut") { withRocksDb {
-      val inputs = 1 to 10
-      val n = 3L
-      // batch: takeN passes the first n in seq order; everything after is
-      // exactly the streaming feeder's leftover set
-      val batchOut = (Sources.fromSeq(spark, inputs)
-        |> graft.core.Pipes.take[Int](n)).into(Sinks.sinkList)
-      val f = Incremental.open(spark,
-        StreamPipes.takeTwsCut[Int](spark, n), "inc_cut_parity")
-      try {
-        val Right((leftover, outs)) = f.feedEither(inputs): @unchecked
-        assert(outs == batchOut)
-        assert(leftover == inputs.filterNot(batchOut.contains))
-      } finally f.stop()
+  test("feedPipe parity: streaming cut leftovers agree with the batch take cut") {
+    val inputs = 1 to 10
+    val n = 3L
+    // batch: takeN passes the first n in seq order; everything after is
+    // exactly the streaming feeder's leftover set
+    val batchOut = (Sources.fromSeq(spark, inputs)
+      |> graft.core.Pipes.take[Int](n)).into(Sinks.sinkList)
+    val f = Incremental.open(spark,
+      StreamPipes.takeTwsCut[Int](spark, n), "inc_cut_parity")
+    try {
+      val Right((leftover, outs)) = f.feedEither(inputs): @unchecked
+      assert(outs == batchOut)
+      assert(leftover == inputs.filterNot(batchOut.contains))
+    } finally f.stop()
   }
-  }
+
+  /** The left-outer zip of positions 0..5 through the two-input runner,
+    * `sentinels` fed one micro-batch each after the data rounds.
+    */
+  private def zipLeft(lefts: Seq[Elem[Long]], rights: Seq[Elem[Long]],
+                      sentinels: Seq[Elem[Long]]) =
+    StreamExec.runStreamingJoin2(spark, lefts, rights,
+      (a: org.apache.spark.sql.Dataset[Elem[Long]], b: org.apache.spark.sql.Dataset[Elem[Long]]) =>
+        StreamPipes.zipSourcesStreamLeft(SStream(a), SStream(b), maxSeq = 6L).ds.toDF(),
+      tailA = sentinels, tailB = sentinels)
 
   test("zipSourcesStreamLeft: unmatched left positions flush as None after sentinel rounds") {
     val lefts  = (0L until 6L).map(i => Elem(i, i * 10))
     val rights = Seq(0L, 2L, 4L).map(i => Elem(i, i * 100))
-    val df = StreamExec.runStreamingZipLeft[Long, Long](spark, lefts, rights,
-      maxSeq = 6L, sentinelA = sq => Elem(sq, -1L), sentinelB = sq => Elem(sq, -1L))
+    val sentinels = StreamPipes.sentinelSeqs(6L).map(Elem(_, -1L))
+    val df = zipLeft(lefts, rights, sentinels)
     val got = df.collect()
       .map(r => (r.getAs[Long]("seq"),
         r.getAs[org.apache.spark.sql.Row]("value") match {
@@ -550,9 +576,7 @@ class StreamingSpec extends SparkSpec {
   test("zipSourcesStreamLeft: WITHOUT sentinel rounds the unmatched tail never emits") {
     val lefts  = (0L until 6L).map(i => Elem(i, i * 10))
     val rights = Seq(0L, 2L, 4L).map(i => Elem(i, i * 100))
-    val df = StreamExec.runStreamingZipLeft[Long, Long](spark, lefts, rights,
-      maxSeq = 6L, sentinelA = sq => Elem(sq, -1L), sentinelB = sq => Elem(sq, -1L),
-      sentinelRounds = 0)
+    val df = zipLeft(lefts, rights, sentinels = Nil)
     val seqs = df.collect().map(_.getAs[Long]("seq")).sorted.toSeq
     // matched rows emit immediately; the None rows are gated on a
     // watermark that never advanced — this is the behavior the sentinel
@@ -563,11 +587,11 @@ class StreamingSpec extends SparkSpec {
 
   test("parquet sink runner: read-back equals batch, _spark_metadata commit log present") {
     val elems = (1L to 10L).map(i => Elem(i - 1, i * 10))
-    val got = StreamExec.runStreamingToParquetSink[Elem[Long]](
+    val got = StreamExec.runStreamingAppend[Elem[Long]](
       spark, elems,
       ds => StreamPipes.mapAccumTws(0L)((a: Long, prev: Long) => (a, a - prev))
         .apply(SStream(ds)).ds.toDF(),
-      quantum = 3)
+      quantum = 3, sink = StreamExec.StreamSink.Parquet(graft.core.Scratch.fresh("psink_")))
     // the read-back path is the sink directory — its _spark_metadata log
     // (the atomic per-batch commit record) must exist, or this was not
     // the streaming file-sink protocol
@@ -759,6 +783,18 @@ class StreamingSpec extends SparkSpec {
     assert(split == run(1), "round-split changed the join result")
   }
 
+  /** One run of a real-file-source plan into a parquet sink at `base`
+    * through the shared streaming step; a later run on the same base
+    * resumes from the checkpoint the earlier one left there.
+    */
+  private def runToParquet(base: java.nio.file.Path)(out: => org.apache.spark.sql.DataFrame): Unit = {
+    StreamExec.runSourceStream(spark, StreamExec.StreamSink.Parquet(base))(out)
+    ()
+  }
+
+  private def dataOf(base: java.nio.file.Path): String =
+    StreamExec.StreamSink.Parquet(base).data.toString
+
   test("checkpoint restart: stopped file-source query resumes EXACTLY-ONCE from its offsets") {
     import org.apache.spark.sql.functions.{col, length}
     import spark.implicits._
@@ -769,21 +805,15 @@ class StreamingSpec extends SparkSpec {
     // query); a real file source + file sink + checkpointLocation can.
     val base = graft.core.Scratch.fresh("restart_")
     val src = java.nio.file.Files.createDirectory(base.resolve("src"))
-    val data = base.resolve("data").toString
-    val ckpt = base.resolve("ckpt").toString
     def put(name: String, lines: String*): Unit =
       java.nio.file.Files.write(src.resolve(name),
         lines.mkString("\n").getBytes("UTF-8"))
-    def runOnce(): Unit = {
-      val q = spark.readStream.text(src.toString)
+    def runOnce(): Unit = runToParquet(base) {
+      spark.readStream.text(src.toString)
         .select(col("value"), length(col("value")).as("n"))
-        .writeStream.format("parquet")
-        .option("path", data).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
     }
     def sink(): Seq[(String, Int)] =
-      spark.read.parquet(data).as[(String, Int)].collect().sortBy(_._1).toSeq
+      spark.read.parquet(dataOf(base)).as[(String, Int)].collect().sortBy(_._1).toSeq
     put("a.txt", "alpha", "bravo")
     runOnce()
     assert(sink() == Seq(("alpha", 5), ("bravo", 5)))
@@ -804,73 +834,50 @@ class StreamingSpec extends SparkSpec {
     // checkpointLocation must recover the per-key STATE STORE: u1's
     // post-restart `buy` only advances (stage 3) if its pre-stop
     // (stage=2, t=20) state survived, and u2's `cart` likewise — a fresh
-    // store would emit nothing for either. RocksDB provider scoped to
-    // the query, as in every transformWithState runner (StreamExec).
-    val prevProv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val stages = Seq("view", "cart", "buy")
-      def runOnce(srcDir: String, dataDir: String, ckptDir: String): Unit = {
-        val parsed = spark.readStream.text(srcDir)
-          .select(split(col("value"), ",").as("f"))
-          .select(col("f").getItem(0).cast("long"),
-            col("f").getItem(1), col("f").getItem(2).cast("long"))
-          .as[(Long, String, Long)]
-        val q = KeyedFunnel.advance(parsed, stages)
-          .writeStream.format("parquet")
-          .option("path", dataDir).option("checkpointLocation", ckptDir)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      def sink(dataDir: String): Seq[(Long, Int, Long)] =
-        spark.read.parquet(dataDir).as[(Long, Int, Long)].collect().sorted.toSeq
-      def put(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
-        java.nio.file.Files.write(dir.resolve(name),
-          lines.mkString("\n").getBytes("UTF-8"))
-      val batch1 = Seq("1,view,10", "2,view,10", "1,cart,20")
-      // u1 advances to buy and u2 to cart ONLY with recovered state;
-      // u3 is a new key; u2's trailing view must NOT re-advance
-      val batch2 = Seq("1,buy,30", "2,cart,25", "3,view,30", "2,view,40")
-
-      val base = graft.core.Scratch.fresh("keyed_restart_")
-      val src = java.nio.file.Files.createDirectory(base.resolve("src"))
-      val data = base.resolve("data").toString
-      val ckpt = base.resolve("ckpt").toString
-      put(src, "a.txt", batch1)
-      runOnce(src.toString, data, ckpt)
-      assert(sink(data) == Seq((1L, 1, 10L), (1L, 2, 20L), (2L, 1, 10L)),
-        s"pre-stop advancements wrong: ${sink(data)}")
-      put(src, "b.txt", batch2)
-      runOnce(src.toString, data, ckpt) // RESTART: state store must recover
-      val got = sink(data)
-      // the two advancements that REQUIRE recovered (stage, time) state
-      assert(got.contains((1L, 3, 30L)) && got.contains((2L, 2, 25L)),
-        s"state store not recovered across restart: $got")
-      // unbroken control: both batches visible to ONE query from a fresh
-      // checkpoint — the split-with-restart run must equal it exactly
-      val base2 = graft.core.Scratch.fresh("keyed_ctrl_")
-      val src2 = java.nio.file.Files.createDirectory(base2.resolve("src"))
-      put(src2, "a.txt", batch1); put(src2, "b.txt", batch2)
-      runOnce(src2.toString, base2.resolve("data").toString,
-        base2.resolve("ckpt").toString)
-      assert(got == sink(base2.resolve("data").toString),
-        "restarted run diverged from the unbroken run")
-      // idle restart: recovered state + no new files ⇒ no output
-      runOnce(src.toString, data, ckpt)
-      assert(sink(data) == got, "idle keyed restart re-emitted rows")
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // store would emit nothing for either. The shared streaming step
+    // picks RocksDB from the transformWithState plan and 4 partitions.
+    val stages = Seq("view", "cart", "buy")
+    def runOnce(srcDir: String, base: java.nio.file.Path): Unit = runToParquet(base) {
+      val parsed = spark.readStream.text(srcDir)
+        .select(split(col("value"), ",").as("f"))
+        .select(col("f").getItem(0).cast("long"),
+          col("f").getItem(1), col("f").getItem(2).cast("long"))
+        .as[(Long, String, Long)]
+      KeyedFunnel.advance(parsed, stages)
     }
+    def sink(base: java.nio.file.Path): Seq[(Long, Int, Long)] =
+      spark.read.parquet(dataOf(base)).as[(Long, Int, Long)].collect().sorted.toSeq
+    def put(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(dir.resolve(name),
+        lines.mkString("\n").getBytes("UTF-8"))
+    val batch1 = Seq("1,view,10", "2,view,10", "1,cart,20")
+    // u1 advances to buy and u2 to cart ONLY with recovered state;
+    // u3 is a new key; u2's trailing view must NOT re-advance
+    val batch2 = Seq("1,buy,30", "2,cart,25", "3,view,30", "2,view,40")
+
+    val base = graft.core.Scratch.fresh("keyed_restart_")
+    val src = java.nio.file.Files.createDirectory(base.resolve("src"))
+    put(src, "a.txt", batch1)
+    runOnce(src.toString, base)
+    assert(sink(base) == Seq((1L, 1, 10L), (1L, 2, 20L), (2L, 1, 10L)),
+      s"pre-stop advancements wrong: ${sink(base)}")
+    put(src, "b.txt", batch2)
+    runOnce(src.toString, base) // RESTART: state store must recover
+    val got = sink(base)
+    // the two advancements that REQUIRE recovered (stage, time) state
+    assert(got.contains((1L, 3, 30L)) && got.contains((2L, 2, 25L)),
+      s"state store not recovered across restart: $got")
+    // unbroken control: both batches visible to ONE query from a fresh
+    // checkpoint — the split-with-restart run must equal it exactly
+    val base2 = graft.core.Scratch.fresh("keyed_ctrl_")
+    val src2 = java.nio.file.Files.createDirectory(base2.resolve("src"))
+    put(src2, "a.txt", batch1); put(src2, "b.txt", batch2)
+    runOnce(src2.toString, base2)
+    assert(got == sink(base2),
+      "restarted run diverged from the unbroken run")
+    // idle restart: recovered state + no new files ⇒ no output
+    runOnce(src.toString, base)
+    assert(sink(base) == got, "idle keyed restart re-emitted rows")
   }
 
   test("stream-stream join checkpoint restart: JOIN state recovers across stop/start") {
@@ -881,76 +888,56 @@ class StreamingSpec extends SparkSpec {
     // inner join's buffered rows live in the JOIN state store, and a
     // left row whose partner only arrives AFTER a stop/restart can
     // match it only if that buffer was recovered from the checkpoint.
-    val prevProv = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      def side(dir: String, idName: String, tName: String) =
-        spark.readStream.text(dir)
-          .select(split(col("value"), ",").as("f"))
-          .select(col("f").getItem(0).cast("long").as(idName),
-            col("f").getItem(1).cast("long").as(tName + "_us"))
-          .withColumn(tName, timestamp_micros(col(tName + "_us")))
-          .withWatermark(tName, "1 hour")
-      def runOnce(srcA: String, srcB: String, data: String, ckpt: String): Unit = {
-        val j = side(srcA, "id", "ta")
+    // The join runs on the provider the shared step picks for it, as
+    // q_interval_stream's does.
+    def side(dir: String, idName: String, tName: String) =
+      spark.readStream.text(dir)
+        .select(split(col("value"), ",").as("f"))
+        .select(col("f").getItem(0).cast("long").as(idName),
+          col("f").getItem(1).cast("long").as(tName + "_us"))
+        .withColumn(tName, timestamp_micros(col(tName + "_us")))
+        .withWatermark(tName, "1 hour")
+    def runOnce(srcA: String, srcB: String, base: java.nio.file.Path): Unit =
+      runToParquet(base) {
+        side(srcA, "id", "ta")
           .join(side(srcB, "idb", "tb"),
             col("id") === col("idb") &&
               col("tb") >= col("ta") - expr("INTERVAL 1 HOUR") &&
               col("tb") <= col("ta") + expr("INTERVAL 1 HOUR"))
           .select(col("id"), col("ta_us"), col("tb_us"))
-        val q = j.writeStream.format("parquet")
-          .option("path", data).option("checkpointLocation", ckpt)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
       }
-      def sink(data: String): Seq[(Long, Long, Long)] =
-        spark.read.parquet(data).as[(Long, Long, Long)].collect().sorted.toSeq
-      def put(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
-        java.nio.file.Files.write(dir.resolve(name),
-          lines.mkString("\n").getBytes("UTF-8"))
-      val base = graft.core.Scratch.fresh("join_restart_")
-      val srcA = java.nio.file.Files.createDirectory(base.resolve("a"))
-      val srcB = java.nio.file.Files.createDirectory(base.resolve("b"))
-      val data = base.resolve("data").toString
-      val ckpt = base.resolve("ckpt").toString
-      // pre-stop: left ids 1 and 2 buffered; only id 1's partner arrives
-      put(srcA, "a1.txt", Seq("1,1000000", "2,2000000"))
-      put(srcB, "b1.txt", Seq("1,1500000"))
-      runOnce(srcA.toString, srcB.toString, data, ckpt)
-      assert(sink(data) == Seq((1L, 1000000L, 1500000L)), s"got ${sink(data)}")
-      // post-restart: id 2's partner arrives — it can ONLY match if the
-      // buffered left row survived the stop in the recovered join state
-      put(srcB, "b2.txt", Seq("2,2500000"))
-      runOnce(srcA.toString, srcB.toString, data, ckpt)
-      val got = sink(data)
-      assert(got.contains((2L, 2000000L, 2500000L)),
-        s"join state not recovered across restart: $got")
-      // unbroken control from a fresh checkpoint must agree exactly
-      val base2 = graft.core.Scratch.fresh("join_ctrl_")
-      val srcA2 = java.nio.file.Files.createDirectory(base2.resolve("a"))
-      val srcB2 = java.nio.file.Files.createDirectory(base2.resolve("b"))
-      put(srcA2, "a1.txt", Seq("1,1000000", "2,2000000"))
-      put(srcB2, "b1.txt", Seq("1,1500000")); put(srcB2, "b2.txt", Seq("2,2500000"))
-      runOnce(srcA2.toString, srcB2.toString,
-        base2.resolve("data").toString, base2.resolve("ckpt").toString)
-      assert(got == sink(base2.resolve("data").toString),
-        "restarted join run diverged from the unbroken run")
-      // idle restart: recovered state + no new files ⇒ no output
-      runOnce(srcA.toString, srcB.toString, data, ckpt)
-      assert(sink(data) == got, "idle join restart re-emitted rows")
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
+    def sink(base: java.nio.file.Path): Seq[(Long, Long, Long)] =
+      spark.read.parquet(dataOf(base)).as[(Long, Long, Long)].collect().sorted.toSeq
+    def put(dir: java.nio.file.Path, name: String, lines: Seq[String]): Unit =
+      java.nio.file.Files.write(dir.resolve(name),
+        lines.mkString("\n").getBytes("UTF-8"))
+    val base = graft.core.Scratch.fresh("join_restart_")
+    val srcA = java.nio.file.Files.createDirectory(base.resolve("a"))
+    val srcB = java.nio.file.Files.createDirectory(base.resolve("b"))
+    // pre-stop: left ids 1 and 2 buffered; only id 1's partner arrives
+    put(srcA, "a1.txt", Seq("1,1000000", "2,2000000"))
+    put(srcB, "b1.txt", Seq("1,1500000"))
+    runOnce(srcA.toString, srcB.toString, base)
+    assert(sink(base) == Seq((1L, 1000000L, 1500000L)), s"got ${sink(base)}")
+    // post-restart: id 2's partner arrives — it can ONLY match if the
+    // buffered left row survived the stop in the recovered join state
+    put(srcB, "b2.txt", Seq("2,2500000"))
+    runOnce(srcA.toString, srcB.toString, base)
+    val got = sink(base)
+    assert(got.contains((2L, 2000000L, 2500000L)),
+      s"join state not recovered across restart: $got")
+    // unbroken control from a fresh checkpoint must agree exactly
+    val base2 = graft.core.Scratch.fresh("join_ctrl_")
+    val srcA2 = java.nio.file.Files.createDirectory(base2.resolve("a"))
+    val srcB2 = java.nio.file.Files.createDirectory(base2.resolve("b"))
+    put(srcA2, "a1.txt", Seq("1,1000000", "2,2000000"))
+    put(srcB2, "b1.txt", Seq("1,1500000")); put(srcB2, "b2.txt", Seq("2,2500000"))
+    runOnce(srcA2.toString, srcB2.toString, base2)
+    assert(got == sink(base2),
+      "restarted join run diverged from the unbroken run")
+    // idle restart: recovered state + no new files ⇒ no output
+    runOnce(srcA.toString, srcB.toString, base)
+    assert(sink(base) == got, "idle join restart re-emitted rows")
   }
 
   test("streaming KMV == batch kmvWordSketch, invariant to quantum and arrival order") {
@@ -962,7 +949,8 @@ class StreamingSpec extends SparkSpec {
     def run(ts: Seq[String], quantum: Int): (Long, Long, Long, Long) = {
       val elems = ts.zipWithIndex.map { case (t, i) => Elem(i.toLong, t) }
       val r = Sketches.kmvStreamSummary(
-        StreamExec.runStreaming(spark, elems, Sketches.kmvStreamPipe,
+        StreamExec.runStreamingAppend[Elem[String]](spark, elems,
+          ds => Sketches.kmvStreamPipe(SStream(ds)).ds.toDF(),
           quantum = quantum)).collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
