@@ -3,6 +3,7 @@ package graft.core
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql._
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 /** Multi-stream composition — the reference's "join/union layer"
@@ -163,9 +164,22 @@ object Compose {
   /** feedbackPipe (reference `src/Data/Conduino.hs:429-434`): loop a
     * pipe's output back to its own input; every output also goes
     * downstream. No Catalyst representation exists for a cyclic plan, so
-    * this is a driver-side fixed-point loop (SURVEY.md §4.4): round k
-    * feeds round k-1's output, each round localCheckpointed to truncate
-    * lineage; stops when a round yields nothing or maxRounds is reached.
+    * this is a driver-side fixed-point loop (SURVEY.md §4.4); it stops
+    * when a round yields nothing or maxRounds is reached.
+    *
+    * Driver rounds: a round whose output fits the driver is collected,
+    * sorted by seq and renumbered there. Once a frontier is so held (at
+    * most [[SmallFrontier]] elements) and the pipe has a per-element form
+    * ([[Pipe.local]]), the next round runs on the driver over the held
+    * array and starts no Spark job. Each of its outputs passes through
+    * `Elem.enc`'s serializer and deserializer, so the next round sees
+    * exactly the value a Spark round would (a BigDecimal comes back as
+    * decimal(38,18)). A driver round whose output outgrows
+    * [[OutputCollectCap]] resumes the Spark path from its frontier.
+    * Larger frontiers, and pipes without a local form (mapM and iterM,
+    * whose effects stay task-side), run each round as Spark jobs, the
+    * rounds too large to collect checkpointed and dense-ranked. All
+    * driver-held rounds leave as one local relation.
     *
     * Output ordering: ROUND-MAJOR (BFS) — all of round k's outputs before
     * round k+1's, each round re-ranked to dense ordinals and the round
@@ -176,82 +190,96 @@ object Compose {
     * rounds (the round-1 bug). Range-guarded: up to 2^22 rounds of up to
     * 2^40 elements each, fail-fast beyond.
     */
-  /** Frontiers at or below this size are re-ranked on the driver instead
-    * of the distributed dense-rank (three extra jobs) — feedback
-    * frontiers usually shrink geometrically, so most rounds of most
-    * loops take the fast path; large frontiers keep the fully
-    * distributed one.
+  def feedbackPipe[A: TypeTag](p: Pipe[A, A], maxRounds: Int = 100)
+                              (in: SStream[A]): SStream[A] =
+    feedbackPipeEither[A](Pipes.mapInput[(Boolean, A), A, A](_._2)(p), maxRounds)(in)
+
+  /** Frontiers at or below this size are collected to the driver (and
+    * run there by a pipe with a local form) instead of checkpointed and
+    * dense-ranked: feedback frontiers usually shrink geometrically, so
+    * most rounds of most loops stay on the driver.
     */
   private val SmallFrontier = 65536
 
-  private val FeedbackSeqBits = 40
-
-  /** One feedback round → (renumbered output, its size), or (null, 0)
-    * when the round produced nothing (loop termination).
-    *
-    * `prevCount` is the size of the round's INPUT frontier (-1 when
-    * unknown, i.e. the first round). When the input was small, the
-    * round's output is collected directly — ONE Spark job per round (the
-    * pipe executes exactly once, inside the collect; re-rank and count
-    * are driver-local on the collected array). Feedback frontiers
-    * usually shrink geometrically, so after the first round most loops
-    * pay a single job per round instead of the former
-    * checkpoint+count+collect three. Large frontiers keep the fully
-    * distributed checkpoint + dense-rank path.
-    */
-  /** Cap on rows a feedback round may pull to the driver via the
-    * small-frontier fast path (the limit(cap+1) overflow probe).
+  /** Cap on the rows one round may hold on the driver: a small input
+    * does not bound the output (the pipe may fan out).
     */
   private val OutputCollectCap = 1 << 20
 
-  private def feedbackRound[A: TypeTag](rawOut: Dataset[Elem[A]], round: Long,
-                                        prevCount: Long)
-      (implicit encA: Encoder[Elem[A]]): (Dataset[Elem[A]], Long) = {
-    val spark = rawOut.sparkSession
-    def fromCollected(collected: Array[Elem[A]]): (Dataset[Elem[A]], Long) =
-      (spark.createDataset(collected.toIndexedSeq.zipWithIndex.map { case (e, i) =>
-        Elem((round << FeedbackSeqBits) | i.toLong, e.value)
-      }), collected.length.toLong)
-    def distributed(): (Dataset[Elem[A]], Long) = {
-      val mat = Materialize.checkpoint(rawOut)
-      val cnt = mat.count()
-      if (cnt == 0) (null, 0L)
-      else if (cnt <= SmallFrontier) fromCollected(mat.collect().sortBy(_.seq))
+  private val FeedbackSeqBits = 40
+
+  /** A round's renumbered output: held on the driver, or checkpointed
+    * with its size when too large to collect.
+    */
+  private sealed trait Round[A] { def size: Long }
+  private final case class Held[A](rows: Array[Elem[A]]) extends Round[A] {
+    def size: Long = rows.length.toLong
+  }
+  private final case class Stored[A](ds: Dataset[Elem[A]], size: Long) extends Round[A]
+
+  /** `out` sorted by seq and renumbered `(round << 40) | i`. */
+  private def held[A](round: Long, out: Array[Elem[A]]): Round[A] =
+    Held(out.sortBy(_.seq).zipWithIndex.map { case (e, i) =>
+      Elem((round << FeedbackSeqBits) | i.toLong, e.value)
+    })
+
+  /** One round run by Spark over its raw output `rawOut`. `prevCount` is
+    * the size of the round's input frontier (-1 when unknown). A small
+    * input collects the output through limit(cap+1): one job, the pipe
+    * executing inside the collect. Otherwise, or if the cap+1-th row
+    * exists, one job checkpoints and counts the output, which is then
+    * collected if small, else dense-ranked in place.
+    */
+  private def sparkRound[A: TypeTag](rawOut: Dataset[Elem[A]], round: Long, prevCount: Long)
+      (implicit encA: Encoder[Elem[A]]): Round[A] = {
+    def distributed(): Round[A] = {
+      val (mat, cnt) = OrderedExec.counted(rawOut)
+      if (cnt == 0) Held(Array.empty[Elem[A]])
+      else if (cnt <= SmallFrontier) held(round, mat.collect())
       else {
         require(cnt < (1L << FeedbackSeqBits),
           s"feedbackPipe: round $round produced more than 2^$FeedbackSeqBits elements")
-        (Materialize.checkpoint(dense(SStream(mat)).ds
+        Stored(Materialize.checkpoint(dense(SStream(mat)).ds
           .map(e => Elem((round << FeedbackSeqBits) | e.seq, e.value))), cnt)
       }
     }
     if (prevCount >= 0 && prevCount <= SmallFrontier) {
-      // bound the driver collect: a small INPUT does not bound the OUTPUT
-      // (the pipe may fan out), so collect through limit(cap+1) — if the
-      // cap+1-th row exists the round is too big for the driver; fall
-      // back to the distributed path (re-running the deterministic pipe,
-      // a rare one-off on the transition)
+      // an overflowing probe re-runs the deterministic pipe on the
+      // distributed path: a rare one-off on the transition
       val probe = rawOut.limit(OutputCollectCap + 1).collect()
-      if (probe.isEmpty) (null, 0L)
-      else if (probe.length <= OutputCollectCap) fromCollected(probe.sortBy(_.seq))
-      else distributed()
+      if (probe.length <= OutputCollectCap) held(round, probe) else distributed()
     } else distributed()
   }
 
-  /** feedbackPipe is the tag-blind special case of
-    * [[feedbackPipeEither]]: strip the fromUpstream flag and run `p` —
-    * ONE round loop to maintain (the round-numbering and
-    * small-frontier fixes previously had to land in two copies).
+  /** One round on the driver: `step` over the held `frontier` (every
+    * element fed back), each output through `settle`; None when the
+    * output outgrows the cap.
     */
-  def feedbackPipe[A: TypeTag](p: Pipe[A, A], maxRounds: Int = 100)
-                              (in: SStream[A]): SStream[A] =
-    feedbackPipeEither[A](Pipes.mapInput[(Boolean, A), A, A](_._2)(p), maxRounds)(in)
+  private def localRound[A](step: Elem[(Boolean, A)] => Iterator[Elem[A]],
+                            settle: Elem[A] => Elem[A],
+                            frontier: Array[Elem[A]], round: Long): Option[Round[A]] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Elem[A]]
+    val it = frontier.iterator.flatMap(e => step(Elem(e.seq, (false, e.value))))
+    while (it.hasNext && out.length <= OutputCollectCap) out += settle(it.next())
+    if (out.length > OutputCollectCap) None else Some(held(round, out.toArray))
+  }
+
+  /** `e` as a Spark round would return it: the encoder's serializer,
+    * then its deserializer.
+    */
+  private def settler[A: TypeTag]: Elem[A] => Elem[A] = {
+    val enc = ExpressionEncoder[Elem[A]]()
+    val (ser, de) = (enc.createSerializer(), enc.resolveAndBind().createDeserializer())
+    e => de(ser(e).copy())
+  }
 
   /** feedbackPipeEither (reference `src/Data/Conduino.hs:445-462`): the
     * feedback loop where the pipe can distinguish upstream input from
     * fed-back input. Spark has no `Either` encoder, so the tag is a
     * Boolean: `(fromUpstream, value)` — `(true, x)` ≡ the reference's
     * `Left x` (fresh upstream), `(false, x)` ≡ `Right x` (fed back).
-    * Same round-major loop and range guards as [[feedbackPipe]].
+    * Same round-major loop, driver rounds and range guards as
+    * [[feedbackPipe]].
     */
   def feedbackPipeEither[A: TypeTag](p: Pipe[(Boolean, A), A], maxRounds: Int = 100)
                                     (in: SStream[A]): SStream[A] = {
@@ -259,25 +287,33 @@ object Compose {
     implicit val encT: Encoder[Elem[(Boolean, A)]] = Elem.enc[(Boolean, A)]
     require(maxRounds >= 1 && maxRounds < (1 << 22),
       s"feedbackPipeEither: maxRounds $maxRounds out of range [1, 2^22)")
-    var acc: Dataset[Elem[A]] = null
-    var frontier = in.ds
-    var prevCount = -1L
-    var fromUpstream = true
+    val spark = in.spark
+    val step = p.local
+    lazy val settle = settler[A]
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Elem[A]]
+    var stored = List.empty[Dataset[Elem[A]]]
+    var frontier: Round[A] = Stored(in.ds, -1L) // the input: in Spark, size unknown
     var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
-      val up = fromUpstream
-      val tagged = SStream(frontier.map(e => Elem(e.seq, (up, e.value))))
-      val (out, cnt) = feedbackRound(p(tagged).ds, round.toLong + 1, prevCount)
-      if (out == null) done = true
-      else {
-        acc = if (acc == null) out else acc.union(out)
-        frontier = out
-        prevCount = cnt
-        fromUpstream = false
-        round += 1
+    while (round < maxRounds && frontier.size != 0) {
+      val r = round + 1L
+      def onSpark(ds: Dataset[Elem[A]], prevCount: Long): Round[A] = {
+        val up = r == 1L
+        sparkRound(p(SStream(ds.map(e => Elem(e.seq, (up, e.value))))).ds, r, prevCount)
       }
+      frontier = frontier match {
+        case Held(rows) if rows.length <= SmallFrontier && step.isDefined =>
+          localRound(step.get, settle, rows, r)
+            .getOrElse(onSpark(spark.createDataset(rows.toSeq), -1L))
+        case Held(rows) => onSpark(spark.createDataset(rows.toSeq), rows.length.toLong)
+        case Stored(ds, n) => onSpark(ds, n)
+      }
+      frontier match {
+        case Held(rows) => kept ++= rows
+        case Stored(ds, _) => stored ::= ds
+      }
+      round += 1
     }
-    SStream(if (acc == null) in.ds.filter(lit(false)) else acc)
+    val rounds = if (kept.isEmpty) stored else spark.createDataset(kept.toSeq) :: stored
+    SStream(rounds.reduceOption(_ union _).getOrElse(in.ds.filter(lit(false))))
   }
 }

@@ -65,9 +65,19 @@ final case class SStream[A](ds: Dataset[Elem[A]]) {
 trait Pipe[A, B] extends Serializable { self =>
   def apply(in: SStream[A]): SStream[B]
 
+  /** The pipe's per-element form, when it has one: what `apply` yields
+    * for one element, in order, run on the driver over values it already
+    * holds. Only pure element-wise pipes have it (map, filter, concatMap,
+    * id and their compositions); effectful ones (mapM, iterM) keep their
+    * effects task-side and have none.
+    */
+  def local: Option[Elem[A] => Iterator[Elem[B]]] = None
+
   /** `.|` composition (reference `src/Data/Conduino.hs:316-337`). */
   def |>[C](q: Pipe[B, C]): Pipe[A, C] = new Pipe[A, C] {
     def apply(in: SStream[A]): SStream[C] = q(self(in))
+    override def local: Option[Elem[A] => Iterator[Elem[C]]] =
+      for (f <- self.local; g <- q.local) yield (e: Elem[A]) => f(e).flatMap(g)
   }
 }
 
@@ -75,6 +85,7 @@ object Pipe {
   /** The identity pipe (`awaitForever yield`). */
   def id[A]: Pipe[A, A] = new Pipe[A, A] {
     def apply(in: SStream[A]): SStream[A] = in
+    override def local: Option[Elem[A] => Iterator[Elem[A]]] = Some(Iterator.single(_))
   }
 }
 

@@ -126,13 +126,17 @@ private[graft] object OrderedExec {
     }
   }
 
-  /** One job: checkpoints `in`'s rows and records each partition's run
-    * and the `summary` of each of its k blocks (over the rows in arrival
-    * order), k the fewest that make `width` blocks in all. A null seq, or
-    * a seq column that is not a Long, counts as not ascending.
+  /** One job: checkpoints `in`'s rows (unless `store` is off: then the
+    * probe's `rows` are not stored, only its runs and summaries are kept)
+    * and records each partition's run and the `summary` of each of its k
+    * blocks (over the rows in arrival order), k the fewest that make
+    * `width` blocks in all. A null seq, or a seq column that is not a
+    * Long, counts as not ascending.
     */
-  private def probe[T, S](in: Dataset[T], width: Int)(summary: Iterator[T] => S): Probe[T, S] = {
-    val rows = Materialize.checkpoint(in.sparkSession, GraftRowBridge.binary(in))
+  private def probe[T, S](in: Dataset[T], width: Int, store: Boolean = true)(
+      summary: Iterator[T] => S): Probe[T, S] = {
+    val bin = GraftRowBridge.binary(in)
+    val rows = if (store) Materialize.checkpoint(in.sparkSession, bin) else bin
     val parts = math.max(1, rows.getNumPartitions) // an empty input may have none
     val k = math.max(1, (width + parts - 1) / parts)
     val decode = GraftRowBridge.decoder(in)
@@ -172,16 +176,25 @@ private[graft] object OrderedExec {
 
   /** The per-partition summaries of a seq-ordered stream, in seq order,
     * for sinks that merge them on the driver and need no second pass.
+    * Sorted runs need only the probe's one job, so it stores nothing;
+    * otherwise `in` itself is range-sorted and summarised again.
     */
   def partials[A, S](in: Dataset[Elem[A]])(summary: Iterator[Elem[A]] => S): List[S] = {
-    val p = probe(in, 1)(summary)
+    val p = probe(in, 1, store = false)(summary)
     p.order match {
       case Some(order) => order.map(p.sums(_).head).toList
       case None =>
         val decode = p.decode
-        try summaries(GraftRowBridge.binary(sorted(p.dataset)))(it => summary(it.map(decode)))
-        finally p.rows.unpersist(blocking = false)
+        summaries(GraftRowBridge.binary(sorted(in)))(it => summary(it.map(decode)))
     }
+  }
+
+  /** `in` checkpointed (nothing upstream reruns) and its row count, in
+    * the one job that stores it.
+    */
+  def counted[T](in: Dataset[T]): (Dataset[T], Long) = {
+    val p = probe(in, 1)(_ => ())
+    (p.dataset, p.runs.map(_.rows).sum)
   }
 
   /** A seq-ordered stream checkpointed (nothing upstream reruns), plus its

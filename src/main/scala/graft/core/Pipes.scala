@@ -73,6 +73,8 @@ object Pipes {
       implicit val e: Encoder[Elem[B]] = Elem.enc[B]
       SStream(in.ds.map(x => Elem(x.seq, f(x.value))))
     }
+    override def local: Option[Elem[A] => Iterator[Elem[B]]] =
+      Some(x => Iterator.single(Elem(x.seq, f(x.value))))
   }
 
   /** mapM (reference `Combinators.hs:329-331`): effectful projection; the
@@ -96,6 +98,8 @@ object Pipes {
   def filter[A](p: A => Boolean): Pipe[A, A] = new Pipe[A, A] {
     def apply(in: SStream[A]): SStream[A] =
       SStream(in.ds.filter((e: Elem[A]) => p(e.value)))
+    override def local: Option[Elem[A] => Iterator[Elem[A]]] =
+      Some(e => if (p(e.value)) Iterator.single(e) else Iterator.empty)
   }
 
   /** Number of low bits reserved for concatMap sub-ordinals. */
@@ -107,17 +111,21 @@ object Pipes {
     * extra shuffle. Collections larger than 2^20 elements fail fast (use
     * the columnar explode operator for unbounded fan-out).
     */
-  def concatMap[A, B: TypeTag](f: A => IterableOnce[B]): Pipe[A, B] = new Pipe[A, B] {
-    def apply(in: SStream[A]): SStream[B] = {
-      implicit val e: Encoder[Elem[B]] = Elem.enc[B]
-      SStream(in.ds.flatMap { x =>
-        require(x.seq >= 0 && x.seq < (1L << (62 - SubSeqBits)),
-          s"concatMap: seq ${x.seq} out of packable range")
-        f(x.value).iterator.zipWithIndex.map { case (b, i) =>
-          require(i < (1 << SubSeqBits), "concatMap: >2^20 outputs for one input")
-          Elem((x.seq << SubSeqBits) | i.toLong, b)
-        }
-      })
+  def concatMap[A, B: TypeTag](f: A => IterableOnce[B]): Pipe[A, B] = {
+    val spread: Elem[A] => Iterator[Elem[B]] = { x =>
+      require(x.seq >= 0 && x.seq < (1L << (62 - SubSeqBits)),
+        s"concatMap: seq ${x.seq} out of packable range")
+      f(x.value).iterator.zipWithIndex.map { case (b, i) =>
+        require(i < (1 << SubSeqBits), "concatMap: >2^20 outputs for one input")
+        Elem((x.seq << SubSeqBits) | i.toLong, b)
+      }
+    }
+    new Pipe[A, B] {
+      def apply(in: SStream[A]): SStream[B] = {
+        implicit val e: Encoder[Elem[B]] = Elem.enc[B]
+        SStream(in.ds.flatMap(spread))
+      }
+      override def local: Option[Elem[A] => Iterator[Elem[B]]] = Some(spread)
     }
   }
 

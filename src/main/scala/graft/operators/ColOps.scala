@@ -32,53 +32,65 @@ object ColOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The engine-wide contract is `ts` in NANOseconds-as-Long; the
-    * harness has shipped the column both as TIMESTAMP(NANOS) and as
-    * TIMESTAMP(MICROS) across data drops, so the unit is sniffed from
-    * the file footer ONCE per path — Spark 4's schema inference accepts
-    * µs (plain timestamp type) and rejects ns, which is exactly the
-    * distinction needed — and µs values are rescaled ×1000 on read.
-    * The rescale is lossless both ways: every consumer truncates to µs
-    * (`ts div 1000`), so ns-file and µs-file runs produce identical
-    * results. Footer-only probe, memoized per path.
+  /** Spark's footer schema of the parquet at `path`, inferred (one Spark
+    * job) once per (path, mtime), so later reads pass it with `.schema`
+    * and start no job. The key includes the file mtime: a long-lived JVM
+    * that sees a fixture regenerated in place infers again instead of
+    * reading the new drop with the old schema. None when inference
+    * rejects the footer's types (Spark 4 refuses TIMESTAMP(NANOS)).
     */
-  private val eventsUnitIsMicros =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Boolean]
-  private def readEvents(spark: SparkSession, path: String): DataFrame = {
-    // memo key includes the file mtime: a long-lived JVM that sees the
-    // fixture regenerated in place re-probes instead of silently reading
-    // the new drop with the old unit (1000× wrong everywhere downstream)
+  private val footerSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), Option[StructType]]
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val mtime =
       try java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(path)).toMillis
       catch { case _: Throwable => 0L }
-    val isMicros = eventsUnitIsMicros.computeIfAbsent((path, mtime), { _ =>
-      try {
-        spark.read.parquet(path).schema("ts").dataType match {
-          case TimestampType | TimestampNTZType => java.lang.Boolean.TRUE
-          case _ => java.lang.Boolean.FALSE // already integer-typed: raw ns
-        }
-      } catch {
-        // ONLY the schema-inference rejection means "ns drop" (Spark 4's
-        // footer reader refuses TIMESTAMP(NANOS) with an analysis /
-        // unsupported-type error). Anything else — transient IO, OOM —
-        // must propagate so computeIfAbsent does NOT memoize a wrong unit
-        // for this mtime while the main read later succeeds (1000x skew).
-        case _: org.apache.spark.sql.AnalysisException => java.lang.Boolean.FALSE
+    footerSchemas.computeIfAbsent((path, mtime), { _ =>
+      try Some(spark.read.parquet(path).schema)
+      catch {
+        // ONLY the schema-inference rejection is memoized as None.
+        // Anything else — transient IO, OOM — must propagate so
+        // computeIfAbsent does NOT memoize it for this mtime (for events
+        // a wrong unit would skew every ts 1000x).
+        case _: org.apache.spark.sql.AnalysisException => None
         case e: Throwable
             if Option(e.getMessage).exists(m =>
               m.toLowerCase.contains("unsupported") ||
               m.toLowerCase.contains("illegal parquet type")) =>
-          java.lang.Boolean.FALSE
+          None
       }
+    })
+  }
+
+  /** The engine-wide contract is `ts` in NANOseconds-as-Long; the
+    * harness has shipped the column both as TIMESTAMP(NANOS) and as
+    * TIMESTAMP(MICROS) across data drops, so the unit is sniffed from
+    * the footer schema — Spark 4's schema inference accepts µs (plain
+    * timestamp type) and rejects ns, which is exactly the distinction
+    * needed — and µs values are rescaled ×1000 on read. The rescale is
+    * lossless both ways: every consumer truncates to µs (`ts div 1000`),
+    * so ns-file and µs-file runs produce identical results.
+    */
+  private def readEvents(spark: SparkSession, path: String): DataFrame = {
+    val isMicros = footerSchema(spark, path).exists(_("ts").dataType match {
+      case TimestampType | TimestampNTZType => true
+      case _ => false // already integer-typed: raw ns
     })
     val raw = spark.read.schema(EventsSchema).parquet(path)
     if (isMicros) raw.withColumn("ts", col("ts") * 1000L) else raw
   }
 
-  /** Read a harness table (events gets the explicit nanos-as-long schema). */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") readEvents(spark, s"$dir/events.parquet")
-    else spark.read.parquet(s"$dir/$name.parquet")
+  /** Read a harness table (events gets the explicit nanos-as-long
+    * schema; the others their memoized footer schema).
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    if (name == "events") readEvents(spark, path)
+    else footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path) // surfaces the rejection itself
+    }
+  }
 
   /** sourceList over a keyed table (reference `Combinators.hs:175-177`):
     * seq from an existing unique key expression — zero shuffle.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql._
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID (stopword heuristic), quality scoring, token counting,
@@ -883,15 +884,14 @@ object TextOps {
     * Scale shape (the 100-TB story): ONE corpus scan builds the
     * word-TYPE histogram `(seq, freq)` — the classic sufficient
     * statistic, vocab-bounded (~10⁵·avg-word-len rows regardless of
-    * corpus size), checkpointed once. Every subsequent round is
-    * corpus-size-INDEPENDENT: an adjacent-pair aggregate over the
-    * histogram (map-side combinable, shuffle bounded by |pair vocab|), a
-    * 1-row driver argmax (the merge decision — same driver-loop shape as
-    * [[graft.operators.Graph.pageRank]]'s convergence check), and a
-    * narrow per-row merge rewrite. Re-checkpointed per round so lineage
-    * stays O(1), not O(rounds) — measured in the optimization round:
-    * the lazy-chain alternative recompiles codegen per round/consumer
-    * and ran ~1.5× slower on every bpeRun consumer.
+    * corpus size) — and collects it once: the driver-size commitment
+    * the encode step ([[tokenizeIds]]) already makes when it collects
+    * the final state. Every round then runs on the driver with no Spark
+    * job: pair counts summed over `freq`, the argmax by `n DESC, lhs ASC,
+    * rhs ASC` in UTF-8 byte order (`UTF8String.compareTo`, Spark's string
+    * order; Java's UTF-16 `String.compareTo` differs above U+FFFF), and
+    * the merge rewrite below. The merge table and the final state leave
+    * as local relations.
     *
     * Merge application contract (pinned so the DuckDB oracle can mirror
     * it exactly): tokens live space-joined in `seq`; applying merge
@@ -931,44 +931,38 @@ object TextOps {
       .select(concat_ws(" ", expr(
         "transform(sequence(1, char_length(w)), i -> substring(w, i, 1))"))
         .as("seq"), col("freq"))
-    var vocab = graft.core.Materialize.checkpoint(hist)
+    var vocab = hist.collect().map(r => (r.getString(0), r.getLong(1)))
+    val utf8 = Ordering.fromLessThan[String] { (a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
+    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      // sequence(1, n-1) would go DESCENDING for n = 1 (Spark generates
-      // [1, 0]), so single-token words are excluded before the explode
-      val pairs = vocab
-        .filter(size(split(col("seq"), " ")) > 1)
-        .select(col("freq"), explode(expr(
-          """transform(sequence(1, size(split(seq, ' ')) - 1),
-             i -> struct(element_at(split(seq, ' '), i) AS lhs,
-                         element_at(split(seq, ' '), i + 1) AS rhs))"""))
-          .as("p"))
-        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs"))
-        .agg(sum(col("freq")).as("n"))
-      val best = pairs.orderBy(col("n").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
+      val pairs = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for ((seq, freq) <- vocab) {
+        val t = seq.split(" ", -1)
+        for (i <- 0 until t.length - 1) {
+          val k = (t(i), t(i + 1))
+          pairs(k) = pairs.getOrElse(k, 0L) + freq
+        }
+      }
+      if (pairs.isEmpty) exhausted = true
       else {
-        val (l, rr, n) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        val ((l, rr), n) = pairs.minBy { case ((a, b), n) => (-n, a, b) }(
+          Ordering.Tuple3(Ordering.Long, utf8, utf8))
         merges += ((r, l, rr, n))
-        // KEEP the per-round checkpoint (optimization round probed the
-        // lazy-projection-chain alternative and it measured ~1.5× WORSE
-        // on every bpeRun consumer: the chain deepens the plan each
-        // round, forcing re-analysis + a fresh whole-stage-codegen
-        // compile per round and per consumer, while this same-shape
-        // ckpt → replace → ckpt loop compiles once and reuses — and the
-        // string literals ride as codegen references, not source)
-        vocab = graft.core.Materialize.checkpoint(
-          vocab.withColumn("seq", trim(call_function("replace",
-            concat(lit(" "), col("seq"), lit(" ")),
-            lit(s" $l $rr "), lit(s" $l$rr ")))))
+        // Spark SQL's own replace and (space-only) trim, on its strings
+        val (from, to) = (UTF8String.fromString(s" $l $rr "), UTF8String.fromString(s" $l$rr "))
+        vocab = vocab.map { case (seq, freq) =>
+          (UTF8String.fromString(s" $seq ").replace(from, to).trim().toString, freq)
+        }
       }
       r += 1
     }
-    (merges.toSeq.toDF("round", "lhs", "rhs", "n"), vocab)
+    (merges.toSeq.toDF("round", "lhs", "rhs", "n"),
+      spark.createDataFrame(java.util.Arrays.asList(vocab.map { case (q, f) => Row(q, f) }: _*),
+        hist.schema))
   }
 
   /** Segment the corpus with a trained BPE state: per document, the

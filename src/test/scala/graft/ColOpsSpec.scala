@@ -18,6 +18,24 @@ class ColOpsSpec extends SparkSpec {
     assert(ColOps.table(spark, dir, "events").count() > 0)  // later read fine
   }
 
+  test("table infers a file's schema once per mtime") {
+    import spark.implicits._
+    val base = graft.core.Scratch.fresh("table_schema_")
+    val path = base.resolve("t.parquet")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(path.toString)
+    val (first, inferred) = counted(ColOps.table(spark, base.toString, "t"))
+    val (again, memoized) = counted(ColOps.table(spark, base.toString, "t"))
+    assert(inferred == 1 && memoized == 0, s"jobs: first $inferred, again $memoized")
+    assert(again.schema == first.schema && again.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    // rewritten with a new column and a later mtime: inferred again
+    val mtime = java.nio.file.Files.getLastModifiedTime(path).toMillis
+    Seq((2L, "b", 3.0)).toDF("k", "v", "w").write.mode("overwrite").parquet(path.toString)
+    java.nio.file.Files.setLastModifiedTime(path,
+      java.nio.file.attribute.FileTime.fromMillis(mtime + 5000))
+    val (fresh, reinferred) = counted(ColOps.table(spark, base.toString, "t"))
+    assert(reinferred == 1 && fresh.columns.toSeq == Seq("k", "v", "w"))
+  }
+
   test("kAnonymityAudit: flags exactly the groups below k, with their sizes") {
     import spark.implicits._
     val df = Seq(

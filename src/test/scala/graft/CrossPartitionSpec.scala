@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.core._
 import graft.operators._
-import org.apache.spark.{SparkException, TestBus}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -120,20 +117,6 @@ class CrossPartitionSpec extends SparkSpec {
     assert(after == before)
   }
 
-  /** `body`'s value and the Spark jobs started while it runs. */
-  private def counted[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    TestBus.drain(sc)
-    sc.addSparkListener(l)
-    try { val t = body; TestBus.drain(sc); (t, n.get) } finally sc.removeSparkListener(l)
-  }
-
-  private def jobsOf(body: => Any): Int = counted(body)._2
-
   /** `df`'s rows as sorted runs: a local relation, split in seq order. */
   private lazy val runsDf: DataFrame = {
     import spark.implicits._
@@ -165,6 +148,16 @@ class CrossPartitionSpec extends SparkSpec {
       "runningSumLong/runs" -> 1, "runningSumLong/shuffled" -> 5,
       "mapWithCarry/runs" -> 1, "mapWithCarry/shuffled" -> 4,
       "withDenseSeq" -> 3, "zipWithOrdinal" -> 3))
+  }
+
+  test("foldlCombine over sorted runs stores no copy of its input") {
+    val sc = spark.sparkContext
+    // the probe's checkpoint would stay in the map until collected: no gc here
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val (sum, jobs) = counted(src.into(Sinks.foldlCombine(0L)((b: Long, a: Long) => b + a)(_ + _)))
+    assert(sum == xs.sum && jobs == 1)
+    val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(added.isEmpty, s"stored: ${added.values.map(r => s"$r ${r.isCheckpointed}")}")
   }
 
   /** A (seq, v) DataFrame whose partitions hold exactly `parts`. */

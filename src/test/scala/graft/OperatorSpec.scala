@@ -216,6 +216,42 @@ class OperatorSpec extends SparkSpec {
     assert(got == List(8, 8, 4, 4, 2, 2, 1, 1))
   }
 
+  test("feedbackPipe: a pipe with a local form runs its later rounds on the driver") {
+    val p = Pipes.map[Long, Long](_ / 2) |> Pipes.filter[Long](_ > 0)
+    def loop(start: Long): (List[Long], Int) = counted(
+      Compose.feedbackPipe(p, maxRounds = 50)(Sources.fromSeq(spark, Seq(start))).into(Sinks.sinkList))
+    val (three, jobs3) = loop(8L)
+    val (eight, jobs8) = loop(256L)
+    assert(three == List(4L, 2L, 1L) && eight == (7 to 0 by -1).map(1L << _).toList)
+    // only the first round (over the uncollected input) and the sink run jobs
+    assert(jobs3 == jobs8, s"3 rounds: $jobs3 jobs, 8 rounds: $jobs8 jobs")
+  }
+
+  test("feedbackPipe: driver rounds return what Spark rounds return") {
+    // mapM has no local form, so its loop runs every round as Spark jobs
+    def same[A: scala.reflect.runtime.universe.TypeTag](start: Seq[A], f: A => A, keep: A => Boolean): List[A] = {
+      def loop(step: Pipe[A, A]) = Compose.feedbackPipe(step |> Pipes.filter[A](keep),
+        maxRounds = 6)(Sources.fromSeq(spark, start)).into(Sinks.sinkList)
+      val onDriver = loop(Pipes.map[A, A](f))
+      assert(onDriver == loop(Pipes.mapM[A, A](f)))
+      onDriver
+    }
+    assert(same[Long](Seq(81L, 100L), _ / 3, _ > 0) ==
+      List(27L, 33L, 9L, 11L, 3L, 3L, 1L, 1L))
+    // the encoder stores BigDecimal as decimal(38,18): the step reads the
+    // scale, so a driver round that skipped the encoder would diverge
+    val ds = same[BigDecimal](Seq(BigDecimal("81.5"), BigDecimal(100)), x => x / 3 + x.scale, _ > 0)
+    assert(ds.length == 12 && ds.forall(_.scale == 18), ds)
+  }
+
+  test("feedbackPipe: a round too large to collect stays in Spark, smaller rounds return to the driver") {
+    // round 1 yields 70,001 elements (over the 65,536 collect bound), round 2 one
+    val start = Vector.fill(70000)(2L) :+ 5L
+    val p = Pipes.map[Long, Long](_ - 1) |> Pipes.filter[Long](_ > 0)
+    val got = Compose.feedbackPipe(p, maxRounds = 50)(Sources.fromSeq(spark, start)).into(Sinks.sinkList)
+    assert(got == List.fill(70000)(1L) ++ List(4L, 3L, 2L, 1L))
+  }
+
   test("dense re-ranks sparse ordinals") {
     val sparse = src(List(10, 20, 30)) |> Pipes.concatMap[Int, Int](x => Seq(x, x + 1))
     val got = run(Compose.dense(sparse))

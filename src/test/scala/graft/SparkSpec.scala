@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -12,4 +16,18 @@ object SparkTestSession {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** `body`'s value and the Spark jobs started while it runs. */
+  protected def counted[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try { val t = body; TestBus.drain(sc); (t, n.get) } finally sc.removeSparkListener(l)
+  }
+
+  protected def jobsOf(body: => Any): Int = counted(body)._2
 }

@@ -351,6 +351,29 @@ class TextOpsSpec extends SparkSpec {
       (3, "aa", "aa", 1L)), got.toSeq.toString)
   }
 
+  test("bpeRun: the Spark job count does not depend on the rounds") {
+    import spark.implicits._
+    val docs = Seq("the quick brown fox jumps over the lazy dog",
+      "pack my box with five dozen liquor jugs").toDF("text")
+    val (j1, j6) = (jobsOf(TextOps.bpeRun(docs, "text", 1)), jobsOf(TextOps.bpeRun(docs, "text", 6)))
+    assert(j1 == j6, s"1 round: $j1 jobs, 6 rounds: $j6 jobs")
+    assert(TextOps.bpeLearn(docs, "text", 6).count() == 6)
+  }
+
+  test("bpeLearn ties go by code point: the U+FF21 pair merges before the U+1D400 pair") {
+    import spark.implicits._
+    // one word each: Ａ Ｂ (U+FF21 U+FF22) and 𝐀 𝐁 (U+1D400 U+1D401), both
+    // pairs n = 1. UTF-8 byte (= code point) order puts U+FF21 first;
+    // UTF-16 order would put U+1D400 (surrogates D835 DC00) first
+    val (a, b) = ("\uFF21", "\uFF22")
+    val (ma, mb) = (Character.toString(0x1D400), Character.toString(0x1D401))
+    val (merges, state) = TextOps.bpeRun(Seq(s"$a$b $ma$mb").toDF("text"), "text", 4,
+      TextOps.TokenPatternUnicode)
+    assert(merges.as[(Int, String, String, Long)].collect().toSeq ==
+      Seq((1, a, b, 1L), (2, ma, mb, 1L)))
+    assert(state.as[(String, Long)].collect().toSet == Set((a + b, 1L), (ma + mb, 1L)))
+  }
+
   test("chunkByTokens: offset-bin chunking matches a hand fold; unseen words cost characters") {
     import spark.implicits._
     // fake learned state: "ab" fully merged (1 subword), "cd" split as
