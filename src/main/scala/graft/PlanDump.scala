@@ -73,7 +73,9 @@ object PlanDump {
 
   /** Per-run tokens that change between two dumps of the same plan:
     * expression and exchange ids, lambda class names with their identity
-    * hashes, and the per-JVM scratch root (`Scratch.root`, a random
+    * hashes, the JVM-wide counter in higher-order-function variable names
+    * (`x_96`, numbered by every lambda built before), and the per-JVM
+    * scratch root (`Scratch.root`, a random
     * `graft_<n>` under `java.io.tmpdir`) with the random suffix of the
     * directory under it. Plans are cut at
     * `spark.sql.maxMetadataStringLength`, so a path may end mid-name.
@@ -81,14 +83,69 @@ object PlanDump {
   private val Volatile: Seq[(scala.util.matching.Regex, String)] = Seq(
     "#[0-9]+L?".r -> "#N",
     "plan_id=[0-9]+".r -> "plan_id=N",
+    "\\bx_[0-9]+#N".r -> "x_N#N",
     "\\$\\$Lambda[^@\\s]*@[0-9a-f]+".r -> "\\$\\$Lambda",
     "file:[^\\s,\\]]*/graft_[0-9]+(/[A-Za-z0-9_]*_)?[0-9]*".r -> "file:<scratch>$1")
 
-  /** `plan` with every [[Volatile]] token replaced by a fixed stand-in,
+  /** `plan` with every [[Volatile]] token replaced by a fixed stand-in
+    * and every distinct-aggregate `Expand` in [[canonicalExpands]] order,
     * so a regenerated PLANS.md differs only where a plan changed.
     */
   private[graft] def normalize(plan: String): String =
-    Volatile.foldLeft(plan) { case (text, (re, to)) => re.replaceAllIn(text, to) }
+    canonicalExpands(Volatile.foldLeft(plan) { case (text, (re, to)) => re.replaceAllIn(text, to) })
+
+  /** `s` split at the commas outside brackets and parentheses. */
+  private def topLevel(s: String): Vector[String] = {
+    val parts = Vector.newBuilder[String]
+    var depth = 0
+    var from = 0
+    s.indices.foreach { i =>
+      s(i) match {
+        case '[' | '(' => depth += 1
+        case ']' | ')' => depth -= 1
+        case ',' if depth == 0 => parts += s.substring(from, i).trim; from = i + 1
+        case _ => ()
+      }
+    }
+    (parts += s.substring(from).trim).result()
+  }
+
+  private def unbracket(s: String): String = s.stripPrefix("[").stripSuffix("]")
+
+  private val ExpandArgs = "(Expand |Arguments: )(\\[\\[.*\\]\\], \\[.*gid#N.*\\])".r
+
+  /** Spark's distinct-aggregate rewrite numbers its groups (the `gid`
+    * column of the `Expand`) in hash order, which changes from JVM to
+    * JVM. Each such Expand is rewritten with its groups ordered by the
+    * text of the columns they carry: its projection lists and output
+    * columns, every `gid#N = k` and every listing of those columns in
+    * their old order elsewhere in the plan. (Every `gid#N = k` is read
+    * as this Expand's: each audited plan has at most one.)
+    */
+  private[graft] def canonicalExpands(plan: String): String =
+    ExpandArgs.findAllMatchIn(plan).map(_.group(2)).toSeq.distinct.foldLeft(plan) { (text, args) =>
+      val Vector(listsPart, outPart) = topLevel(args)
+      val lists = topLevel(unbracket(listsPart)).map(l => topLevel(unbracket(l)))
+      val out = topLevel(unbracket(outPart))
+      val gidAt = out.indexOf("gid#N")
+      val (regular, groups) = lists.partition(_(gidAt) == "0")
+      // a group's own columns: set in it, null in some other list
+      def own(l: Vector[String]): Seq[Int] = out.indices.filter(p =>
+        p != gidAt && l(p) != "null" && lists.exists(_(p) == "null"))
+      val slots = groups.flatMap(own).sorted
+      val sorted = groups.sortBy(g => own(g).map(out).mkString(", "))
+      val moved = sorted.flatMap(own) // new slot i takes old column moved(i)
+      val gidOf = sorted.zipWithIndex.map { case (g, i) => g(gidAt) -> (i + 1).toString }.toMap
+      def permute(l: Vector[String]): Vector[String] =
+        slots.zip(moved).foldLeft(l) { case (acc, (slot, from)) => acc.updated(slot, l(from)) }
+      val newLists = regular.map(permute) ++ sorted.map(g => permute(g).updated(gidAt, gidOf(g(gidAt))))
+      val newArgs = newLists.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]") + ", " +
+        permute(out).mkString("[", ", ", "]")
+      val renumbered = "gid#N = ([0-9]+)".r.replaceAllIn(text.replace(args, "\u0000"),
+        m => s"gid#N = ${gidOf.getOrElse(m.group(1), m.group(1))}")
+      renumbered.replace(slots.map(out).mkString(", "), moved.map(out).mkString(", "))
+        .replace("\u0000", newArgs)
+    }
 
   def main(args: Array[String]): Unit = {
     val names = args.drop(1).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)

@@ -37,8 +37,11 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.build).toMap
 
-  def oracleSql: Map[String, String] =
-    registry.map(q => q.name -> materializeCtes(q.oracleSql)).toMap
+  /** Each query's oracle text with its CTEs materialized, rewritten when
+    * read: `get(q)` rewrites only `q`'s text, and nothing is kept.
+    */
+  def oracleSql: scala.collection.MapView[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap.view.mapValues(materializeCtes)
 
   /** The registry entries named by `names`, in that order; empty means
     * every query. Unknown names throw, listing them, so a mistyped name

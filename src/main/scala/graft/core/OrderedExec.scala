@@ -84,12 +84,11 @@ private[graft] object OrderedExec {
   private def block(rows: Long, b: Int, k: Int): (Int, Int) =
     ((rows * b / k).toInt, (rows * (b + 1) / k).toInt)
 
-  /** An input checkpointed by [[probe]]: its binary `rows`, their
-    * decoder, each partition's run, and the arrival-order summary of each
-    * of its `k` blocks.
+  /** An input checkpointed by [[probe]]: its binary `rows`, each
+    * partition's run, and the arrival-order summary of each of its `k`
+    * blocks.
     */
-  private final class Probe[T, S](in: Dataset[T], val rows: RDD[InternalRow],
-                                  val decode: InternalRow => T, val k: Int,
+  private final class Probe[T, S](in: Dataset[T], val rows: RDD[InternalRow], val k: Int,
                                   val runs: Vector[Run], val sums: Vector[Vector[S]]) {
     /** The non-empty partitions in seq order, if their seqs strictly
       * ascend and their [first, last] ranges are disjoint.
@@ -129,17 +128,16 @@ private[graft] object OrderedExec {
   /** One job: checkpoints `in`'s rows (unless `store` is off: then the
     * probe's `rows` are not stored, only its runs and summaries are kept)
     * and records each partition's run and the `summary` of each of its k
-    * blocks (over the rows in arrival order), k the fewest that make
-    * `width` blocks in all. A null seq, or a seq column that is not a
-    * Long, counts as not ascending.
+    * blocks (over the binary rows in arrival order), k the fewest that
+    * make `width` blocks in all. A null seq, or a seq column that is not
+    * a Long, counts as not ascending.
     */
   private def probe[T, S](in: Dataset[T], width: Int, store: Boolean = true)(
-      summary: Iterator[T] => S): Probe[T, S] = {
+      summary: Iterator[InternalRow] => S): Probe[T, S] = {
     val bin = GraftRowBridge.binary(in)
     val rows = if (store) Materialize.checkpoint(in.sparkSession, bin) else bin
     val parts = math.max(1, rows.getNumPartitions) // an empty input may have none
     val k = math.max(1, (width + parts - 1) / parts)
-    val decode = GraftRowBridge.decoder(in)
     val seqAt = in.schema.fields.indexWhere(f => f.name == "seq" && f.dataType == LongType)
     val seen = storing(rows)(summaries(rows) { it =>
       var n, first, last = 0L
@@ -158,7 +156,7 @@ private[graft] object OrderedExec {
       }
       val sums =
         if (k == 1) {
-          val s = summary(tracked.map(decode))
+          val s = summary(tracked)
           tracked.foreach(_ => ()) // a summary that stops early still counts every row
           Vector(s)
         } else {
@@ -166,12 +164,12 @@ private[graft] object OrderedExec {
           val all = tracked.toArray
           Vector.tabulate(k) { b =>
             val (from, until) = block(all.length, b, k)
-            summary(all.iterator.slice(from, until).map(decode))
+            summary(all.iterator.slice(from, until))
           }
         }
       (Run(n, first, last, ascending), sums)
     })
-    new Probe(in, rows, decode, k, seen.map(_._1).toVector, seen.map(_._2).toVector)
+    new Probe(in, rows, k, seen.map(_._1).toVector, seen.map(_._2).toVector)
   }
 
   /** The per-partition summaries of a seq-ordered stream, in seq order,
@@ -180,12 +178,11 @@ private[graft] object OrderedExec {
     * otherwise `in` itself is range-sorted and summarised again.
     */
   def partials[A, S](in: Dataset[Elem[A]])(summary: Iterator[Elem[A]] => S): List[S] = {
-    val p = probe(in, 1, store = false)(summary)
+    val decode = GraftRowBridge.decoder(in)
+    val p = probe(in, 1, store = false)(it => summary(it.map(decode)))
     p.order match {
       case Some(order) => order.map(p.sums(_).head).toList
-      case None =>
-        val decode = p.decode
-        summaries(GraftRowBridge.binary(sorted(in)))(it => summary(it.map(decode)))
+      case None => summaries(GraftRowBridge.binary(sorted(in)))(it => summary(it.map(decode)))
     }
   }
 
@@ -213,14 +210,15 @@ private[graft] object OrderedExec {
     * (CrossPartitionSpec's "a failing step or row function leaves no
     * sorted copy cached" orders its cases around this).
     */
-  private def finished[T, S, U: ClassTag](rows: RDD[InternalRow], decode: InternalRow => T,
-                                          carries: Vector[S], build: RDD[U] => Dataset[U])(
-      finish: (S, Iterator[T]) => Iterator[U]): Dataset[U] = {
+  private def finished[S, U: ClassTag, R](rows: RDD[InternalRow], carries: Vector[S],
+                                          build: RDD[U] => R)(
+      finish: (S, Iterator[InternalRow]) => Iterator[U]): R = {
     val bCarries = rows.sparkContext.broadcast(carries)
-    build(rows.mapPartitionsWithIndex((i, it) => finish(bCarries.value(i), it.map(decode))))
+    build(rows.mapPartitionsWithIndex((i, it) => finish(bCarries.value(i), it)))
   }
 
-  /** The carry kernel. Orders `in` by seq ([[probe]] first) or, given
+  /** The carry kernel, over `in`'s rows in Spark's binary form (the
+    * typed shapes decode them). Orders `in` by seq ([[probe]] first) or, given
     * `sortBy`, range-sorts it by those columns into that many partitions
     * (0: the session's shuffle partitions, as below); collects `summary`
     * of each partition in order; turns the summaries into carries,
@@ -233,17 +231,15 @@ private[graft] object OrderedExec {
     * finish pass runs as wide as a range sort would (an empty partition's
     * blocks get `zero`).
     */
-  private def carryPass[T, S, U: ClassTag](in: Dataset[T], sortBy: Option[(Seq[Column], Int)],
-                                           build: RDD[U] => Dataset[U])(
-      summary: Iterator[T] => S, zero: S, combine: (S, S) => S)(
-      finish: (S, Iterator[T]) => Iterator[U]): (Dataset[U], S) = {
-    def sortedPass(ds: Dataset[T], by: Seq[Column], parts: Int): (Dataset[U], S) = {
+  private def carryPass[T, S, U: ClassTag, R](in: Dataset[T], sortBy: Option[(Seq[Column], Int)],
+                                              build: RDD[U] => R)(
+      summary: Iterator[InternalRow] => S, zero: S, combine: (S, S) => S)(
+      finish: (S, Iterator[InternalRow]) => Iterator[U]): (R, S) = {
+    def sortedPass(ds: Dataset[T], by: Seq[Column], parts: Int): (R, S) = {
       val rows = Materialize.checkpoint(ds.sparkSession,
         GraftRowBridge.binary(sortedBy(ds, by, parts)))
-      val decode = GraftRowBridge.decoder(ds)
-      val carries = storing(rows)(summaries(rows)(it => summary(it.map(decode))))
-        .scanLeft(zero)(combine).toVector
-      (finished(rows, decode, carries, build)(finish), carries.last)
+      val carries = storing(rows)(summaries(rows)(summary)).scanLeft(zero)(combine).toVector
+      (finished(rows, carries, build)(finish), carries.last)
     }
     sortBy match {
       case Some((by, parts)) => sortedPass(in, by, parts)
@@ -256,7 +252,7 @@ private[graft] object OrderedExec {
             val prefix = blocks.map(_._2).scanLeft(zero)(combine)
             val at = blocks.map(_._1).zip(prefix).toMap
             val carries = (0 until p.k * parts).map(at.getOrElse(_, zero)).toVector
-            (finished(p.blocks, p.decode, carries, build)(finish), prefix.last)
+            (finished(p.blocks, carries, build)(finish), prefix.last)
           case None =>
             // the sorted copy's checkpoint cuts its lineage to the probe's
             try sortedPass(p.dataset, Seq(col("seq")), 0) finally p.rows.unpersist(blocking = false)
@@ -271,10 +267,24 @@ private[graft] object OrderedExec {
     */
   def scanFold[T, B, U: ClassTag](in: Dataset[T], sortBy: Option[(Seq[Column], Int)],
                                   build: RDD[U] => Dataset[U])(
-      zero: B, step: (B, T) => B, combine: (B, B) => B)(emit: (T, B) => U): Dataset[U] =
-    carryPass(in, sortBy, build)(_.foldLeft(zero)(step), zero, combine) { (carry, it) =>
+      zero: B, step: (B, T) => B, combine: (B, B) => B)(emit: (T, B) => U): Dataset[U] = {
+    val decode = GraftRowBridge.decoder(in)
+    carryPass(in, sortBy, build)(_.map(decode).foldLeft(zero)(step), zero, combine) { (carry, it) =>
       var acc = carry
-      it.map { t => acc = step(acc, t); emit(t, acc) }
+      it.map { r => val t = decode(r); acc = step(acc, t); emit(t, acc) }
+    }._1
+  }
+
+  /** [[scanFold]] over a seq-ordered input's binary rows, read in place;
+    * `emit` is made once per partition, so it may hold per-task buffers.
+    */
+  def scanRows[B, U: ClassTag, R](in: Dataset[_], build: RDD[U] => R)(
+      zero: B, step: (B, InternalRow) => B, combine: (B, B) => B)(
+      emit: () => (InternalRow, B) => U): R =
+    carryPass(in, None, build)(_.foldLeft(zero)(step), zero, combine) { (carry, it) =>
+      val out = emit()
+      var acc = carry
+      it.map { r => acc = step(acc, r); out(r, acc) }
     }._1
 
   /** Boundary exchange over a seq-ordered input: run `f(carryIn, partition)`
@@ -290,10 +300,12 @@ private[graft] object OrderedExec {
       it.foreach { t => buf.append(t); if (buf.size > tailN) buf.removeHead() }
       buf.toList
     }
+    val decode = GraftRowBridge.decoder(in)
     // valid because each partition's tail keeps at least the suffix the
     // next partitions need
     carryPass(in, None, build)(
-      lastN, Nil, (a: List[T], b: List[T]) => (a ++ b).takeRight(tailN))(f)
+      it => lastN(it.map(decode)), Nil, (a: List[T], b: List[T]) => (a ++ b).takeRight(tailN))(
+      (carry, it) => f(carry, it.map(decode)))
   }
 
   /** Running fold with mergeable accumulators: emits the accumulator after

@@ -145,9 +145,9 @@ object Packing {
     packPieces(enc, idCol, budget)
       .groupBy(col("pack_id"))
       .agg(transform(array_sort(collect_list(struct(col("g0"), col("piece")))),
-        s => s.getField("piece")).as("ps"),
-        count(lit(1)).as("n_docs"))
-      .select(col("pack_id"), flatten(col("ps")).as("ids"), col("n_docs"))
+        s => s.getField("piece")).as("ps"))
+      // one piece per (pack, doc): the list's size is the doc count
+      .select(col("pack_id"), flatten(col("ps")).as("ids"), size(col("ps")).cast("long").as("n_docs"))
       .select(col("pack_id"),
         array_join(col("ids").cast("array<string>"), ",").as("ids"),
         size(col("ids")).cast("long").as("n_tokens"),
@@ -172,11 +172,11 @@ object Packing {
           col("g1") - col("g0")).as("bound"))
       .groupBy(col("pack_id"))
       .agg(array_sort(collect_list(struct(col("g0"), col("piece"), col("bound"))))
-        .as("ps"), count(lit(1)).as("n_docs"))
+        .as("ps"))
       .select(col("pack_id"),
         flatten(expr("transform(ps, s -> s.piece)")).as("ids"),
         expr("transform(ps, s -> s.bound)").as("bs"),
-        col("n_docs"))
+        size(col("ps")).cast("long").as("n_docs"))
       .select(col("pack_id"),
         array_join(col("ids").cast("array<string>"), ",").as("ids"),
         size(col("ids")).cast("long").as("n_tokens"),

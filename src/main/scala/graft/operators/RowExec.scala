@@ -3,6 +3,8 @@ package graft.operators
 import graft.core.OrderedExec
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,15 +25,27 @@ object RowExec {
   /** Distributed running sum of a Long-valued expression, appended as
     * `outCol` (conduino `scan (+)`, reference `Combinators.hs:362-371`,
     * over a columnar stream). Nulls contribute 0.
+    *
+    * Runs on the kernel's binary rows: the value is read in place and
+    * each output row is the input row plus the sum, written by one
+    * `UnsafeProjection` per task — no row is decoded or re-encoded.
     */
   def runningSumLong(df: DataFrame, valueExpr: Column, outCol: String): DataFrame = {
-    val withV = df.withColumn("__v", valueExpr.cast(LongType))
-    val idx = withV.schema.fieldIndex("__v")
-    OrderedExec.scanFold[Row, Long, Row](withV, None,
-      rows(df, withV.schema.add(outCol, LongType, nullable = false)))(
-      0L, (b, r) => b + (if (r.isNullAt(idx)) 0L else r.getLong(idx)), _ + _)(
-      (r, acc) => Row.fromSeq(r.toSeq :+ acc))
-      .drop("__v")
+    val withV = df.select(col("*"), valueExpr.cast(LongType).as("__v"))
+    val v = df.schema.length
+    val outSchema = df.schema.add(outCol, LongType, nullable = false)
+    // output = the input's columns, then the sum (after __v in the joined row)
+    val outExprs = df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable)
+    } :+ BoundReference(v + 1, LongType, nullable = false)
+    OrderedExec.scanRows[Long, InternalRow, DataFrame](withV,
+      GraftRowBridge.fromBinary(df.sparkSession, _, outSchema))(
+      0L, (b, r) => if (r.isNullAt(v)) b else b + r.getLong(v), _ + _) { () =>
+      val proj = UnsafeProjection.create(outExprs)
+      val sum = new SpecificInternalRow(Seq(LongType))
+      val joined = new JoinedRow
+      (r, acc) => { sum.setLong(0, acc); proj(joined(r, sum)) }
+    }
   }
 
   /** Boundary exchange over Rows: run `f(carry, partition)` per sorted

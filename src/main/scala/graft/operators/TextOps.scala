@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql._
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis operators for large-scale training-data pipelines:
@@ -910,6 +912,10 @@ object TextOps {
                tokenPattern: String = TokenPattern): DataFrame =
     bpeRun(df, textCol, rounds, tokenPattern)._1
 
+  private val MergeSchema = StructType(Seq(StructField("round", IntegerType, nullable = false),
+    StructField("lhs", StringType), StructField("rhs", StringType),
+    StructField("n", LongType, nullable = false)))
+
   /** [[bpeLearn]] plus the post-training word-type state `(seq, freq)`
     * — the segmentation artifact [[bpeApply]] joins back onto the
     * corpus. Same single computation; `_1` is the merge table.
@@ -917,7 +923,6 @@ object TextOps {
   def bpeRun(df: DataFrame, textCol: String, rounds: Int,
              tokenPattern: String = TokenPattern): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
-    import spark.implicits._
     // the token ALPHABET is a parameter (ASCII default; pass
     // TokenPatternUnicode for the script-agnostic trainer): everything
     // downstream — char split, pair argmax tie-break, merge replace —
@@ -931,7 +936,7 @@ object TextOps {
       .select(concat_ws(" ", expr(
         "transform(sequence(1, char_length(w)), i -> substring(w, i, 1))"))
         .as("seq"), col("freq"))
-    var vocab = hist.collect().map(r => (r.getString(0), r.getLong(1)))
+    var vocab = GraftRowBridge.collectBinary(hist).map(r => (r.getUTF8String(0).toString, r.getLong(1)))
     val utf8 = Ordering.fromLessThan[String] { (a, b) =>
       UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
     }
@@ -960,9 +965,12 @@ object TextOps {
       }
       r += 1
     }
-    (merges.toSeq.toDF("round", "lhs", "rhs", "n"),
-      spark.createDataFrame(java.util.Arrays.asList(vocab.map { case (q, f) => Row(q, f) }: _*),
-        hist.schema))
+    // both leave as binary local relations: no encoder, no decoder
+    val str = UTF8String.fromString _
+    (GraftRowBridge.local(spark, MergeSchema,
+      merges.toSeq.map { case (r, l, rr, n) => InternalRow(r, str(l), str(rr), n) }),
+      GraftRowBridge.local(spark, hist.schema,
+        vocab.toSeq.map { case (q, f) => InternalRow(str(q), f) }))
   }
 
   /** Segment the corpus with a trained BPE state: per document, the
@@ -1054,22 +1062,22 @@ object TextOps {
     * DuckDB's binary collation agree); an unseen word falls back to
     * per-character tokens, each mapped through the same vocabulary,
     * id −1 for a character the vocabulary lacks (documented sentinel,
-    * mirrored in SQL).
+    * mirrored in SQL). A null or token-less text encodes to no tokens.
     *
     * Scale shape: the state is collected ONCE (vocab-bounded by the BPE
     * contract — the same driver-size commitment bpeApply's broadcast
-    * makes), turned into a (word → id array) table that the word
-    * occurrences BROADCAST-HASH-join against (a literal MAP would be
-    * tempting but Spark's GetMapValue is a LINEAR key scan — O(vocab)
-    * per token at a real vocabulary); only the char FALLBACK stays a
-    * literal map, bounded by the alphabet (≲ 62 keys — a linear scan
-    * that short is cheaper than a join, and it runs only on OOV
-    * words). One doc-key aggregate reassembles sequences in word
-    * order — the bpeApply plan shape with an ordered re-aggregation on
-    * top; output is O(doc) like the doc itself. Output (id, ids:
+    * makes) into a (word → subword ids) hash map and a per-character id
+    * table, and every row is encoded by one codegen'd per-row
+    * expression ([[graft.functions.BpeEncode]]): no explode, no join,
+    * no shuffle, one output row per input row. Output (id, ids:
     * comma-joined, n_tokens) — ids joined to a string because the
     * driver's comparator can't sort array cells (the q_consecutive
     * convention).
+    *
+    * `idCol` must be unique and non-null: each input row is encoded on
+    * its own, so rows sharing an id stay separate rows (the DuckDB
+    * mirror regroups by id). Every caller passes a table's or the
+    * corpus chain's `doc_id`, which is.
     */
   def tokenizeIds(df: DataFrame, idCol: String, textCol: String,
                   vocabState: DataFrame): DataFrame =
@@ -1079,8 +1087,8 @@ object TextOps {
         size(col("ids")).cast("long").as("n_tokens"))
 
   /** [[tokenizeIds]] keeping the id ARRAY (column `ids`) — the form
-    * [[Packing.packTokenIds]] consumes; same staged encode, no
-    * stringify round-trip.
+    * [[Packing.packTokenIds]] consumes; same per-row encode, no
+    * stringify round-trip. Same unique, non-null `idCol` precondition.
     */
   def tokenizeIdArrays(df: DataFrame, idCol: String, textCol: String,
                        vocabState: DataFrame): DataFrame =
@@ -1088,37 +1096,20 @@ object TextOps {
 
   private def encodeArrays(df: DataFrame, idCol: String, textCol: String,
                            vocabState: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val segRows = vocabState.select(col("seq")).collect().map(_.getString(0))
-    val segs = segRows.toSeq.map(s => s.replace(" ", "") -> s.split(" ").toSeq)
+    val segs = GraftRowBridge.collectBinary(vocabState.select(col("seq")))
+      .map { r => val s = r.getUTF8String(0).toString; s.replace(" ", "") -> s.split(" ") }
     require(segs.map(_._1).distinct.length == segs.length,
       "tokenizeIds: vocabState rows collapse to a duplicate word key")
-    val segMap = segs.toMap
     val vocabIds: Map[String, Long] =
-      segMap.values.flatten.toSeq.distinct.sorted.zipWithIndex
+      segs.flatMap(_._2).distinct.sorted.zipWithIndex
         .map { case (s, i) => s -> i.toLong }.toMap
-    val charIds: Map[String, Long] = vocabIds.filter(_._1.length == 1)
-    val cm = typedLit(charIds)
-    val segDf = segMap.toSeq
-      .map { case (w, subs) => (w, subs.map(vocabIds)) }
-      .toDF("__w", "__seg")
-    val occ = df.select(col(idCol),
-      posexplode(tokens(col(textCol))).as(Seq("__wpos", "__w")))
-    val pieces = occ.join(broadcast(segDf), Seq("__w"), "left")
-      .select(col(idCol), col("__wpos"),
-        coalesce(col("__seg"),
-          transform(split(col("__w"), ""),
-            c => coalesce(element_at(cm, c), lit(-1L)))).as("__piece"))
-    val agg = pieces.groupBy(col(idCol))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(col("__wpos"), col("__piece")))),
-        s => s.getField("__piece"))).as("__ids"))
-    // token-less docs vanish in the explode — restore them with an
-    // empty sequence (the oracle's LEFT JOIN COALESCE branch)
-    df.select(col(idCol)).join(agg, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__ids"), array().cast("array<long>")).as("ids"))
+    val words = new java.util.HashMap[UTF8String, Array[Long]](segs.length * 2)
+    segs.foreach { case (w, subs) => words.put(UTF8String.fromString(w), subs.map(vocabIds)) }
+    // the fallback only ever sees ASCII word characters
+    val chars = Array.fill(128)(-1L)
+    vocabIds.foreach { case (s, id) => if (s.length == 1 && s.charAt(0) < 128) chars(s.charAt(0)) = id }
+    df.select(col(idCol),
+      graft.functions.BpeEncode.bpe_encode(col(textCol), words, chars).as("ids"))
   }
 
   /** The shared encode CTE chain through `idt` (one row per token:

@@ -998,8 +998,9 @@ object TextCorpus {
       TextOps.bpeApplySql("documents", "doc_id", "text", 6)),
 
     // tokenizer ENCODE: each doc's actual token-ID sequence under the
-    // learned BPE state — the state collapses to two literal maps, so
-    // encoding is a pure per-row lambda chain (no explode, no shuffle)
+    // learned BPE state — the state becomes a word → ids hash map and a
+    // char-id table, so encoding is one per-row expression (no explode,
+    // no shuffle)
     QueryDef("q_tokenize_ids", (s, dir) => {
       val docs = ColOps.table(s, dir, "documents")
       TextOps.tokenizeIds(docs, "doc_id", "text",

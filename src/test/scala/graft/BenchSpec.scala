@@ -39,6 +39,13 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseRecords("not json at all", "/root/testdata/sf0.1").isEmpty)
   }
 
+  test("outPath: the result file is written only where SPARK_GRAFT_BENCH_OUT names one") {
+    assert(Bench.outPath(None).isEmpty)
+    assert(Bench.outPath(Some("")).isEmpty)
+    assert(Bench.outPath(Some("  ")).isEmpty)
+    assert(Bench.outPath(Some(" out/bench.json ")) == Some("out/bench.json"))
+  }
+
   test("select: an unknown query name throws and is named in the message") {
     val e = intercept[IllegalArgumentException](SparkEntry.select(Seq("q_scan", "q_nope")))
     assert(e.getMessage.contains("q_nope"), e.getMessage)

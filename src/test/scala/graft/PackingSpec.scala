@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ColOps, Packing, TextOps}
+import graft.operators.{ColOps, Packing, RowExec, TextOps}
 
 /** Sequence-packing invariants, checked against driver-side reference
   * folds over the sf0.001 documents fixture (the oracle-SQL mirror is
@@ -32,6 +32,33 @@ class PackingSpec extends SparkSpec {
       off += tok
     }
     assert(got.size === toks.size)
+  }
+
+  test("runningSumLong on binary rows ≡ a Row fold: nulls add 0, arrays pass through, empty partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("seq", LongType), StructField("v", LongType),
+      StructField("ids", ArrayType(LongType, containsNull = false)), StructField("s", StringType)))
+    val rows = Seq[Row](Row(1L, 5L, Seq(1L, 2L), "a"), Row(2L, null, Seq.empty[Long], null),
+      Row(3L, 7L, null, "c"), Row(4L, -2L, Seq(9L), "d"), Row(5L, null, Seq(3L, 3L, 3L), "e"))
+    // the Row reference: the input row in seq order plus the running sum
+    var acc = 0L
+    val expected = rows.map { r =>
+      acc += (if (r.isNullAt(1)) 0L else r.getLong(1))
+      Row.fromSeq(r.toSeq :+ acc)
+    }
+    def asSeqs(rs: Seq[Row]) = rs.map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case x => x
+    })
+    // 8 partitions for 5 rows: ascending runs with empty partitions (the
+    // sorted-run path) and the same rows reversed (the range-sort path)
+    for (in <- Seq(rows, rows.reverse)) {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(in, 8), schema)
+      val out = RowExec.runningSumLong(df, col("v"), "run")
+      assert(out.schema == schema.add("run", LongType, nullable = false))
+      assert(asSeqs(out.collect().toSeq.sortBy(_.getLong(0))) == asSeqs(expected))
+    }
   }
 
   test("greedyPack replays the first-fit fold per fixed doc-id group") {
@@ -99,5 +126,18 @@ class PackingSpec extends SparkSpec {
       assert(spans.map(_._3).sum == nTok)
       if (packId < maxPack) assert(nTok == B, s"non-final pack $packId not full")
     }
+  }
+
+  test("q_corpus_build_warc at sf0.001: Spark jobs and generated classes pinned") {
+    val build = SparkEntry.queries("q_corpus_build_warc")
+    def force(): Unit = {
+      val df = build(spark, dir)
+      df.agg(bit_xor(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)))).collect()
+    }
+    force() // stage the shards once
+    val jobs = jobsOf(force())
+    assert(jobs <= 13, s"$jobs jobs")
+    val classes = compiledClassesOf(force())
+    assert(classes <= 56, s"$classes generated classes")
   }
 }

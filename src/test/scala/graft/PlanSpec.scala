@@ -567,6 +567,32 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"persisted PQ serve plans a cartesian:\n$p")
   }
 
+  test("PlanDump.normalize: a two-distinct Expand reads the same in either group order") {
+    // count(distinct source), count(distinct md5(text)) per lang, as
+    // Spark's distinct-aggregate rewrite plans it with either column's
+    // group numbered 1 (it picks between JVMs)
+    val source = ("source#3", "source#7")
+    val md5 = ("md5(cast(text#4 as binary))", "md5(CAST(text AS BINARY))#8")
+    def dump(first: (String, String), second: (String, String)): String = {
+      def gid(c: (String, String)) = if (c == first) 1 else 2
+      s"""HashAggregate(keys=[lang#1], functions=[count(1), count(source#7) FILTER (WHERE (gid#9 = ${gid(source)})), count(md5(CAST(text AS BINARY))#8) FILTER (WHERE (gid#9 = ${gid(md5)}))])
+         |+- HashAggregate(keys=[lang#1, ${first._2}, ${second._2}, gid#9], functions=[count(1)])
+         |   +- Expand [[lang#1, null, null, 0, n#2], [lang#1, ${first._1}, null, 1, null], [lang#1, null, ${second._1}, 2, null]], [lang#1, ${first._2}, ${second._2}, gid#9, n#2]
+         |""".stripMargin
+    }
+    val (one, other) = (dump(source, md5), dump(md5, source))
+    assert(one != other)
+    assert(PlanDump.normalize(one) == PlanDump.normalize(other))
+    // canonical: groups ordered by their columns' text, md5(...) first
+    assert(PlanDump.normalize(one) == other.replaceAll("#[0-9]+", "#N"))
+  }
+
+  test("PlanDump.normalize: lambda variables lose the JVM-wide counter in their names") {
+    def dump(n: Int) = s"filter(split(text#7, , -1), lambdafunction(NOT (lambda x_$n#8 = ), lambda x_$n#8, false))"
+    assert(PlanDump.normalize(dump(90)) == PlanDump.normalize(dump(96)))
+    assert(PlanDump.normalize(dump(90)).contains("lambda x_N#N"))
+  }
+
   test("q_pack_ids: the virtual-stream offsets come from the distributed prefix sum, never a global window") {
     val p = plan(SparkEntry.queries("q_pack_ids")(spark, dir))
     // the ordinal prefix-sum machinery materializes upstream of an

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestBus
+import org.apache.spark.{TestBus, TestCodegen}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,4 +30,15 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   protected def jobsOf(body: => Any): Int = counted(body)._2
+
+  /** The classes Spark's code generator compiles while `body` runs,
+    * starting from an empty codegen cache, so a class an earlier test
+    * compiled counts again.
+    */
+  protected def compiledClassesOf(body: => Any): Long = {
+    TestCodegen.clearCache()
+    val before = TestCodegen.compiles
+    body
+    TestCodegen.compiles - before
+  }
 }

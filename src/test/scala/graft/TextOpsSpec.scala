@@ -34,6 +34,42 @@ class TextOpsSpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, "0,1,2,-1,-1", 5L), (2L, "", 0L)), s"got ${got.toList}")
   }
 
+  test("encode kernel ≡ the explode/join/regroup semantics, row by row, interpreted and codegen'd") {
+    import spark.implicits._
+    // "ab" and "a1" stay whole, "cd" splits; "é" is a vocabulary entry no
+    // ASCII token can reach; q, x, y, z are absent → -1
+    val state = Seq(("ab", 5L), ("c d", 3L), ("a1", 2L), ("c a f", 1L), ("é", 1L))
+      .toDF("seq", "freq")
+    val segs = Seq("ab", "c d", "a1", "c a f", "é").map(s => s.replace(" ", "") -> s.split(" ").toSeq)
+    val ids = segs.flatMap(_._2).distinct.sorted.zipWithIndex.map { case (t, i) => t -> i.toLong }.toMap
+    // the removed relational path: regexp_extract_all words, whole-word
+    // lookup, else one id per character through the 1-char vocabulary
+    def reference(text: String): Seq[Long] =
+      if (text == null) Nil
+      else TextOps.TokenPattern.r.findAllIn(text).toSeq.flatMap { w =>
+        segs.toMap.get(w).map(_.map(ids)).getOrElse(w.map(c => ids.getOrElse(c.toString, -1L)))
+      }
+    val texts = Seq[String](null, "", "   ", "ab cd xy", "zzz", "cd,ab;ab-cd", "a1 b2 A1",
+      "café naïve ab", "é é", "日本語ab𝔘cd", "ab\tcd\nxy", "cafcafab", "q")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    // a local input is encoded by the optimizer (eval), a repartitioned
+    // one by whole-stage codegen (doGenCode)
+    for (input <- Seq(docs, docs.repartition(3))) {
+      val got = TextOps.tokenizeIdArrays(input, "doc_id", "text", state)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        assert(got(i.toLong) == reference(t), s"text ${Option(t).map(_.replace("\t", "\\t"))}")
+      }
+      assert(got.size == texts.size)
+    }
+    assert(reference("xy q") == Seq(-1L, -1L, -1L))
+    // one per-row expression over the source: no exchange
+    val ranged = spark.range(4).select(col("id").as("doc_id"), concat(lit("ab cd x"), col("id")).as("text"))
+    val plan = TextOps.tokenizeIdArrays(ranged, "doc_id", "text", state)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("bpe_encode") && !plan.contains("Exchange"), plan)
+  }
+
   test("tokenizeIds conservation: sequence length equals bpeApply's subword count on the trained state") {
     import spark.implicits._
     val docs = Seq((1L, "the quick brown fox jumps"), (2L, "the the the lazy dog"),
