@@ -78,13 +78,18 @@ object PlanDump {
     * scratch root (`Scratch.root`, a random
     * `graft_<n>` under `java.io.tmpdir`) with the random suffix of the
     * directory under it. Plans are cut at
-    * `spark.sql.maxMetadataStringLength`, so a path may end mid-name.
+    * `spark.sql.maxMetadataStringLength`, at a point that moves with the
+    * digit count of `<n>`: the same location may end mid-name (`...`) or
+    * whole (`]`). So a location that names a directory under the root
+    * keeps that name only through its first `_` and always ends `...`.
     */
   private val Volatile: Seq[(scala.util.matching.Regex, String)] = Seq(
     "#[0-9]+L?".r -> "#N",
     "plan_id=[0-9]+".r -> "plan_id=N",
     "\\bx_[0-9]+#N".r -> "x_N#N",
     "\\$\\$Lambda[^@\\s]*@[0-9a-f]+".r -> "\\$\\$Lambda",
+    "file:[^\\s,\\]]*/graft_[0-9]+/([A-Za-z0-9]*_)[A-Za-z0-9_]*(?:\\.\\.\\.|\\])".r ->
+      "file:<scratch>/$1...",
     "file:[^\\s,\\]]*/graft_[0-9]+(/[A-Za-z0-9_]*_)?[0-9]*".r -> "file:<scratch>$1")
 
   /** `plan` with every [[Volatile]] token replaced by a fixed stand-in

@@ -10,37 +10,14 @@ import org.apache.spark.sql.functions._
   * corpus' zh docs all identify as 'unknown' under the heuristic —
   * the trained model classifies them like any other class).
   *
-  * Architecture: ONE-VS-REST AVERAGED BATCH PERCEPTRONS over hashed
-  * CHARACTER-N-GRAM features — the [[QualityModel]] machinery with
-  * char 3-grams instead of word BoW (char n-grams are what fastText's
-  * lang-id uses: they see morphology and script without tokenization),
-  * trained on the corpus' DECLARED language labels. Everything that
-  * made QualityModel oracle-exact carries over verbatim: integer-exact
-  * ppm feature normalization, per-dim mean/mean-absolute-deviation
-  * standardization with truncating division (Spark `div` ≡ DuckDB `//`
-  * ≡ Java `/`, spec-pinned), absent entries at a per-dim constant z0
-  * so margins and updates stay sparse, FIXED round count, and the
-  * averaged (not final) iterate as the output model.
-  *
-  * Multi-class shape: the K classes share one feature table; each
-  * round computes ALL K margins in one per-doc aggregate (K sum
-  * expressions over the same sparse rows), derives the misclassified
-  * (doc, class) set, and updates all K weight vectors from ONE
-  * co-partitioned join + one (class, dim)-key aggregate collected once
-  * (≤ K·[[NDims]] rows; the always-present gram-count stat dim doubles
-  * as the per-(doc, class) marker carrying n_mis and Σy) — the whole
-  * round is one job, not K× the work.
-  *
-  * Scale shape (the 100-TB audit): identical to [[QualityModel]] —
-  * features checkpointed once and partitioned on doc_id, rounds FIXED
-  * and corpus-size-independent ([[Iters]]), driver state bounded by
-  * K·NDims Longs; 10× corpus ⇒ ~10× per-round scan and nothing else
-  * (the langidTrain scale probe pins this).
-  *
-  * Reference cell: the fold/scan sink family
-  * (/root/reference/src/Data/Conduino/Combinators.hs:437-471) — a
-  * training round is a corpus-wide fold whose accumulator is the
-  * weight matrix.
+  * Architecture: the K-class one-vs-rest case of the shared
+  * [[Perceptron]] over hashed CHARACTER-N-GRAM features (char n-grams are
+  * what fastText's lang-id uses: they see morphology and script without
+  * tokenization), trained on the corpus' DECLARED language labels. The
+  * label rides every feature row as `y`; each round computes all K
+  * margins in one per-doc aggregate and updates all K weight vectors
+  * from one (class, dim)-keyed aggregate — one action per round, not K×
+  * the work.
   */
 object LangModel {
 
@@ -53,13 +30,10 @@ object LangModel {
   val CountDim: Int = GramDims
   val NDims: Int = GramDims + 2
   private val Bias = NDims - 1
+  private val BiasZ = Perceptron.BiasZ
 
   /** Fixed averaged-perceptron rounds — corpus-size-independent. */
   val Iters = 6
-
-  private val BiasZ = 1000L
-
-  private def tdiv(a: Long, b: Long): Long = a / b
 
   /** Character 3-grams of a text column (empty array below [[GramN]]
     * chars) — both engines index characters, not bytes.
@@ -70,31 +44,29 @@ object LangModel {
         i => t.substr(i + lit(1), lit(GramN))))
       .otherwise(array().cast("array<string>"))
 
-  /** Sparse RAW features (doc_id, d, x): hashed-gram ppm counts on
-    * dims 0..[[GramDims]]−1 plus the gram-count stat dim. The bias
-    * never appears here (constant-folded, the QualityModel discipline).
+  /** Sparse RAW features (doc_id, d, x, y) of a (doc_id, text, lang)
+    * corpus: hashed-gram ppm counts on dims 0..[[GramDims]]−1 plus the
+    * gram-count stat dim, the declared language as `y`.
     *
     * Gram hashing is the fused O(len) pass
     * `ngram_hashes(code_points(t), 3)` — positionally identical values
     * to `charHash(grams(t)[j])` (PolyHashSpec-pinned); the HOF
     * substring formulation it replaces was O(len²) per document
-    * (UTF8String.substr re-walks the string head per gram) and
-    * dominated the fit (optimization round).
+    * (UTF8String.substr re-walks the string head per gram).
     */
-  private def rawFeatures(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
+  private def rawFeatures(corpus: DataFrame): DataFrame = {
     val gh = graft.functions.NgramHashes.ngram_hashes(
-      graft.functions.CodePoints.code_points(col(textCol)), GramN)
-    val base = df.select(col(idCol).as("doc_id"), gh.as("__gh"))
+      graft.functions.CodePoints.code_points(col("text")), GramN)
+    val base = corpus.select(col("doc_id"), gh.as("__gh"), col("lang").as("y"))
     val nG = coalesce(size(col("__gh")), lit(0)).cast("long")
     val bow = base
-      .select(col("doc_id"), explode(col("__gh")).as("h"), nG.as("__n"))
-      .groupBy(col("doc_id"), (col("h") % GramDims).as("d"), col("__n"))
+      .select(col("doc_id"), explode(col("__gh")).as("h"), nG.as("__n"), col("y"))
+      .groupBy(col("doc_id"), (col("h") % GramDims).as("d"), col("__n"), col("y"))
       .agg(count(lit(1)).as("c"))
-      .select(col("doc_id"), col("d"), expr("c * 1000000L div __n").as("x"))
+      .select(col("doc_id"), col("d"), expr("c * 1000000L div __n").as("x"), col("y"))
     val stat = base.select(col("doc_id"),
       lit(CountDim.toLong).as("d"),
-      (least(nG, lit(1000L)) * 1000L).as("x"))
+      (least(nG, lit(1000L)) * 1000L).as("x"), col("y"))
     bow.unionByName(stat)
   }
 
@@ -106,145 +78,18 @@ object LangModel {
   final case class Fitted(langs: IndexedSeq[String], w: Array[Array[Long]],
                           z0: Array[Long], mu: Array[Long], mad: Array[Long])
 
-  /** The ONE standardization projection (raw (doc_id, d, x) →
-    * (doc_id, d, z, dz) under given stats) — shared by training and
-    * serve so the two paths cannot drift.
+  /** The (doc_id, text, lang) projection, materialized once: the feature
+    * union reads it twice (gram rows and the count row), and the fit also
+    * reads it for the class list. Every harness caller feeds the DECODED
+    * CHARSET ARCHIVE (gunzip → WARC framing → charset sniff → decode per
+    * record), which would otherwise run once per read; a caller with a
+    * cheap input pays one redundant localCheckpoint.
     */
-  private def standardizeCols(raw: DataFrame, mu: Array[Long],
-      mad: Array[Long], z0: Array[Long]): DataFrame = {
-    // lit(Array[Long]) = one reference object in the generated code —
-    // identical source across rounds/fits, so the Janino cache hits
-    // (the QualityModel.standardizeCols discipline)
-    val muA = lit(mu)
-    val madA = lit(mad)
-    val z0A = lit(z0)
-    raw.select(col("doc_id"), col("d"),
-      ((col("x") - element_at(muA, (col("d") + 1).cast("int"))) * 1000L)
-        .cast("long").as("__num"),
-      (element_at(madA, (col("d") + 1).cast("int")) + 1L).as("__den"),
-      element_at(z0A, (col("d") + 1).cast("int")).as("__z0"))
-      .select(col("doc_id"), col("d"),
-        expr("__num div __den").as("z"),
-        (expr("__num div __den") - col("__z0")).as("dz"))
-  }
-
-  /** Standardize: (checkpointed (doc_id, d, z, dz) table, z0, mu,
-    * mad) — the [[QualityModel.standardized]] recurrence without the
-    * label column (labels are per-class here).
-    */
-  /** Standardize (the [[QualityModel.standardized]] recurrence without
-    * the label column): zy is a pure projection over the ONE
-    * checkpointed raw table; nDocs comes from the `sums` collect (the
-    * always-present gram-count stat dim has exactly one row per doc)
-    * instead of a separate rescan of the base corpus.
-    */
-  private def standardized(df: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, Array[Long], Array[Long], Array[Long]) = {
-    val raw = graft.core.Materialize.checkpoint(
-      rawFeatures(df, idCol, textCol).repartition(col("doc_id")))
-    val sums = raw.groupBy(col("d"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt")).collect()
-    val mu = new Array[Long](NDims)
-    val cnt = new Array[Long](NDims)
-    val sx = new Array[Long](NDims)
-    sums.foreach { r =>
-      val d = r.getLong(0).toInt
-      sx(d) = r.getLong(1); cnt(d) = r.getLong(2)
-    }
-    val nDocs = cnt(CountDim)
-    require(nDocs > 0, "LangModel.fit on an empty corpus")
-    (0 until NDims).foreach(d => mu(d) = tdiv(sx(d), nDocs))
-    val muArr = array(mu.toSeq.map(lit): _*)
-    val devs = raw.groupBy(col("d"))
-      .agg(sum(abs(col("x") - element_at(muArr, (col("d") + 1).cast("int"))))
-        .as("sdev")).collect()
-    val mad = new Array[Long](NDims)
-    devs.foreach { r =>
-      val d = r.getLong(0).toInt
-      mad(d) = (r.getLong(1) + (nDocs - cnt(d)) * math.abs(mu(d))) / nDocs
-    }
-    val z0 = Array.tabulate(NDims) { d =>
-      if (d == Bias) BiasZ else tdiv((0L - mu(d)) * 1000L, mad(d) + 1L)
-    }
-    (standardizeCols(raw, mu, mad, z0), z0, mu, mad)
-  }
-
-  /** Per-doc margins for ALL K classes in one aggregate: columns
-    * `__m0..__m{K−1}` (dense parts folded into per-class constants).
-    */
-  private def marginsOf(zy: DataFrame, w: Array[Array[Long]],
-      z0: Array[Long]): DataFrame = {
-    // per-class weights AND the folded dense constant in ONE
-    // array-literal reference (slot NDims+1 = C_k) — constant generated
-    // source across rounds (the QualityModel discipline)
-    val aggs = w.indices.map { k =>
-      val c = (0 until NDims).map(d => w(k)(d) * z0(d)).sum
-      val wc = lit(w(k) :+ c)
-      (sum(element_at(wc, (col("d") + 1).cast("int")) * col("dz"))
-        + element_at(wc, lit(NDims + 1)))
-        .as(s"__m$k")
-    }
-    zy.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** The one-vs-rest averaged-perceptron loop; returns the K averaged
-    * weight vectors in `langs` order.
-    */
-  private def trainAveraged(zy: DataFrame, labels: DataFrame,
-      langs: IndexedSeq[String], z0: Array[Long]): Array[Array[Long]] = {
-    val K = langs.size
-    val w = Array.fill(K)(new Array[Long](NDims))
-    val wavg = Array.fill(K)(new Array[Long](NDims))
-    for (it <- 1 to Iters) {
-      // all K margins in one pass, then the misclassified (doc, class)
-      // rows: y_k = +1 iff the doc's declared lang is class k
-      val kStructs = array(langs.indices.map(k =>
-        struct(lit(k.toLong).as("k"),
-          when(col("lang") === langs(k), 1L).otherwise(-1L).as("y"),
-          col(s"__m$k").as("m"))): _*)
-      val mis = marginsOf(zy, w, z0).join(labels, "doc_id")
-        .select(col("doc_id"), explode(kStructs).as("e"))
-        .filter(col("e.y") * col("e.m") <= 0L)
-        .select(col("doc_id").as("__mid"), col("e.k").as("__k"),
-          col("e.y").as("__my"))
-      // ONE (class, dim)-keyed aggregate + collect per round (was: mis
-      // checkpoint + per-class scalar collect + per-dim collect = 3
-      // jobs): the per-(k, d) rows carry the sparse update Σ_mis y·dz,
-      // and the always-present gram-count stat dim doubles as the
-      // per-(doc, class) marker — its row count is n_mis(k) and its Σy
-      // is the dense update's per-class scalar. ≤ K·NDims rows collected.
-      val upd = 
-        zy.join(mis, col("doc_id") === col("__mid"))
-        .groupBy(col("__k"), col("d"))
-        .agg(sum(col("__my") * col("dz")).as("dw"),
-          count(lit(1)).as("cnt"), sum(col("__my")).as("sym")).collect()
-      val nMis = new Array[Long](K)
-      val sy = new Array[Long](K)
-      upd.foreach { r =>
-        if (r.getLong(1) == CountDim.toLong) {
-          val k = r.getLong(0).toInt
-          nMis(k) = r.getLong(3); sy(k) = r.getLong(4)
-        }
-      }
-      if (nMis.exists(_ > 0)) {
-        val delta = Array.tabulate(K, NDims)((k, d) => z0(d) * sy(k))
-        upd.foreach(r =>
-          delta(r.getLong(0).toInt)(r.getLong(1).toInt) += r.getLong(2))
-        for (k <- 0 until K if nMis(k) > 0; d <- 0 until NDims)
-          w(k)(d) += tdiv(delta(k)(d), nMis(k))
-      }
-      for (k <- 0 until K; d <- 0 until NDims) wavg(k)(d) += w(k)(d)
-    }
-    wavg
-  }
-
-  private def labelsOf(df: DataFrame, idCol: String,
-      langCol: String): (DataFrame, IndexedSeq[String]) = {
-    val labels = df.select(col(idCol).as("doc_id"), col(langCol).as("lang"))
-    val langs = labels.select(col("lang")).distinct()
-      .collect().map(_.getString(0)).sorted.toIndexedSeq
-    (labels, langs)
-  }
+  private def corpusOf(df: DataFrame, idCol: String, textCol: String,
+      langCol: String): DataFrame =
+    graft.core.Materialize.checkpoint(
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+        col(langCol).as("lang")))
 
   /** Train on `df` and return the portable model (fit ONCE per corpus
     * — q_langid_train and q_langid_score share the artifact through
@@ -252,17 +97,14 @@ object LangModel {
     */
   def fit(df: DataFrame, idCol: String, textCol: String,
       langCol: String): Fitted = {
-    // materialize the (id, text, lang) projection ONCE: the training
-    // corpus may be an expensive derivation (the decoded charset
-    // archive), and the fit reads it from labelsOf, the feature pass,
-    // and every round's label join — without the cut each of those
-    // re-ran the full decode chain (optimization round)
-    val corpus = graft.core.Materialize.checkpoint(
-      df.select(col(idCol).as("doc_id"), col(textCol).as("text"),
-        col(langCol).as("lang")))
-    val (labels, langs) = labelsOf(corpus, "doc_id", "lang")
-    val (zy, z0, mu, mad) = standardized(corpus, "doc_id", "text")
-    Fitted(langs, trainAveraged(zy, labels, langs, z0), z0, mu, mad)
+    val corpus = corpusOf(df, idCol, textCol, langCol)
+    val langs = corpus.select(col("lang")).distinct()
+      .collect().map(_.getString(0)).sorted.toIndexedSeq
+    val s = Perceptron.standardize(rawFeatures(corpus), NDims, CountDim, "LangModel")
+    // y_k = +1 iff the doc's declared lang is class k
+    val classes = langs.map(l => when(col("y") === l, 1L).otherwise(-1L))
+    Fitted(langs, Perceptron.train(s.zy, classes, s.z0, CountDim, Iters),
+      s.z0, s.mu, s.mad)
   }
 
   /** The fitted model as its q_langid_train rows — one per (class,
@@ -282,30 +124,15 @@ object LangModel {
     */
   def scoreWith(df: DataFrame, idCol: String, textCol: String,
       langCol: String, m: Fitted): DataFrame = {
-    // one materialization of the scored corpus: features and labels both
-    // read it (the fit-side cut's serve twin — the margin aggregate and
-    // the label join would otherwise each re-run the input derivation).
-    // Advisor note (kept deliberately): every harness caller feeds the
-    // DECODED CHARSET ARCHIVE (gunzip → WARC framing → charset sniff →
-    // decode per record) — a known-expensive derivation that would
-    // otherwise run twice; a caller with a cheap pre-materialized input
-    // pays one redundant localCheckpoint of rows it already holds, the
-    // smaller cost of the two. Checkpointing the narrow feature table
-    // instead would leave the LABEL join re-running the decode chain.
-    val corpus = graft.core.Materialize.checkpoint(
-      df.select(col(idCol).as("doc_id"), col(textCol).as("text"),
-        col(langCol).as("lang")))
-    val labels = corpus.select(col("doc_id"), col("lang"))
-    val zy = standardizeCols(
-      rawFeatures(corpus, "doc_id", "text"), m.mu, m.mad, m.z0)
-    val mg = marginsOf(zy, m.w, m.z0)
+    val zy = Perceptron.standardizeCols(
+      rawFeatures(corpusOf(df, idCol, textCol, langCol)), m.mu, m.mad, m.z0)
     val best = m.langs.indices.map(k => col(s"__m$k")).reduce(greatest(_, _))
     val pred = m.langs.indices.reverse.foldLeft(lit(m.langs.last)) {
       case (els, k) =>
         when(col(s"__m$k") === best, lit(m.langs(k))).otherwise(els)
     }
-    mg.join(labels, "doc_id")
-      .select(col("doc_id"), col("lang"), pred.as("lang_pred"))
+    Perceptron.margins(zy, m.w.toSeq, m.z0)
+      .select(col("doc_id"), col("y").as("lang"), pred.as("lang_pred"))
       .withColumn("agree", col("lang") === col("lang_pred"))
   }
 
@@ -325,7 +152,7 @@ object LangModel {
   // DuckDB mirrors — the same recurrence unrolled, class-keyed; the
   // oracle DENSIFIES (docs × dims × classes is fine at oracle scale)
   // because dense and sparse formulations are algebraically identical
-  // in exact integer math (the QualityModel discipline).
+  // in exact integer math.
   // ---------------------------------------------------------------------
 
   private def trainCtes(from: String): String = {

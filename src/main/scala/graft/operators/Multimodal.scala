@@ -313,15 +313,9 @@ object Multimodal {
     * verify the real parser byte-exactly from the text alone: any
     * mis-parse (offset, endianness, field width) breaks the hash match.
     */
-  def wavAssets(spark: SparkSession, dir: String): DataFrame =
-    wavAssetsFrom(ColOps.table(spark, dir, "documents").select(
-      col("doc_id").as("asset_id"), encode(col("text"), "UTF-8").as("media")))
-
-  /** [[wavAssets]]'s core over an arbitrary (asset_id, media: binary)
-    * frame (split out so scale probes can stage any input size): each
-    * payload byte becomes one PCM sample, rate `8000 + (id % 3)·4000`.
-    */
-  def wavAssetsFrom(assets: DataFrame): DataFrame = {
+  def wavAssets(spark: SparkSession, dir: String): DataFrame = {
+    val assets = ColOps.table(spark, dir, "documents").select(
+      col("doc_id").as("asset_id"), encode(col("text"), "UTF-8").as("media"))
     val schema = StructType(Seq(
       StructField("asset_id", LongType, nullable = false),
       StructField("media", BinaryType, nullable = false)))
@@ -336,7 +330,7 @@ object Multimodal {
           (8000 + (id % 3) * 4000).toInt))
       }
     }
-    assets.sparkSession.createDataFrame(rdd, schema)
+    spark.createDataFrame(rdd, schema)
   }
 
   /** Shared oracle prefix: per-doc expected PCM sample list from the

@@ -5,58 +5,23 @@ import org.apache.spark.sql.functions._
 
 /** TRAINED quality classifier — the model-based scoring pass every
   * production pipeline (CCNet, RefinedWeb, DCLM) layers over heuristic
-  * rules: a hashed bag-of-words + text-statistics linear model trained
-  * by integer-exact batch rounds and applied as a broadcast scoring
-  * pass.
+  * rules: a hashed bag-of-words + text-statistics linear model, the
+  * K = 1 case of the shared [[Perceptron]] (integer-exact standardization,
+  * fixed averaged-perceptron rounds, one action per round), applied as a
+  * broadcast scoring pass.
   *
   * Training label: the repo's own heuristic quality gate
   * ([[TextOps.qualityFilter]] keep flag) — the production "distill the
   * seed filter into a classifier" move (DCLM trains on exactly such
   * heuristic-labeled seeds), and a label both engines already compute
-  * bit-identically.
+  * bit-identically. The averaged model reaches ~93% teacher agreement on
+  * the fixture corpus vs the 66% majority floor.
   *
   * Model: [[BowDims]] word-hash dimensions (portable
   * [[TextOps.charHash]], per-doc counts ppm-normalized) + five Gopher-
   * style stat dimensions (word count, mean-word-length ppm, distinct
-  * ppm, stopword ppm, digit ppm) + a bias. Features are integer-
-  * standardized per dimension (mean and MEAN-ABSOLUTE-DEVIATION, both
-  * truncating integer division — σ would need a square root no two
-  * engines floor identically).
-  *
-  * Learning rule: AVERAGED BATCH PERCEPTRON — the integer-exact member
-  * of the linear-classifier family (logistic's sigmoid cannot be
-  * reproduced bit-for-bit across engines; the perceptron hinge and the
-  * weight average can). Round t: every doc's margin under w(t−1);
-  * misclassified = y·margin ≤ 0; update w += Σ_mis y·z ÷ n_mis
-  * (truncating); the OUTPUT model is Σ_t w_t — averaging is what makes
-  * the batch rule stable (the raw final iterate oscillates between the
-  * class majorities; the averaged one reaches ~93% teacher agreement
-  * on the fixture corpus vs the 66% majority floor). Division
-  * semantics are pinned: Spark's `div` and DuckDB's `//` BOTH truncate
-  * toward zero (spec-asserted), so the unrolled DuckDB mirror
-  * hash-matches the weights exactly.
-  *
-  * Scale shape (the 100-TB audit):
-  *  - the sparse (doc, dim, z) table is derived once, partitioned on
-  *    doc_id, CHECKPOINTED; per-round work never re-tokenizes;
-  *  - absent entries standardize to a PER-DIM CONSTANT z0, so margins
-  *    and updates stay SPARSE: margin = C + Σ_present w_d·(z_d−z0_d)
-  *    with C = Σ_d w_d·z0_d + bias folded in (driver-computed from the
-  *    70-long model), and the dense part of the update collapses to
-  *    z0_d · Σ_mis y — one scalar aggregate;
-  *  - each round = ONE job: the per-doc margin aggregate (no new
-  *    exchange — the table is already partitioned on doc_id), a
-  *    co-partitioned join against the misclassified set, and one
-  *    ≤[[NDims]]-key aggregate with map-side combine, collected once
-  *    (the always-present word-count stat dim doubles as the per-doc
-  *    marker, so n_mis and Σy ride the same collect);
-  *  - rounds are FIXED ([[Iters]]), corpus-size-independent, so the
-  *    whole train is O(iters · corpus) like the BPE vocab loop.
-  *
-  * Reference cell: the fold/scan sink family
-  * (/root/reference/src/Data/Conduino/Combinators.hs:437-471) — a
-  * training round is a corpus-wide fold whose accumulator is the
-  * weight vector.
+  * ppm, stopword ppm, digit ppm) + a bias. The word-count stat dim is
+  * the kernel's always-present count dim.
   */
 object QualityModel {
 
@@ -66,17 +31,10 @@ object QualityModel {
   val BowDims = 64
   val NDims: Int = BowDims + 6
   private val Bias = NDims - 1
+  private val BiasZ = Perceptron.BiasZ
 
   /** Fixed averaged-perceptron rounds — corpus-size-independent. */
   val Iters = 8
-
-  /** z value of the bias dimension for every doc. */
-  private val BiasZ = 1000L
-
-  /** Truncating integer division (toward zero) — the semantics Spark's
-    * `div`, DuckDB's `//`, and Java `/` share (spec-pinned).
-    */
-  private def tdiv(a: Long, b: Long): Long = a / b
 
   /** Sparse RAW features (doc_id, d, x, y): BoW ppm counts on dims
     * 0..[[BowDims]]−1, the five stat dims, label from the heuristic
@@ -138,103 +96,27 @@ object QualityModel {
   final case class Fitted(w: Array[Long], z0: Array[Long],
                           mu: Array[Long], mad: Array[Long])
 
-  /** Standardize the sparse feature table: returns the (doc_id, d, y,
-    * z, dz) table — a pure projection over the ONE checkpointed raw
-    * table, which stays partitioned on doc_id — plus the per-dim
-    * absent-entry constants z0 and the standardization stats.
-    *
-    * Optimization-round shape changes (same values): nDocs comes from
-    * the `sums` collect (the always-present word-count stat dim has
-    * exactly one row per doc) instead of a separate full rescan of the
-    * base corpus; and zy is no longer re-checkpointed + re-shuffled —
-    * standardizeCols is integer arithmetic over the checkpointed raw,
-    * cheaper to recompute per round than to materialize again.
-    */
-  private def standardized(df: DataFrame, idCol: String, textCol: String)
-      : (DataFrame, Array[Long], Array[Long], Array[Long]) = {
-    val raw = graft.core.Materialize.checkpoint(
-      rawFeatures(df, idCol, textCol).repartition(col("doc_id")))
-    // pass 1: per-dim sum + count → mu (x ≥ 0 always, so sums are too)
-    val sums = raw.groupBy(col("d"))
-      .agg(sum(col("x")).as("sx"), count(lit(1)).as("cnt")).collect()
-    val mu = new Array[Long](NDims)
-    val cnt = new Array[Long](NDims)
-    val sx = new Array[Long](NDims)
-    sums.foreach { r =>
-      val d = r.getLong(0).toInt
-      sx(d) = r.getLong(1); cnt(d) = r.getLong(2)
-    }
-    // every doc owns exactly one word-count stat row (dim BowDims), so
-    // its count IS the corpus size — no second scan of the base corpus
-    val nDocs = cnt(BowDims)
-    require(nDocs > 0, "QualityModel.fit on an empty corpus")
-    (0 until NDims).foreach(d => mu(d) = tdiv(sx(d), nDocs))
-    // pass 2: per-dim mean absolute deviation (absent entries are |mu|)
-    val muArr = array(mu.toSeq.map(lit): _*)
-    val devs = raw.groupBy(col("d"))
-      .agg(sum(abs(col("x") - element_at(muArr, (col("d") + 1).cast("int"))))
-        .as("sdev")).collect()
-    val mad = new Array[Long](NDims)
-    devs.foreach { r =>
-      val d = r.getLong(0).toInt
-      mad(d) = (r.getLong(1) + (nDocs - cnt(d)) * math.abs(mu(d))) / nDocs
-    }
-    val z0 = Array.tabulate(NDims) { d =>
-      if (d == Bias) BiasZ else tdiv((0L - mu(d)) * 1000L, mad(d) + 1L)
-    }
-    (standardizeCols(raw, mu, mad, z0), z0, mu, mad)
-  }
+  private def standardized(df: DataFrame, idCol: String,
+      textCol: String): Perceptron.Standardized =
+    Perceptron.standardize(rawFeatures(df, idCol, textCol), NDims, BowDims,
+      "QualityModel")
 
-  /** The ONE standardization projection (raw (doc_id, d, x, y) →
-    * (doc_id, d, y, z, dz)) — shared by training and serve so the two
-    * paths cannot drift (serve ≡ batch is the q_quality_stream
-    * contract; review finding).
-    */
-  private def standardizeCols(raw: DataFrame, mu: Array[Long],
-      mad: Array[Long], z0: Array[Long]): DataFrame = {
-    // lit(Array[Long]), never array(lit, lit, …): an ArrayType literal
-    // rides the generated code as a REFERENCE object, so the generated
-    // source is identical across rounds/fits and the whole-stage-codegen
-    // (Janino) cache hits; 70 inlined long literals made every round of
-    // every fit recompile its stages (optimization round)
-    val muArr = lit(mu)
-    val madArr = lit(mad)
-    val z0Arr = lit(z0)
-    raw.select(col("doc_id"), col("d"), col("y"),
-      ((col("x") - element_at(muArr, (col("d") + 1).cast("int"))) * 1000L)
-        .cast("long").as("__num"),
-      (element_at(madArr, (col("d") + 1).cast("int")) + 1L).as("__den"),
-      element_at(z0Arr, (col("d") + 1).cast("int")).as("__z0"))
-      .select(col("doc_id"), col("d"), col("y"),
-        expr("__num div __den").as("z"),
-        (expr("__num div __den") - col("__z0")).as("dz"))
-  }
+  private def fitted(s: Perceptron.Standardized): Fitted =
+    Fitted(Perceptron.train(s.zy, IndexedSeq(col("y")), s.z0, BowDims, Iters).head,
+      s.z0, s.mu, s.mad)
 
-  /** The ONE scored-output aggregate ((doc_id, d, y, dz) → per-doc
-    * score/pred/agree under weights `w`) — shared by batch score and
-    * the serve path (review finding).
+  /** Per-doc (doc_id, y, score, pred, agree) under `m` — batch score and
+    * the serve path share it.
     */
-  private def scoredOutput(zy: DataFrame, w: Array[Long],
-      z0: Array[Long]): DataFrame = {
-    // weights AND the folded dense constant in ONE array-literal
-    // reference (slot NDims+1 = C): a bare lit(c) would inline a
-    // round-varying long into the generated source and force a Janino
-    // recompile per model (see standardizeCols note)
-    val c = (0 until NDims).map(d => w(d) * z0(d)).sum
-    val wc = lit(w :+ c)
-    zy.groupBy(col("doc_id"), col("y"))
-      .agg((sum(element_at(wc, (col("d") + 1).cast("int")) * col("dz"))
-        + element_at(wc, lit(NDims + 1))).as("score"))
-      .select(col("doc_id"), col("y"), col("score"),
-        (col("score") > 0L).as("pred"),
-        ((col("score") > 0L) === (col("y") > 0L)).as("agree"))
-  }
+  private def scored(zy: DataFrame, m: Fitted): DataFrame =
+    Perceptron.margins(zy, Seq(m.w), m.z0)
+      .select(col("doc_id"), col("y"), col("__m0").as("score"),
+        (col("__m0") > 0L).as("pred"),
+        ((col("__m0") > 0L) === (col("y") > 0L)).as("agree"))
 
   /** Train on `df` and return the portable model. */
-  def fit(df: DataFrame, idCol: String, textCol: String): Fitted = {
-    val (zy, z0, mu, mad) = standardized(df, idCol, textCol)
-    Fitted(trainAveraged(zy, z0), z0, mu, mad)
-  }
+  def fit(df: DataFrame, idCol: String, textCol: String): Fitted =
+    fitted(standardized(df, idCol, textCol))
 
   /** Score ANY document set with an already-fitted model — the serve
     * path (train on the corpus once, score arriving docs forever): one
@@ -243,63 +125,17 @@ object QualityModel {
     */
   def scoreWith(df: DataFrame, idCol: String, textCol: String,
       m: Fitted): DataFrame =
-    scoredOutput(
-      standardizeCols(rawFeatures(df, idCol, textCol), m.mu, m.mad, m.z0),
-      m.w, m.z0)
-
-  /** The averaged-perceptron loop over the standardized sparse table;
-    * returns the AVERAGED weights (length [[NDims]], bias last).
-    */
-  private def trainAveraged(zy: DataFrame, z0: Array[Long]): Array[Long] = {
-    val w = new Array[Long](NDims)
-    val wavg = new Array[Long](NDims)
-    for (it <- 1 to Iters) {
-      // margin = C + Σ_present w_d·dz_d, with the dense part folded
-      // into the constant C (absent entries all sit at z0); w and C
-      // enter as ONE array-literal reference so every round reuses the
-      // same generated code (see standardizeCols note)
-      val c = (0 until NDims).map(d => w(d) * z0(d)).sum
-      val wc = lit(w :+ c)
-      val margins = zy.groupBy(col("doc_id"), col("y"))
-        .agg((sum(element_at(wc, (col("d") + 1).cast("int")) * col("dz"))
-          + element_at(wc, lit(NDims + 1))).as("margin"))
-      val mis = margins.filter(col("y") * col("margin") <= 0L)
-        .select(col("doc_id").as("__mid"))
-      // ONE aggregate + collect per round (was: mis checkpoint + scalar
-      // collect + per-dim collect = 3 jobs): the per-dim rows carry the
-      // sparse update Σ_mis y·dz, and the always-present word-count stat
-      // dim doubles as the per-doc marker — its row count is n_mis and
-      // its Σy is the dense update's scalar. zy is a projection over the
-      // checkpointed raw table, so the margin subtree's rescan is cheap.
-      val upd = zy.join(mis, col("doc_id") === col("__mid"))
-        .groupBy(col("d"))
-        .agg(sum(col("y") * col("dz")).as("dw"),
-          count(lit(1)).as("cnt"), sum(col("y")).as("sy")).collect()
-      val nMis = upd.collectFirst {
-        case r if r.getLong(0) == BowDims.toLong => r.getLong(2)
-      }.getOrElse(0L)
-      if (nMis > 0) {
-        val sy = upd.collectFirst {
-          case r if r.getLong(0) == BowDims.toLong => r.getLong(3)
-        }.get
-        val delta = Array.tabulate(NDims)(d => z0(d) * sy)
-        upd.foreach(r => delta(r.getLong(0).toInt) += r.getLong(1))
-        (0 until NDims).foreach(d => w(d) += tdiv(delta(d), nMis))
-      }
-      (0 until NDims).foreach(d => wavg(d) += w(d))
-    }
-    wavg
-  }
+    scored(Perceptron.standardizeCols(rawFeatures(df, idCol, textCol),
+      m.mu, m.mad, m.z0), m)
 
   /** q_quality_train: the averaged model — one row per dimension
     * (d, w), bias last.
     */
   def train(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
-    val (zy, z0, _, _) = standardized(df, idCol, textCol)
-    val w = trainAveraged(zy, z0)
     import spark.implicits._
-    w.zipWithIndex.map { case (v, d) => (d.toLong, v) }.toSeq.toDF("d", "w")
+    fit(df, idCol, textCol).w.zipWithIndex.map { case (v, d) => (d.toLong, v) }
+      .toSeq.toDF("d", "w")
   }
 
   /** q_quality_score: every doc scored by the trained model in one
@@ -308,8 +144,8 @@ object QualityModel {
     * thresholds on.
     */
   def score(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val (zy, z0, _, _) = standardized(df, idCol, textCol)
-    scoredOutput(zy, trainAveraged(zy, z0), z0)
+    val s = standardized(df, idCol, textCol)
+    scored(s.zy, fitted(s))
   }
 
   // ---------------------------------------------------------------------

@@ -534,18 +534,6 @@ object Similarity {
   val NumCells = 16
   val NProbe = 4
 
-  /** IVF ANN: coarse-quantize every vector to its nearest "centroid"
-    * cell, search only the query's `nProbe` nearest cells.
-    *
-    * Centroids are the first `nCells` vectors of the collection — a
-    * deterministic seeding (k-means iterations would average floats in
-    * engine-private order and could never hash-match a cross-engine
-    * oracle; seeded IVF keeps the inverted-file structure, which is the
-    * part that scales: assignment is n·nCells dots against a BROADCAST
-    * seed set, search touches nProbe/nCells of the collection). Cell
-    * argmax and probe ranking use the same window formulation as the
-    * oracle SQL, so assignments agree bit-for-bit.
-    */
   /** Seed rows of the coarse quantizer (first `nCells` vectors — see
     * [[ivfTopK]] for why seeded).
     */
@@ -566,26 +554,24 @@ object Similarity {
     ass0.withColumn("rn", row_number().over(wAss))
   }
 
+  /** IVF ANN: coarse-quantize every vector to its nearest "centroid"
+    * cell, search only the query's `nProbe` nearest cells.
+    *
+    * Centroids are the first `nCells` vectors of the collection — a
+    * deterministic seeding (k-means iterations would average floats in
+    * engine-private order and could never hash-match a cross-engine
+    * oracle; seeded IVF keeps the inverted-file structure, which is the
+    * part that scales: assignment is n·nCells dots against a BROADCAST
+    * seed set, search touches nProbe/nCells of the collection). Cell
+    * argmax and probe ranking use the same window formulation as the
+    * oracle SQL, so assignments agree bit-for-bit.
+    */
   def ivfTopK(emb: DataFrame, nQ: Int, k: Int, nCells: Int = NumCells,
               nProbe: Int = NProbe): DataFrame = {
+    // the serve path over an in-memory index build — one copy of the
+    // probe/score/rank pipeline, as ivfPqTopK does for IVF-PQ
     val sig = graft.core.Materialize.checkpoint(withNorm(emb))
-    val ass = graft.core.Materialize.checkpoint(
-      ivfRanked(sig, ivfSeeds(sig, nCells)))
-    val cells = ass.filter(col("rn") === 1).select(col("vec_id"), col("sid").as("cell"))
-    val probes = ass.filter(col("vec_id") < nQ && col("rn") <= nProbe)
-      .select(col("vec_id").as("q_id"), col("sid").as("cell"))
-    val cand = broadcast(probes).join(cells, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id")).distinct()
-    val q = sig.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-    val scored = cand.join(broadcast(q), "q_id")
-      .join(sig.select(col("vec_id"), col("emb"), col("nrm")), "vec_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineFromNorms(col("q_emb"), col("emb"), col("q_nrm"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cos"), col("rnk").cast("long").as("rnk"))
+    ivfServe(ivfIndexRows(sig, nCells), sig, nQ, k, nCells, nProbe)
   }
 
   // --- persisted IVF index (write-once / query-many serving shape) ---
@@ -619,8 +605,8 @@ object Similarity {
     * so no second scan of the collection exists anywhere in the plan.
     * Since every vector lives in exactly one cell directory, a
     * (q_id, vec_id) candidate arises at most once — no dedup needed.
-    * Results are identical to [[ivfTopK]] (same seeded assignment, same
-    * window formulation), so the persisted path shares its oracle.
+    * Results ≡ [[ivfTopK]] by construction (the in-memory form
+    * delegates here), so the persisted path shares its oracle.
     */
   def ivfServe(index: DataFrame, sig: DataFrame, nQ: Int, k: Int,
                nCells: Int = NumCells, nProbe: Int = NProbe): DataFrame =
@@ -810,19 +796,30 @@ object Similarity {
   def pqAdcTopK(emb: DataFrame, nQ: Int, kNN: Int,
                 m: Int = PqM, k: Int = PqK): DataFrame = {
     val sig = graft.core.Materialize.checkpoint(emb)
-    val codes = pqCodes(sig, m, k)
+    adcRanked(pqCodes(sig, m, k), Seq("sub", "code"), sig, pqCodebook(sig, m, k), nQ, m)
+      .filter(col("rnk") <= kNN)
+      .select(col("q_id"), col("vec_id"), col("adist"),
+        col("rnk").cast("long").as("rnk"))
+  }
+
+  /** The ONE ADC scan: each query's distance to every codeword (an
+    * `nQ × m × k` table, micro-scaled to integers and BROADCAST), joined
+    * to the candidate code rows `cand` on `keys`, summed per
+    * (q_id, vec_id) into `adist` and ranked per query (adist, vec_id) as
+    * `rnk`. A query is never its own candidate.
+    */
+  private def adcRanked(cand: DataFrame, keys: Seq[String], sig: DataFrame,
+                        codebook: DataFrame, nQ: Int, m: Int): DataFrame = {
     val dtab = explodeSubs(sig.filter(col("vec_id") < nQ), m, "sv")
       .withColumnRenamed("vec_id", "q_id")
-      .join(broadcast(pqCodebook(sig, m, k)), "sub")
+      .join(broadcast(codebook), "sub")
       .select(col("q_id"), col("sub"), col("code"),
         floor(sqDist(col("sv"), col("cw")) * PqMicro).cast("long").as("dq"))
-    val scored = codes.join(broadcast(dtab), Seq("sub", "code"))
+    val scored = cand.join(broadcast(dtab), keys)
       .filter(col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id")).agg(sum(col("dq")).as("adist"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= kNN)
-      .select(col("q_id"), col("vec_id"), col("adist"),
-        col("rnk").cast("long").as("rnk"))
+    scored.withColumn("rnk", row_number().over(w))
   }
 
   /** Two-stage PQ search: ADC shortlist (size `shortlist`), then EXACT
@@ -992,17 +989,8 @@ object Similarity {
       col("sub").cast("long").as("sub"), col("code"))
     val cb = cbIdx.select(col("sub").cast("long").as("sub"),
       col("code"), col("cw"))
-    val dtab = explodeSubs(sig.filter(col("vec_id") < nQ), m, "sv")
-      .withColumnRenamed("vec_id", "q_id")
-      .join(broadcast(cb), "sub")
-      .select(col("q_id"), col("sub"), col("code"),
-        floor(sqDist(col("sv"), col("cw")) * PqMicro).cast("long").as("dq"))
-    val scored = codes.join(broadcast(dtab), Seq("sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id")).agg(sum(col("dq")).as("adist"))
-    val wS = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    val cand = scored.withColumn("rn", row_number().over(wS))
-      .filter(col("rn") <= shortlist).select(col("q_id"), col("vec_id"))
+    val cand = adcRanked(codes, Seq("sub", "code"), sig, cb, nQ, m)
+      .filter(col("rnk") <= shortlist).select(col("q_id"), col("vec_id"))
     rerankExact(cand, sig, nQ, kNN)
   }
 
@@ -1106,22 +1094,14 @@ object Similarity {
     val probes = ivfRanked(sig.filter(col("vec_id") < nQ), ivfSeeds(sig, nCells))
       .filter(col("rn") <= nProbe)
       .select(col("vec_id").as("q_id"), col("sid").cast("int").as("cell"))
-    val dtab = explodeSubs(sig.filter(col("vec_id") < nQ), m, "sv")
-      .withColumnRenamed("vec_id", "q_id")
-      .join(broadcast(pqCodebook(sig, m, k)), "sub")
-      .select(col("q_id"), col("sub"), col("code"),
-        floor(sqDist(col("sv"), col("cw")) * PqMicro).cast("long").as("dq"))
     val cand = broadcast(probes).join(index, "cell")
-      .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         posexplode(col("codes")).as(Seq("sub", "code")))
       .select(col("q_id"), col("vec_id"), col("sub").cast("long").as("sub"),
         col("code"))
-    val scored = cand.join(broadcast(dtab), Seq("q_id", "sub", "code"))
-      .groupBy(col("q_id"), col("vec_id")).agg(sum(col("dq")).as("adist"))
-    val wS = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id"))
-    val short = scored.withColumn("rn", row_number().over(wS))
-      .filter(col("rn") <= shortlist).select(col("q_id"), col("vec_id"))
+    val short = adcRanked(cand, Seq("q_id", "sub", "code"), sig,
+      pqCodebook(sig, m, k), nQ, m)
+      .filter(col("rnk") <= shortlist).select(col("q_id"), col("vec_id"))
     rerankExact(short, sig, nQ, kNN)
   }
 

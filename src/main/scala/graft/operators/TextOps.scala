@@ -118,18 +118,6 @@ object TextOps {
   val QualityRules: Seq[String] =
     Seq("too_short", "word_len", "stop_ratio", "repetition", "digit_ratio")
 
-  /** Composite document quality filter: per-rule pass flags, the overall
-    * `keep` decision, and the FIRST failed rule as `reason` (NULL for
-    * kept docs) — the C4/Gopher-shaped rule battery of a corpus
-    * cleaning pipeline, kept auditable (a rejected doc says why, a
-    * dashboard can aggregate reasons) rather than a bare boolean.
-    *
-    * Pure per-row column expressions over one text scan — no UDF, no
-    * shuffle, whole-stage-codegen'd; at 100 TB this is a map-only pass
-    * whose cost is the scan itself. All five rules compare integers
-    * (counts cross-multiplied by the ratio denominators), so engine
-    * agreement is exact, never within-epsilon.
-    */
   /** The five rule flags of [[qualityFilter]] over a text COLUMN — the
     * one definition of the rule battery, shared by the filter query and
     * by [[QualityModel]]'s inline teacher label (which previously
@@ -161,16 +149,35 @@ object TextOps {
   /** The composite keep decision as a bare column (all five flags). */
   def qualityKeep(t: Column): Column = qualityFlags(t).reduce(_ && _)
 
-  def qualityFilter(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val flags = qualityFlags(col(textCol))
+  /** Composite document quality filter: per-rule pass flags, the overall
+    * `keep` decision, and the FIRST failed rule as `reason` (NULL for
+    * kept docs) — the C4/Gopher-shaped rule battery of a corpus
+    * cleaning pipeline, kept auditable (a rejected doc says why, a
+    * dashboard can aggregate reasons) rather than a bare boolean.
+    *
+    * Pure per-row column expressions over one text scan — no UDF, no
+    * shuffle, whole-stage-codegen'd; at 100 TB this is a map-only pass
+    * whose cost is the scan itself. All five rules compare integers
+    * (counts cross-multiplied by the ratio denominators), so engine
+    * agreement is exact, never within-epsilon.
+    */
+  def qualityFilter(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    qualityReport(df, Seq(col(idCol)), qualityFlags(col(textCol)))
+
+  /** The quality report over five rule `flags`: the `lead` columns, one
+    * `ok_*` column per rule, `keep`, and the FIRST failed rule as
+    * `reason` — shared by the ASCII and Unicode batteries.
+    */
+  private def qualityReport(df: DataFrame, lead: Seq[Column],
+                            flags: Seq[Column]): DataFrame = {
     val reason = QualityRules.zip(flags).reverse
       .foldLeft(lit(null).cast("string")) { case (els, (name, ok)) =>
         when(!ok, lit(name)).otherwise(els)
       }
-    df.select(col(idCol) +:
+    df.select(lead ++
       flags.zip(Seq("ok_len", "ok_word_len", "ok_stop", "ok_distinct", "ok_digit"))
-        .map { case (c, n) => c.as(n) } :+
-      flags.reduce(_ && _).as("keep") :+ reason.as("reason"): _*)
+        .map { case (c, n) => c.as(n) } ++
+      Seq(flags.reduce(_ && _).as("keep"), reason.as("reason")): _*)
   }
 
   /** DuckDB mirror of [[qualityFilter]] (same constants, same integer
@@ -264,8 +271,12 @@ object TextOps {
     * 1-row broadcast of total_words onto the (small) count table, then
     * a single global summary — never a driver-side vocabulary.
     */
-  def vocabSummary(df: DataFrame, textCol: String, cutoffDenom: Long): DataFrame = {
-    val counts = df.select(explode(words(col(textCol))).as("w"))
+  def vocabSummary(df: DataFrame, textCol: String, cutoffDenom: Long): DataFrame =
+    vocabOf(df, words(col(textCol)), cutoffDenom)
+
+  /** [[vocabSummary]]'s body over any per-doc token-array column. */
+  private def vocabOf(df: DataFrame, toks: Column, cutoffDenom: Long): DataFrame = {
+    val counts = df.select(explode(toks).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).cast("long").as("total_words"))
     counts.crossJoin(broadcast(total))
@@ -377,18 +388,8 @@ object TextOps {
     * same one-shuffle wordcount + 1-row broadcast total, script-
     * agnostic. Same distributed shape, same scale envelope.
     */
-  def vocabSummaryUnicode(df: DataFrame, textCol: String, cutoffDenom: Long): DataFrame = {
-    val counts = df.select(explode(tokensU(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val total = counts.agg(sum(col("c")).cast("long").as("total_words"))
-    counts.crossJoin(broadcast(total))
-      .withColumn("in_vocab", col("c") >= expr(s"total_words div $cutoffDenom"))
-      .agg(
-        sum(when(col("in_vocab"), 1L).otherwise(0L)).cast("long").as("n_vocab"),
-        sum(when(col("in_vocab"), col("c")).otherwise(0L)).cast("long").as("kept_tokens"),
-        sum(when(!col("in_vocab"), col("c")).otherwise(0L)).cast("long").as("oov_tokens"),
-        max(col("total_words")).as("total_words"))
-  }
+  def vocabSummaryUnicode(df: DataFrame, textCol: String, cutoffDenom: Long): DataFrame =
+    vocabOf(df, tokensU(col(textCol)), cutoffDenom)
 
   /** DuckDB mirror of [[vocabSummaryUnicode]] over a FROM source. */
   def vocabSummaryUnicodeSql(cutoffDenom: Long, from: String): String =
@@ -436,15 +437,8 @@ object TextOps {
     val okStop = nStops * 20L >= nW
     val okDistinct = nDistinct * 10L >= nW * 3L
     val okDigit = nDigits * 10L <= nC * 3L
-    val flags = Seq(okLen, okWordLen, okStop, okDistinct, okDigit)
-    val reason = QualityRules.zip(flags).reverse
-      .foldLeft(lit(null).cast("string")) { case (els, (name, ok)) =>
-        when(!ok, lit(name)).otherwise(els)
-      }
-    df.select((col(idCol) +: carry.map(col)) ++
-      flags.zip(Seq("ok_len", "ok_word_len", "ok_stop", "ok_distinct", "ok_digit"))
-        .map { case (c, n) => c.as(n) } ++
-      Seq(flags.reduce(_ && _).as("keep"), reason.as("reason")): _*)
+    qualityReport(df, col(idCol) +: carry.map(col),
+      Seq(okLen, okWordLen, okStop, okDistinct, okDigit))
   }
 
   /** DuckDB mirror of [[qualityFilterUnicode]] over a FROM source. */

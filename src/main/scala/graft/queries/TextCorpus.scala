@@ -86,8 +86,7 @@ object TextCorpus {
 
   /** The CURATED flagship over a warc-shard scan: frontier keep-first
     * (by record id per canonical target URI) BEFORE any page bytes are
-    * parsed, then extraction and the full build tail. ONE definition
-    * shared by the query and its scale probe so they can never drift.
+    * parsed, then extraction and the full build tail.
     */
   private def curatedExtracted(shards: DataFrame): DataFrame = {
     val kept = Urls.frontierKeepFirst(

@@ -66,8 +66,18 @@ class PlanSpec extends SparkSpec {
       "PartitionFilters"
     assert(PlanDump.normalize(raw) ==
       "MapElements graft.core.Compose$$$Lambda, obj#N: graft.core.Elem, [seq#N, value#N], " +
-      "[plan_id=N], Location: InMemoryFileIndex(1 paths)[file:<scratch>/pqcb_4_8_..., " +
+      "[plan_id=N], Location: InMemoryFileIndex(1 paths)[file:<scratch>/pqcb_..., " +
       "PartitionFilters")
+    // where the cut falls moves with the root's digit count: mid-name,
+    // or past the whole location; every form reads the same
+    def cut(root: String, keep: Int) = {
+      val full = s"[file:/tmp/x/$root/customer__root_testdata_sf0_001_d178f9eb]"
+      (if (keep >= full.length) full else full.take(keep) + "...") + ", PartitionFilters"
+    }
+    for (root <- Seq("graft_135454658593093446", "graft_1354546585930934467");
+         keep <- Seq(57, 58, 200))
+      assert(PlanDump.normalize(cut(root, keep)) ==
+        "[file:<scratch>/customer_..., PartitionFilters", cut(root, keep))
   }
 
   test("filter is pushed down to the parquet scan") {

@@ -37,6 +37,52 @@ class QualityModelSpec extends SparkSpec {
     (good ++ noStops ++ repetitive ++ digits).toDF("doc_id", "text")
   }
 
+  /** The model a fit of [[docs]] produced before the two trained
+    * classifiers shared one perceptron kernel (bias last).
+    */
+  private val Recorded: Map[String, Seq[Long]] = Map(
+    "w" -> Seq[Long](
+      4088, 1112, 4544, 4544, 4592, 4544, 4544, 4488, 4488, -4240, -4304, -296, -296,
+      -296, -3592, 7640, -3592, -4320, -3592, -3592, 0, 0, 0, 7992, 0, -4264, 0, 0, 4488,
+      4488, 7656, -296, -296, -4368, -4528, -3896, 4488, -4288, 0, 3216, 7992, 0, 7992,
+      -3592, -4320, 7640, -3592, -3592, -4320, 7984, -4320, -3592, -4568, 0, 7992, -4568,
+      -4632, -1224, -3592, -296, 3184, 1112, 1112, 1112, 3136, -5312, 1624, 7992, -4184,
+      -888),
+    "z0" -> Seq[Long](
+      -1285, -517, -511, -511, -517, -511, -511, -505, -505, -603, -652, -511, -511, -511,
+      -505, -918, -505, -608, -505, -505, 0, 0, 0, -899, 0, -599, 0, 0, -505, -505, -918,
+      -511, -511, -661, -661, -608, -505, -652, 0, -1499, -899, 0, -899, -505, -608, -918,
+      -505, -505, -608, -918, -608, -505, -642, 0, -899, -642, -652, -1088, -505, -511,
+      -1551, -517, -517, -517, -5083, -10413, -3211, -899, -685, 1000),
+    "mu" -> Seq[Long](
+      45328, 2398, 1388, 1388, 2083, 1388, 1388, 694, 694, 167361, 21906, 1704, 1704,
+      1704, 1010, 28787, 1010, 16161, 1010, 1010, 0, 0, 0, 27777, 0, 15151, 0, 0, 694,
+      694, 29482, 1704, 1704, 21906, 42108, 15845, 694, 20896, 0, 47979, 27777, 0, 55555,
+      1010, 16161, 28787, 1010, 1010, 16161, 84343, 16161, 1010, 21212, 0, 27777, 20202,
+      21212, 74242, 1010, 1704, 49684, 2398, 2398, 2398, 14722, 4427398, 758333, 166666,
+      154478, 0),
+    "mad" -> Seq[Long](
+      35255, 4637, 2715, 2715, 4027, 2715, 2715, 1373, 1373, 277546, 33589, 3332, 3332,
+      3332, 1997, 31346, 1997, 26576, 1997, 1997, 0, 0, 0, 30864, 0, 25252, 0, 0, 1373,
+      1373, 32102, 3332, 3332, 33102, 63630, 26057, 1373, 32040, 0, 31986, 30864, 0,
+      61728, 1997, 26576, 31346, 1997, 1997, 26576, 91840, 26576, 1997, 32996, 0, 30864,
+      31425, 32525, 68181, 1997, 3332, 32018, 4637, 4637, 4637, 2895, 425153, 236111,
+      185185, 225343, 0))
+
+  test("fit reproduces the recorded model; fit and scoreWith keep their job counts") {
+    val d = docs
+    val (m, fitJobs) = counted(QualityModel.fit(d, "doc_id", "text"))
+    assert(m.w.toSeq == Recorded("w"))
+    assert(m.z0.toSeq == Recorded("z0"))
+    assert(m.mu.toSeq == Recorded("mu"))
+    assert(m.mad.toSeq == Recorded("mad"))
+    // the counts before the kernel was shared: a second action per
+    // training round would add Iters jobs
+    assert(fitJobs == 25, s"fit ran $fitJobs jobs")
+    val scoreJobs = jobsOf(QualityModel.scoreWith(d, "doc_id", "text", m).collect())
+    assert(scoreJobs == 3, s"scoreWith ran $scoreJobs jobs")
+  }
+
   test("training is deterministic and the model beats the majority baseline") {
     val d = docs
     val w1 = QualityModel.train(d, "doc_id", "text").orderBy("d").collect()
